@@ -435,9 +435,11 @@ def _write_touched_sidecar(seg: str, n_buckets: int,
 def _touched_from_sidecars(segs: list[str],
                            n_buckets: int) -> list[int] | None:
     """Union of the segments' sidecar bucket sets, or None when any
-    segment lacks a sidecar (old producer) or recorded a different
-    bucket count (written before a partition re-layout) -- the caller
-    falls back to the distributed distinct+collect."""
+    segment lacks a well-formed sidecar -- missing or unparsable (old
+    producer), not a dict, no ``touched`` list of in-range int buckets,
+    or a different recorded bucket count (written before a partition
+    re-layout). The sidecar is purely an optimization: on None the
+    caller falls back to the distributed distinct+collect."""
     out: set[int] = set()
     for s in segs:
         try:
@@ -445,11 +447,14 @@ def _touched_from_sidecars(segs: list[str],
                 d = json.load(f)
         except (OSError, ValueError):
             return None
-        if d.get("n_buckets") != n_buckets:
+        touched = d.get("touched") if isinstance(d, dict) else None
+        if (not isinstance(touched, list)
+                or d.get("n_buckets") != n_buckets
+                or not all(type(v) is int and 0 <= v < n_buckets
+                           for v in touched)):
             return None
-        out.update(int(v) for v in d["touched"])
+        out.update(touched)
     return sorted(out)
-
 
 def _reconcile(base: DataFrame, deltas: DataFrame,
                key_cols: list[str], payload: list[str],

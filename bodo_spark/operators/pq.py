@@ -24,6 +24,10 @@ every floating-point term a sequential-fold dot product -- the exact
 shape the DuckDB oracles already reproduce bit-for-bit -- and never
 forms the cancellation-prone three-term difference.
 
+The IVF-PQ index (routing, stored serving, append/compact lifecycle)
+is ivf.py's with the ``PQ`` codec below; the IVF functions here keep
+the PQ-specific names and signatures as thin wrappers.
+
 Reference parity: the reference delegates vector search to a managed
 external index (bodo/pandas/frame.py:721 S3 Vectors); here the engine
 provides the index structure itself, like ivf_topk and the IVF
@@ -32,10 +36,12 @@ centroid trainer (operators/similarity.py).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
+from . import ivf
+from .ivf import Codec, _topk_by_adist
 from .similarity import _ensure_scan_width, _round_half_up, dot
 
 __all__ = ["lowest_id_pq_codebooks", "train_pq_codebooks", "pq_encode",
@@ -131,6 +137,59 @@ def _codebook_frame(spark, cbs: list) -> DataFrame:
             .withColumn("_cc", dot(F.col("_cw"), F.col("_cw"))))
 
 
+def _books(codebooks: list):
+    """numpy codebooks ``CW[j]`` (k x d) and their squared norms
+    ``CC[j]`` -- the driver- and worker-side form of _codebook_frame."""
+    import numpy as np
+    CW = [np.array(b, dtype=np.float64) for b in codebooks]
+    return CW, [(c * c).sum(axis=1) for c in CW]
+
+
+def _blas_encoder(codebooks: list):
+    """The blas PQ encode kernel: ``codes_of(X)`` maps an (n x dim)
+    float64 batch to its (n x m) int32 nearest-codeword ids -- one
+    (n x k) gemm per subspace on the round-half-up 9 dp two-dot
+    distance, first-min ties (code-identical to pq_encode's 'expr'
+    path by construction)."""
+    import numpy as np
+    CW, CC = _books(codebooks)
+    m, d = len(CW), CW[0].shape[1]
+
+    def codes_of(X):
+        codes = np.empty((len(X), m), dtype=np.int32)
+        for j in range(m):
+            S = X[:, j * d:(j + 1) * d]
+            dist = _round_half_up(CC[j][None, :] - 2.0 * (S @ CW[j].T), 9)
+            codes[:, j] = dist.argmin(axis=1)  # first-min tie
+        return codes
+    return codes_of
+
+
+def _blas_encode(rows: DataFrame, codebooks: list, *, id_col: str,
+                 vec_col: str, out_col: str = "code",
+                 cell_col: str | None = None) -> DataFrame:
+    """``(id_col[, cell], out_col)`` from ``(id_col[, cell_col],
+    vec_col)`` rows: the blas encode kernel per Arrow batch
+    (mapInPandas -- no join, no shuffle), passing the cell through."""
+    import numpy as np
+    import pandas as pd
+    codes_of = _blas_encoder(codebooks)
+    cells = [] if cell_col is None else [cell_col]
+
+    def enc(it):
+        for pdf in it:
+            out = {id_col: pdf[id_col]}
+            if cell_col is not None:
+                out["cell"] = pdf[cell_col]
+            out[out_col] = list(map(list, codes_of(
+                np.array(pdf[vec_col].tolist(), dtype=np.float64))))
+            yield pd.DataFrame(out)
+
+    cell = "cell long, " if cells else ""
+    return rows.select(id_col, *cells, vec_col).mapInPandas(
+        enc, f"{id_col} long, {cell}{out_col} array<int>")
+
+
 def pq_encode(vectors: DataFrame, codebooks: list, *,
               id_col: str = "vec_id", vec_col: str = "embedding",
               out_col: str = "code",
@@ -156,26 +215,9 @@ def pq_encode(vectors: DataFrame, codebooks: list, *,
     if scorer == "auto":
         scorer = "blas"
     if scorer == "blas":
-        import numpy as np
-        import pandas as pd
-
-        CW = [np.array(b, dtype=np.float64) for b in codebooks]
-        CC = [(c * c).sum(axis=1) for c in CW]
-
-        def enc(it):
-            for pdf in it:
-                X = np.array(pdf[vec_col].tolist(), dtype=np.float64)
-                codes = np.empty((len(pdf), m), dtype=np.int32)
-                for j in range(m):
-                    S = X[:, j * d:(j + 1) * d]
-                    dist = _round_half_up(
-                        CC[j][None, :] - 2.0 * (S @ CW[j].T), 9)
-                    codes[:, j] = dist.argmin(axis=1)  # first-min tie
-                yield pd.DataFrame({id_col: pdf[id_col],
-                                    out_col: list(map(list, codes))})
-
-        return _ensure_scan_width(vectors).select(id_col, vec_col) \
-            .mapInPandas(enc, f"{id_col} long, {out_col} array<int>")
+        return _blas_encode(
+            _ensure_scan_width(vectors).select(id_col, vec_col), codebooks,
+            id_col=id_col, vec_col=vec_col, out_col=out_col)
 
     cb = _codebook_frame(vectors.sparkSession, codebooks)
     sub = F.slice(F.col(vec_col), F.col("_j") * d + 1, d)
@@ -228,6 +270,16 @@ def _query_luts(queries: DataFrame, codebooks: list, *,
     return flat.select(q_id_col, lut.alias("_lut"))
 
 
+def _np_luts(books: tuple, qv) -> list:
+    """One query's m ADC lookup rows from ``_books`` output: entry
+    (j, c) is the round-half-up 9 dp ``cc - 2 * dot(q_j, cw)`` (numpy
+    gemv)."""
+    CW, CC = books
+    d = CW[0].shape[1]
+    return [_round_half_up(CC[j] - 2.0 * (CW[j] @ qv[j * d:(j + 1) * d]), 9)
+            for j in range(len(CW))]
+
+
 def _driver_luts(spark, qrows: list, codebooks: list, *,
                  q_id_col: str = "q_id",
                  q_vec_col: str = "q_vec") -> DataFrame:
@@ -242,18 +294,10 @@ def _driver_luts(spark, qrows: list, codebooks: list, *,
     FAST-MODE ONLY (pq_topk keeps the Spark LUTs under the exact gate,
     the retrieval-tier _sum6 policy)."""
     import numpy as np
-
-    m = len(codebooks)
-    d = len(codebooks[0][0])
-    CW = [np.array(codebooks[j], dtype=np.float64) for j in range(m)]
-    CC = [(c * c).sum(axis=1) for c in CW]
-    data = []
-    for r in qrows:
-        qv = np.array(list(r[q_vec_col]), dtype=np.float64)
-        lut = [_round_half_up(
-            CC[j] - 2.0 * (CW[j] @ qv[j * d:(j + 1) * d]), 9).tolist()
-            for j in range(m)]
-        data.append((r[q_id_col], lut))
+    books = _books(codebooks)
+    data = [(r[q_id_col], [lut.tolist() for lut in _np_luts(
+        books, np.array(list(r[q_vec_col]), dtype=np.float64))])
+        for r in qrows]
     from pyspark.sql.types import (ArrayType, DoubleType, StructField,
                                    StructType)
     schema = StructType([
@@ -272,6 +316,26 @@ def _py_type(v):
     if isinstance(v, float):
         return DoubleType()
     return StringType()
+
+
+def adc_score(exact: bool, code_col: str = "code") -> Column:
+    """The ADC distance of a code row against its query's ``_lut``: the
+    m looked-up LUT entries summed, rounded to 6 dp. ``exact`` folds in
+    decimal(28,9) (the queries/_util.py decimal-sum policy: the terms
+    are exact 9 dp decimals, so the sum is order-independent and
+    bit-identical to the oracle's SUM(DECIMAL)); otherwise a plain
+    double fold -- the fold order is fixed (sequential over m), only
+    the representation differs, and fast mode trades the cross-engine
+    bit guarantee for m plain adds per row."""
+    looked = F.zip_with(F.col(code_col), F.col("_lut"),
+                        lambda c, row: F.element_at(row, c + 1))
+    if exact:
+        return F.round(F.aggregate(
+            looked, F.lit(0).cast("decimal(28,9)"),
+            lambda acc, x: (acc + x.cast("decimal(28,9)"))
+            .cast("decimal(28,9)")).cast("double"), 6)
+    return F.round(F.aggregate(looked, F.lit(0.0),
+                               lambda acc, x: acc + x), 6)
 
 
 def pq_topk(codes: DataFrame, queries: DataFrame, codebooks: list, *,
@@ -333,34 +397,12 @@ def pq_topk(codes: DataFrame, queries: DataFrame, codebooks: list, *,
     else:
         luts_df = _query_luts(queries, codebooks, q_id_col=q_id_col,
                               q_vec_col=q_vec_col)
-    if exact_mode():
-        # decimal-sum policy (queries/_util.py): the m looked-up terms
-        # are exact 9dp decimals, so a decimal fold is order-independent
-        # and bit-identical to the oracle's SUM(DECIMAL) -- a double
-        # fold could straddle a 6dp rounding boundary under reordering
-        score = F.round(F.aggregate(
-            F.zip_with(F.col(code_col), F.col("_lut"),
-                       lambda c, row: F.element_at(row, c + 1)),
-            F.lit(0).cast("decimal(28,9)"),
-            lambda acc, x: (acc + x.cast("decimal(28,9)"))
-            .cast("decimal(28,9)")).cast("double"), 6)
-    else:
-        # fast mode: plain double fold -- the fold order is fixed
-        # (sequential over m entries), only the decimal-vs-double
-        # representation differs, and bench/serving mode trades the
-        # cross-engine bit guarantee for m plain adds per row
-        score = F.round(F.aggregate(
-            F.zip_with(F.col(code_col), F.col("_lut"),
-                       lambda c, row: F.element_at(row, c + 1)),
-            F.lit(0.0), lambda acc, x: acc + x), 6)
     scored = (codes.crossJoin(F.broadcast(luts_df))
-              .select(q_id_col, id_col, score.alias("adist")))
-    w = W.partitionBy(q_id_col).orderBy("adist", id_col)
+              .select(q_id_col, id_col,
+                      adc_score(exact_mode(), code_col).alias("adist")))
     if refine is None:
-        return (scored.withColumn("rn", F.row_number().over(w))
-                .where(F.col("rn") <= k)
-                .select(q_id_col, id_col, "adist",
-                        F.col("rn").cast("bigint").alias("rn")))
+        return _topk_by_adist(scored, k, q_id_col, id_col)
+    w = W.partitionBy(q_id_col).orderBy("adist", id_col)
     short = shortlist or 4 * k
     cand = (scored.withColumn("rn", F.row_number().over(w))
             .where(F.col("rn") <= short).drop("rn", "adist"))
@@ -389,10 +431,7 @@ def pq_topk(codes: DataFrame, queries: DataFrame, codebooks: list, *,
     rescored = (cand.join(raw, id_col)
                 .join(F.broadcast(qv), F.col(q_id_col) == F.col("_qid"))
                 .select(q_id_col, id_col, exact.alias("adist")))
-    return (rescored.withColumn("rn", F.row_number().over(w))
-            .where(F.col("rn") <= k)
-            .select(q_id_col, id_col, "adist",
-                    F.col("rn").cast("bigint").alias("rn")))
+    return _topk_by_adist(rescored, k, q_id_col, id_col)
 
 
 def pq_search(vectors: DataFrame, codebooks: list, queries: DataFrame, *,
@@ -436,15 +475,12 @@ def _pq_search_fused(vectors: DataFrame, codebooks: list, qrows: list,
     import pandas as pd
 
     m = len(codebooks)
-    d = len(codebooks[0][0])
-    CW = [np.array(codebooks[j], dtype=np.float64) for j in range(m)]
-    CC = [(c * c).sum(axis=1) for c in CW]
+    books = _books(codebooks)
+    codes_of = _blas_encoder(codebooks)
     q_ids = [r[q_id_col] for r in qrows]
-    QL = np.stack([np.stack([
-        _round_half_up(CC[j] - 2.0 * (
-            CW[j] @ np.array(list(r[q_vec_col]),
-                             dtype=np.float64)[j * d:(j + 1) * d]), 9)
-        for j in range(m)]) for r in qrows])
+    QL = np.stack([np.stack(_np_luts(
+        books, np.array(list(r[q_vec_col]), dtype=np.float64)))
+        for r in qrows])
 
     id_typ = vectors.schema[id_col].dataType.simpleString()
     q_typ = ("bigint" if isinstance(q_ids[0], int) else
@@ -454,13 +490,8 @@ def _pq_search_fused(vectors: DataFrame, codebooks: list, qrows: list,
         for pdf in it:
             if not len(pdf):
                 continue
-            X = np.array(pdf[vec_col].tolist(), dtype=np.float64)
-            codes = np.empty((len(pdf), m), dtype=np.int64)
-            for j in range(m):
-                S = X[:, j * d:(j + 1) * d]
-                dist = _round_half_up(
-                    CC[j][None, :] - 2.0 * (S @ CW[j].T), 9)
-                codes[:, j] = dist.argmin(axis=1)
+            codes = codes_of(np.array(pdf[vec_col].tolist(),
+                                      dtype=np.float64))
             for qi, qid in enumerate(q_ids):
                 adist = np.zeros(len(pdf))
                 for j in range(m):
@@ -474,11 +505,58 @@ def _pq_search_fused(vectors: DataFrame, codebooks: list, qrows: list,
               .mapInPandas(enc_score,
                            f"{q_id_col} {q_typ}, {id_col} {id_typ}, "
                            "adist double"))
-    w = W.partitionBy(q_id_col).orderBy("adist", id_col)
-    return (scored.withColumn("rn", F.row_number().over(w))
-            .where(F.col("rn") <= k)
-            .select(q_id_col, id_col, "adist",
-                    F.col("rn").cast("bigint").alias("rn")))
+    return _topk_by_adist(scored, k, q_id_col, id_col)
+
+
+class PQ(Codec):
+    """The IVF codec for PQ codes: m codeword ids per vector under
+    ``codebooks`` (cbs[j][c] = list[float] of length d/m), scored by ADC
+    against per-query Spark LUTs in the decimal fold (value-identical
+    in both modes). No row prep: the score reads the code directly."""
+
+    name = "pq"
+    meta_ddl = "codebooks array<array<array<double>>>"
+
+    def __init__(self, codebooks: list):
+        self.codebooks = codebooks
+
+    @classmethod
+    def train(cls, vectors: DataFrame, *, m: int = 4, k: int = 16,
+              trainer: str = "lowest_id", sample_size: int = 4096,
+              iters: int = 10, seed: int = 0, id_col: str = "vec_id",
+              vec_col: str = "embedding") -> PQ:
+        """``trainer='lowest_id'``: the deterministic oracle-derivable
+        codebooks; ``'kmeans'``: train_pq_codebooks."""
+        if trainer == "lowest_id":
+            return cls(lowest_id_pq_codebooks(vectors, m=m, k=k,
+                                              id_col=id_col, vec_col=vec_col))
+        if trainer == "kmeans":
+            return cls(train_pq_codebooks(vectors, m=m, k=k,
+                                          sample_size=sample_size,
+                                          iters=iters, seed=seed,
+                                          vec_col=vec_col))
+        raise ValueError(f"unknown trainer {trainer!r}")
+
+    @classmethod
+    def from_meta(cls, meta: dict) -> PQ:
+        return cls([[list(cw) for cw in book] for book in meta["codebooks"]])
+
+    def meta_values(self) -> tuple:
+        return ([[[float(x) for x in cw] for cw in book]
+                 for book in self.codebooks],)
+
+    def encode_assigned(self, assigned: DataFrame, *, id_col: str,
+                        vec_col: str, cell_col: str) -> DataFrame:
+        return _blas_encode(assigned, self.codebooks, id_col=id_col,
+                            vec_col=vec_col, cell_col=cell_col)
+
+    def query_side(self, queries: DataFrame, q_id_col: str,
+                   q_vec_col: str) -> DataFrame:
+        return _query_luts(queries, self.codebooks, q_id_col=q_id_col,
+                           q_vec_col=q_vec_col)
+
+    def score(self) -> Column:
+        return adc_score(True)
 
 
 def ivf_pq_index(vectors: DataFrame, codebooks: list, *,
@@ -490,10 +568,7 @@ def ivf_pq_index(vectors: DataFrame, codebooks: list, *,
     """The combined IVF-PQ search artifact: ``(id, cell, code)`` -- the
     coarse cell route plus the m-int PQ code, i.e. the classic
     FAISS-style IVF-PQ inverted file as a plain DataFrame (write it to
-    parquet once; searches never touch the raw vectors). Built in one
-    composition: the IVF centroid table assigns cells (broadcast cross
-    join + map-side max_by), pq_encode produces codes, joined on the
-    row id.
+    parquet once; searches never touch the raw vectors).
 
     ``seed_vectors``: the frame whose lowest-id rows seed the
     deterministic centroid table (default: ``vectors`` itself). An
@@ -502,120 +577,20 @@ def ivf_pq_index(vectors: DataFrame, codebooks: list, *,
     would route the same vector to different cells across batches --
     the index-lifecycle invariant pq_append relies on.
 
-    ONE pass over the corpus for the default blas scorer (r14): the
-    encode gemm runs over the SAME rows the cell assignment produces
-    -- the former ``codes.join(cells, id)`` re-associated two
-    projections of the same rows through a second scan plus an id
-    exchange. Assignment math is UNCHANGED per branch (gemm UDF
-    semantics for explicit ``centroids`` -- list-position cells;
-    assign_nearest_cell's expr max_by for the seed path -- lowest-id
-    cells), so row values are identical. The retained 'expr' scorer
-    keeps the join: it is the zero-Python twin."""
-    from .similarity import _centroid_table, assign_nearest_cell
-
-    if scorer == "auto":
-        scorer = "blas"
-    if scorer != "blas":
-        if centroids is not None:
-            from .similarity import cell_assigner_udf
-            cells = (_ensure_scan_width(vectors).select(id_col, vec_col)
-                     .withColumn("_cell",
-                                 cell_assigner_udf(centroids, coarse_dim)(
-                                     F.col(vec_col)))
-                     .select(id_col, "_cell"))
-        else:
-            cents = _centroid_table(
-                seed_vectors if seed_vectors is not None else vectors,
-                None, n_cells, coarse_dim, id_col, vec_col)
-            cells = assign_nearest_cell(
-                _ensure_scan_width(vectors).select(id_col, vec_col),
-                cents, vec_col=vec_col, key_col=id_col,
-                coarse_dim=coarse_dim).select(id_col, "_cell")
-        codes = pq_encode(vectors, codebooks, id_col=id_col,
-                          vec_col=vec_col, scorer=scorer)
-        return (codes.join(cells, id_col)
-                .select(id_col, F.col("_cell").alias("cell"), "code"))
-    if centroids is not None:
-        # fused gemm pass: assignment (cell_assigner_udf math -- same
-        # normalization, round-half-up 9dp, first-argmax tie, cells =
-        # list POSITIONS) + encode in one mapInPandas, zero shuffles
-        import numpy as np
-        import pandas as pd
-
-        C = np.array([list(c)[:coarse_dim] for c in centroids],
-                     dtype=np.float64)
-        Cn = C / np.maximum(np.linalg.norm(C, axis=1, keepdims=True),
-                            1e-300)
-        m = len(codebooks)
-        d = len(codebooks[0][0])
-        CW = [np.array(b, dtype=np.float64) for b in codebooks]
-        CC = [(c * c).sum(axis=1) for c in CW]
-
-        def enc_cells(it):
-            for pdf in it:
-                X = np.array(pdf[vec_col].tolist(), dtype=np.float64)
-                T = X[:, :coarse_dim]
-                nrm = np.maximum(
-                    np.linalg.norm(T, axis=1, keepdims=True), 1e-300)
-                sim = _round_half_up((T / nrm) @ Cn.T, 9)
-                cell = np.argmax(sim, axis=1).astype("int64")
-                codes = np.empty((len(pdf), m), dtype=np.int32)
-                for j in range(m):
-                    S = X[:, j * d:(j + 1) * d]
-                    dist = _round_half_up(
-                        CC[j][None, :] - 2.0 * (S @ CW[j].T), 9)
-                    codes[:, j] = dist.argmin(axis=1)
-                yield pd.DataFrame({id_col: pdf[id_col], "cell": cell,
-                                    "code": list(map(list, codes))})
-
-        return (_ensure_scan_width(vectors).select(id_col, vec_col)
-                .mapInPandas(enc_cells,
-                             f"{id_col} long, cell long, "
-                             "code array<int>"))
-    # seed path: expr assignment carries the vector through its max_by
-    # struct; the encode gemm runs over the assigned rows -- no second
-    # scan, no id join
-    cents = _centroid_table(
-        seed_vectors if seed_vectors is not None else vectors,
-        None, n_cells, coarse_dim, id_col, vec_col)
-    assigned = assign_nearest_cell(
-        _ensure_scan_width(vectors).select(id_col, vec_col), cents,
-        vec_col=vec_col, key_col=id_col, coarse_dim=coarse_dim)
-    return _pq_encode_assigned(assigned, codebooks, id_col=id_col,
-                               vec_col=vec_col, cell_col="_cell")
-
-
-def _pq_encode_assigned(assigned: DataFrame, codebooks: list, *,
-                        id_col: str, vec_col: str,
-                        cell_col: str) -> DataFrame:
-    """Encode rows that ALREADY carry a cell assignment: one
-    mapInPandas gemm pass (pq_encode's blas kernel verbatim) passing
-    the cell through -- the fused (id, cell, code) producer for the
-    seed-path index build and the stored append."""
-    import numpy as np
-    import pandas as pd
-
-    m = len(codebooks)
-    d = len(codebooks[0][0])
-    CW = [np.array(b, dtype=np.float64) for b in codebooks]
-    CC = [(c * c).sum(axis=1) for c in CW]
-
-    def enc(it):
-        for pdf in it:
-            X = np.array(pdf[vec_col].tolist(), dtype=np.float64)
-            codes = np.empty((len(pdf), m), dtype=np.int32)
-            for j in range(m):
-                S = X[:, j * d:(j + 1) * d]
-                dist = _round_half_up(
-                    CC[j][None, :] - 2.0 * (S @ CW[j].T), 9)
-                codes[:, j] = dist.argmin(axis=1)  # first-min tie
-            yield pd.DataFrame({id_col: pdf[id_col],
-                                "cell": pdf[cell_col],
-                                "code": list(map(list, codes))})
-
-    return (assigned.select(id_col, cell_col, vec_col)
-            .mapInPandas(enc, f"{id_col} long, cell long, "
-                              "code array<int>"))
+    The default blas scorer is ONE pass over the corpus
+    (ivf.build_index): the encode gemm runs over the SAME rows the cell
+    assignment produces. The 'expr' scorer keeps an id join of
+    pq_encode's zero-Python codes onto the routed cells."""
+    routing = dict(n_cells=n_cells, centroids=centroids, id_col=id_col,
+                   vec_col=vec_col, coarse_dim=coarse_dim,
+                   seed_vectors=seed_vectors)
+    if scorer in ("auto", "blas"):
+        return ivf.build_index(vectors, PQ(codebooks), **routing)
+    cells = ivf.route(vectors, **routing).select(id_col, "_cell")
+    codes = pq_encode(vectors, codebooks, id_col=id_col, vec_col=vec_col,
+                      scorer=scorer)
+    return (codes.join(cells, id_col)
+            .select(id_col, F.col("_cell").alias("cell"), "code"))
 
 
 # --------------------------------------------------------------------------
@@ -730,15 +705,9 @@ def pq_compact(vectors: DataFrame, *, m: int = 4, k: int = 16,
     as in ivf_pq_index -- a caller that serves under a stored centroid
     probe table (pq_stored_compact) must rebuild under the same source,
     or queries would probe cells the corpus was not routed by."""
-    if trainer == "lowest_id":
-        cbs = lowest_id_pq_codebooks(vectors, m=m, k=k, id_col=id_col,
-                                     vec_col=vec_col)
-    elif trainer == "kmeans":
-        cbs = train_pq_codebooks(vectors, m=m, k=k,
-                                 sample_size=sample_size, iters=iters,
-                                 seed=seed, vec_col=vec_col)
-    else:
-        raise ValueError(f"unknown trainer {trainer!r}")
+    cbs = PQ.train(vectors, m=m, k=k, trainer=trainer,
+                   sample_size=sample_size, iters=iters, seed=seed,
+                   id_col=id_col, vec_col=vec_col).codebooks
     idx = ivf_pq_index(vectors, cbs, n_cells=n_cells, id_col=id_col,
                        vec_col=vec_col, coarse_dim=coarse_dim,
                        centroids=centroids, seed_vectors=seed_vectors,
@@ -763,60 +732,10 @@ def ivf_pq_topk(index: DataFrame, queries: DataFrame, vectors: DataFrame,
     used only to derive the deterministic centroid table -- pass
     ``centroids`` and it is not read at all). The only exchange on
     corpus-sized data is the hash join on the cell id."""
-    scored = _ivf_pq_scored(index, queries, vectors, codebooks,
-                            n_probe=n_probe, n_cells=n_cells,
-                            centroids=centroids, id_col=id_col,
-                            vec_col=vec_col, q_id_col=q_id_col,
-                            q_vec_col=q_vec_col, coarse_dim=coarse_dim)
-    return _topk_by_adist(scored, k, q_id_col, id_col)
-
-
-def _topk_by_adist(scored: DataFrame, k: int, q_id_col: str,
-                   id_col: str) -> DataFrame:
-    from pyspark.sql import Window as Wnd
-    wk = Wnd.partitionBy(q_id_col).orderBy("adist", id_col)
-    return (scored.withColumn("rn", F.row_number().over(wk))
-            .where(F.col("rn") <= k)
-            .select(q_id_col, id_col, "adist",
-                    F.col("rn").cast("bigint").alias("rn")))
-
-
-def _ivf_pq_scored(index: DataFrame, queries: DataFrame,
-                   vectors: DataFrame, codebooks: list, *,
-                   n_probe: int, n_cells: int, centroids: list | None,
-                   id_col: str, vec_col: str, q_id_col: str,
-                   q_vec_col: str, coarse_dim: int) -> DataFrame:
-    """One segment's probed ADC scored pass: (q_id, id, adist) for the
-    probed cells' rows under THIS segment's codebooks/centroids -- the
-    shared body of ivf_pq_topk and the multi-segment search."""
-    from pyspark.sql import Window as Wnd
-
-    from .similarity import _centroid_table
-
-    cents = _centroid_table(vectors, centroids, n_cells, coarse_dim,
-                            id_col, vec_col)
-    tv = F.slice(F.col(q_vec_col), 1, coarse_dim)
-    tn = F.sqrt(dot(tv, tv))
-    qscored = (queries.select(q_id_col, q_vec_col)
-               .crossJoin(F.broadcast(cents))
-               .withColumn("_ccos",
-                           F.round(dot(tv, F.col("_cvec"))
-                                   / (tn * F.col("_cn")), 9)))
-    w = Wnd.partitionBy(q_id_col).orderBy(F.col("_ccos").desc(), "_cid")
-    qprobe = (qscored.withColumn("_crn", F.row_number().over(w))
-              .where(F.col("_crn") <= n_probe)
-              .select(q_id_col, F.col("_cid").alias("cell")))
-    luts = _query_luts(queries, codebooks, q_id_col=q_id_col,
-                       q_vec_col=q_vec_col)
-    cand = (index.join(F.broadcast(qprobe), "cell")
-            .join(F.broadcast(luts), q_id_col))
-    score = F.round(F.aggregate(
-        F.zip_with(F.col("code"), F.col("_lut"),
-                   lambda c, row: F.element_at(row, c + 1)),
-        F.lit(0).cast("decimal(28,9)"),
-        lambda acc, x: (acc + x.cast("decimal(28,9)"))
-        .cast("decimal(28,9)")).cast("double"), 6)
-    return cand.select(q_id_col, id_col, score.alias("adist"))
+    return ivf.search([(index, PQ(codebooks), centroids)], queries, vectors,
+                      k=k, n_probe=n_probe, n_cells=n_cells, id_col=id_col,
+                      vec_col=vec_col, q_id_col=q_id_col,
+                      q_vec_col=q_vec_col, coarse_dim=coarse_dim)
 
 
 def ivf_pq_topk_segments(segments: list, queries: DataFrame,
@@ -842,30 +761,19 @@ def ivf_pq_topk_segments(segments: list, queries: DataFrame,
     in any FAISS-style staged migration), so cross-segment ranking is
     apples-to-apples up to quantization error; with fixed codebooks
     (one segment, or identical codebooks) this degenerates to
-    ivf_pq_topk exactly. Scale: per-segment work is the probed fraction
-    of THAT segment's code rows; the union is a no-shuffle concatenate
-    and the only exchange stays the final top-k window."""
-    if not segments:
-        raise ValueError("segments must be non-empty")
-    scored = None
-    for seg in segments:
-        idx, cbs, *rest = seg
-        cents = rest[0] if rest else None
-        s = _ivf_pq_scored(idx, queries, vectors, cbs,
-                           n_probe=n_probe, n_cells=n_cells,
-                           centroids=cents, id_col=id_col,
-                           vec_col=vec_col, q_id_col=q_id_col,
-                           q_vec_col=q_vec_col, coarse_dim=coarse_dim)
-        scored = s if scored is None else scored.unionByName(s)
-    return _topk_by_adist(scored, k, q_id_col, id_col)
+    ivf_pq_topk exactly."""
+    segs = [(idx, PQ(cbs), rest[0] if rest else None)
+            for idx, cbs, *rest in segments]
+    return ivf.search(segs, queries, vectors, k=k, n_probe=n_probe,
+                      n_cells=n_cells, id_col=id_col, vec_col=vec_col,
+                      q_id_col=q_id_col, q_vec_col=q_vec_col,
+                      coarse_dim=coarse_dim)
 
 
 # --------------------------------------------------------------------------
-# Stored serving (the sq_store_index discipline for the PQ tier): the
-# inverted file persisted hive-partitioned BY CELL, so the query batch's
-# probed-cell set becomes a PartitionFilters IN list on the index scan
-# -- serving I/O bound by the probed cells' directories. Codebooks and
-# the centroid probe table ride along as tiny metadata tables.
+# Stored serving: ivf.py's cell-partitioned store with the codebooks in
+# ``meta/`` -- a query batch's probed-cell set prunes the index scan to
+# those cell directories (asserted in test_plans).
 
 def pq_store_index(index: DataFrame, path: str, codebooks: list, *,
                    n_cells: int = 8, centroids: list | None = None,
@@ -873,71 +781,26 @@ def pq_store_index(index: DataFrame, path: str, codebooks: list, *,
                    coarse_dim: int = 16, id_col: str = "vec_id",
                    vec_col: str = "embedding",
                    mode: str = "errorifexists") -> None:
-    """Persist an IVF-PQ inverted file as the serving artifact:
-    ``index/`` hive-partitioned by cell (repartitioned BY the cell
-    first -- one file per cell directory), ``centroids/`` the
-    (_cid, _cvec, _cn) probe table, ``meta/`` one row pinning the
+    """Persist an IVF-PQ inverted file as the serving artifact
+    (ivf.store): ``index/`` hive-partitioned by cell, ``centroids/``
+    the (_cid, _cvec, _cn) probe table, ``meta/`` one row pinning the
     m x k x d codebooks, coarse_dim and id_col. Pass the SAME centroid
     source as the build so the stored probe table routes queries
-    exactly like the build routed the corpus.
-
-    The centroid probe table and the codebook meta one-rower are
-    bounded driver values, written driver-locally
-    (rowframe.write_artifact_rows -- no Spark job per artifact); only
-    the index write is a job."""
-    from .similarity import _centroid_table
-    if seed_vectors is None and centroids is None:
-        raise ValueError("pass centroids or seed_vectors (the stored "
-                         "probe table must match the build's routing)")
-    from ..rowframe import write_artifact_rows
-    cents = _centroid_table(
-        seed_vectors if seed_vectors is not None else index,
-        centroids, n_cells, coarse_dim, id_col, vec_col)
-    (index.repartition(int(n_cells), F.col("cell"))
-     .write.mode(mode).partitionBy("cell").parquet(f"{path}/index"))
-    write_artifact_rows(
-        f"{path}/centroids", [tuple(r) for r in cents.collect()],
-        cents.schema, mode=mode)
-    cbs = [[[float(x) for x in cw] for cw in book] for book in codebooks]
-    write_artifact_rows(
-        f"{path}/meta", [(cbs, int(coarse_dim), id_col)],
-        "codebooks array<array<array<double>>>, coarse_dim int, "
-        "id_col string", mode=mode)
+    exactly like the build routed the corpus."""
+    ivf.store(index, path, PQ(codebooks), n_cells=n_cells,
+              centroids=centroids, seed_vectors=seed_vectors,
+              coarse_dim=coarse_dim, id_col=id_col, vec_col=vec_col,
+              mode=mode)
 
 
 def pq_stored_append(new_vectors: DataFrame, path: str, *,
                      vec_col: str = "embedding") -> None:
     """Append a batch into the STORED cell-partitioned IVF-PQ index
-    under the stored model artifacts (the sq_stored_append discipline
-    for the codebook family): encode + route ONLY the batch with the
-    codebooks and centroid probe table read back from the store, then
-    dynamic-partition-append into the touched cell directories --
-    O(batch), existing index files never opened. Single-writer: holds
-    the store's publish lock so an append cannot interleave with a
-    compaction swap (it would land in the superseded tree and
-    vanish)."""
-    from ..rowframe import artifact_df, read_artifact_rows
-    from .merge import publish_lock
-    from .similarity import _ensure_scan_width, assign_nearest_cell
-    spark = new_vectors.sparkSession
-    # meta/centroids are bounded store artifacts -- driver-local pyarrow
-    # read, no Spark job per append (see rowframe.read_artifact_rows)
-    m = read_artifact_rows(f"{path}/meta")[0][0]
-    codebooks = [[list(cw) for cw in book] for book in m["codebooks"]]
-    coarse_dim, id_col = int(m["coarse_dim"]), m["id_col"]
-    cents = artifact_df(spark, f"{path}/centroids")
-    # one pass: the encode gemm runs over the rows the assignment
-    # carries through (the ivf_pq_index r14 fusion -- no second batch
-    # scan, no id join)
-    assigned = assign_nearest_cell(
-        _ensure_scan_width(new_vectors).select(id_col, vec_col), cents,
-        vec_col=vec_col, key_col=id_col, coarse_dim=coarse_dim)
-    batch = _pq_encode_assigned(assigned, codebooks, id_col=id_col,
-                                vec_col=vec_col, cell_col="_cell")
-    with publish_lock(path.rstrip("/"), owner="pq_stored_append"):
-        (batch.repartition(F.col("cell"))
-         .write.mode("append").partitionBy("cell")
-         .parquet(f"{path}/index"))
+    under the stored codebooks and centroid probe table
+    (ivf.stored_append): O(batch), existing index files never opened.
+    Single-writer: holds the store's publish lock so an append cannot
+    interleave with a compaction swap."""
+    ivf.stored_append(new_vectors, path, vec_col=vec_col)
 
 
 def pq_stored_compact(vectors: DataFrame, path: str, *, m: int = 4,
@@ -949,106 +812,33 @@ def pq_stored_compact(vectors: DataFrame, path: str, *, m: int = 4,
                       seed: int = 0, centroids: list | None = None,
                       seed_vectors: DataFrame | None = None,
                       retain_history: bool = False) -> int | None:
-    """Re-train + re-encode compaction of a STORED IVF-PQ index
-    (sq_stored_compact for the codebook family): fresh codebooks from
-    the CURRENT raw corpus (pq_compact), rebuilt inverted file, and
-    the whole store -- index, centroids, codebooks -- replaced in one
-    guarded swap (ADC LUTs are codebook-bound: a reader must see old
-    or new store, never a mix). ``centroids``/``seed_vectors`` pin the
-    routing source; they are threaded into BOTH the rebuild and the
-    stored probe table (a probe table derived from a different source
-    than the rebuild's routing would silently probe the wrong cells --
-    r13 ADVICE). ``retain_history``: keep the superseded store as a
-    numbered generation under ``<path>/archive`` for rollback
-    (store_swap.restore_store_generation); returns the generation
-    number (else None)."""
-    import shutil
-    import uuid
-
-    from .store_swap import guarded_store_swap
-    idx, cbs = pq_compact(vectors, m=m, k=k, n_cells=n_cells,
-                          id_col=id_col, vec_col=vec_col,
-                          coarse_dim=coarse_dim, trainer=trainer,
-                          sample_size=sample_size, iters=iters,
-                          seed=seed, centroids=centroids,
-                          seed_vectors=seed_vectors)
-    norm = path.rstrip("/")
-    staging = f"{norm}.__pqc_staging_{uuid.uuid4().hex[:8]}"
-    try:
-        pq_store_index(idx, staging, cbs, n_cells=n_cells,
-                       coarse_dim=coarse_dim, id_col=id_col,
-                       vec_col=vec_col, centroids=centroids,
-                       seed_vectors=(seed_vectors
-                                     if seed_vectors is not None
-                                     else (None if centroids is not None
-                                           else vectors)))
-    except Exception:
-        shutil.rmtree(staging, ignore_errors=True)
-        raise
-    return guarded_store_swap(norm, staging,
-                              retain_history=retain_history)
+    """Re-train + re-encode compaction of a STORED IVF-PQ index: fresh
+    codebooks from the CURRENT raw corpus (PQ.train, as pq_compact), a
+    rebuilt inverted file, and the whole store -- index, centroids,
+    codebooks -- replaced in one guarded swap (ivf.stored_compact; ADC
+    LUTs are codebook-bound: a reader sees old or new store, never a
+    mix). ``centroids``/``seed_vectors`` pin the routing source of BOTH
+    the rebuild and the stored probe table. ``retain_history``: keep
+    the superseded store as a numbered generation under
+    ``<path>/archive`` for rollback (store_swap.restore_store_generation);
+    returns the generation number (else None)."""
+    codec = PQ.train(vectors, m=m, k=k, trainer=trainer,
+                     sample_size=sample_size, iters=iters, seed=seed,
+                     id_col=id_col, vec_col=vec_col)
+    return ivf.stored_compact(
+        vectors, path, codec, n_cells=n_cells, centroids=centroids,
+        coarse_dim=coarse_dim, id_col=id_col, vec_col=vec_col,
+        seed_vectors=seed_vectors, retain_history=retain_history)
 
 
 def pq_stored_topk(spark, path: str, queries: DataFrame, *,
                    k: int = 5, n_probe: int = 2,
                    q_id_col: str = "q_id",
                    q_vec_col: str = "q_vec") -> DataFrame:
-    """Serving-path IVF-PQ search over a stored index: queries probe
-    their ``n_probe`` nearest cells against the stored centroid table,
-    the probed-cell set (bounded driver list) prunes the index scan to
-    those partition directories (static PartitionFilters), and the
-    ranking is the shared broadcast-LUT ADC pass -- value-identical to
-    ivf_pq_topk over the in-memory index (the ann_pq_stored_prune gate
-    shares ann_ivf_pq_topk's oracle)."""
-    from ..rowframe import artifact_df, read_artifact_rows
-    # meta/centroids are bounded store artifacts -- driver-local pyarrow
-    # read, no Spark job per serve (see rowframe.read_artifact_rows)
-    m = read_artifact_rows(f"{path}/meta")[0][0]
-    codebooks = [[list(cw) for cw in book] for book in m["codebooks"]]
-    coarse_dim, id_col = int(m["coarse_dim"]), m["id_col"]
-    cents = artifact_df(spark, f"{path}/centroids")
-    tv = F.slice(F.col(q_vec_col), 1, coarse_dim)
-    tn = F.sqrt(dot(tv, tv))
-    qscored = (queries.select(q_id_col, q_vec_col)
-               .crossJoin(F.broadcast(cents))
-               .withColumn("_ccos",
-                           F.round(dot(tv, F.col("_cvec"))
-                                   / (tn * F.col("_cn")), 9)))
-    w = W.partitionBy(q_id_col).orderBy(F.col("_ccos").desc(), "_cid")
-    qprobe = (qscored.withColumn("_crn", F.row_number().over(w))
-              .where(F.col("_crn") <= n_probe)
-              .select(q_id_col, F.col("_cid").alias("cell")))
-    # consumed twice (cells collect + candidate join); see the
-    # sq_stored_topk note -- bounded serving batches localize with ONE
-    # limit-collect (LocalTableScan consumer, no checkpoint/distinct
-    # jobs), over-budget batches keep the scale-safe distributed form
-    from ..rowframe import localize_if_small
-    qlocal, qrows = localize_if_small(qprobe)
-    if qlocal is not None:
-        qprobe = qlocal
-        cells = sorted({r[1] for r in qrows})
-    else:
-        qprobe = qprobe.localCheckpoint(eager=True)
-        cells = [r[0] for r in
-                 qprobe.select("cell").distinct().collect()]
-    # explicit footer-derived schema: no inference job per serve; the
-    # probed-cell IN list stays a static PartitionFilters prune
-    from pyspark.sql.types import IntegerType
-
-    from ..rowframe import table_schema
-    isch = table_schema(f"{path}/index", {"cell": IntegerType()})
-    ird = spark.read if isch is None else spark.read.schema(isch)
-    pruned = (ird.parquet(f"{path}/index")
-              .where(F.col("cell").isin(cells)))
-    luts = _query_luts(queries, codebooks, q_id_col=q_id_col,
-                       q_vec_col=q_vec_col)
-    cand = (pruned.join(F.broadcast(qprobe), "cell")
-            .join(F.broadcast(luts), q_id_col))
-    score = F.round(F.aggregate(
-        F.zip_with(F.col("code"), F.col("_lut"),
-                   lambda c, row: F.element_at(row, c + 1)),
-        F.lit(0).cast("decimal(28,9)"),
-        lambda acc, x: (acc + x.cast("decimal(28,9)"))
-        .cast("decimal(28,9)")).cast("double"), 6)
-    scored = cand.select(q_id_col, id_col, score.alias("adist"))
-    return _topk_by_adist(scored, k, q_id_col, id_col)
+    """Serving-path IVF-PQ search over a stored index (ivf.stored_topk):
+    the probed-cell set prunes the index scan to those partition
+    directories, and the ranking is the shared broadcast-LUT ADC pass
+    -- value-identical to ivf_pq_topk over the in-memory index (the
+    ann_pq_stored_prune gate shares ann_ivf_pq_topk's oracle)."""
+    return ivf.stored_topk(spark, path, queries, k=k, n_probe=n_probe,
+                           q_id_col=q_id_col, q_vec_col=q_vec_col)

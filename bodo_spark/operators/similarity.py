@@ -234,6 +234,21 @@ def _centroid_table(vectors: DataFrame, centroids: list | None,
                         F.sqrt(dot(F.col("_cvec"), F.col("_cvec")))))
 
 
+def _cell_cosines(df: DataFrame, cents: DataFrame, vec_col: str,
+                  coarse_dim: int) -> DataFrame:
+    """Every row x the broadcast centroid table, with ``_ccos`` the
+    cosine of the row's first ``coarse_dim`` components against the
+    centroid, rounded to 9 dp -- the one routing score every IVF path
+    ranks cells by (rows x n_centroids narrow intermediates; no literal
+    expression trees, which cost seconds of codegen at even 8x64
+    floats)."""
+    tv = F.slice(F.col(vec_col), 1, coarse_dim)
+    tn = F.sqrt(dot(tv, tv))
+    return (df.crossJoin(F.broadcast(cents))
+            .withColumn("_ccos", F.round(dot(tv, F.col("_cvec"))
+                                         / (tn * F.col("_cn")), 9)))
+
+
 def assign_nearest_cell(df: DataFrame, cents: DataFrame, *, vec_col: str,
                         key_col: str, coarse_dim: int = 16,
                         out_col: str = "_cell") -> DataFrame:
@@ -241,19 +256,31 @@ def assign_nearest_cell(df: DataFrame, cents: DataFrame, *, vec_col: str,
     tiny centroid table, max_by reduction keyed on (cosine, -cid) --
     the map-side partial combine collapses the n_centroids candidate
     rows per key BEFORE the exchange, so the shuffle carries one row
-    per input row and no sort happens (same reduction ivf_topk uses on
-    its corpus side). Ties are impossible: _cid is unique."""
-    tv = F.slice(F.col(vec_col), 1, coarse_dim)
-    tn = F.sqrt(dot(tv, tv))
-    scored = (df.crossJoin(F.broadcast(cents))
-              .withColumn("_ccos", F.round(dot(tv, F.col("_cvec"))
-                                           / (tn * F.col("_cn")), 9)))
+    per input row and no sort happens (1/n_centroids the shuffle rows
+    of a window rank; with a widened corpus scan this measured 8.4 ->
+    4.2 s on the assignment-dominated ann_ivf_topk at the 100x probe).
+    Ties are impossible: _cid is unique."""
+    scored = _cell_cosines(df, cents, vec_col, coarse_dim)
     val = F.struct(*[F.col(c) for c in df.columns],
                    F.col("_cid").alias(out_col))
     ordkey = F.struct(F.col("_ccos").alias("c"), (-F.col("_cid")).alias("nc"))
     return (scored.groupBy(key_col)
             .agg(F.max_by(val, ordkey).alias("_m"))
             .select("_m.*"))
+
+
+def probe_cells(df: DataFrame, cents: DataFrame, *, n_probe: int,
+                vec_col: str, key_col: str, coarse_dim: int = 16,
+                out_col: str = "cell") -> DataFrame:
+    """The ``n_probe`` nearest cells per row (the query-side IVF probe):
+    ``df``'s columns plus ``out_col``, one row per probed cell, ranked
+    by (cosine desc, lowest cid) in a window per ``key_col`` -- the
+    n > 1 twin of assign_nearest_cell, for the tiny query side."""
+    w = W.partitionBy(key_col).orderBy(F.col("_ccos").desc(), F.col("_cid"))
+    return (_cell_cosines(df, cents, vec_col, coarse_dim)
+            .withColumn("_crn", F.row_number().over(w))
+            .where(F.col("_crn") <= n_probe)
+            .select(*df.columns, F.col("_cid").alias(out_col)))
 
 
 
@@ -315,30 +342,14 @@ def semantic_dedup(vectors: DataFrame, *, n_cells: int = 8,
         centroids = [list(r[vec_col])[:coarse_dim] for r in rows]
     if scorer == "blas" and centroids is not None:
         # vectorized assignment: the centroid matrix is driver-side
-        # already, so a scalar pandas_udf does one (batch x k) gemm per
+        # already, so the gemm assigner does one (batch x k) gemm per
         # Arrow batch -- NO crossJoin, NO shuffle (the expr path's
         # broadcast-crossJoin max_by materializes n*k rows of
         # interpreted fold-dots; at 200k x 781 cells that assignment --
-        # not pair scoring -- was the probe's bottleneck). Rounding and
-        # tie rule mirror assign_nearest_cell: round(cos, 9), ties to
-        # the lowest cid (np.argmax takes the first max).
-        import numpy as np
-
-        C = np.array([list(c)[:coarse_dim] for c in centroids],
-                     dtype=np.float64)
-        Cn = C / np.maximum(np.linalg.norm(C, axis=1, keepdims=True),
-                            1e-300)
-
-        @F.pandas_udf("long")
-        def _cell_of(vs: pd.Series) -> pd.Series:
-            X = np.array(vs.tolist(), dtype=np.float64)[:, :coarse_dim]
-            nrm = np.maximum(np.linalg.norm(X, axis=1, keepdims=True),
-                             1e-300)
-            sim = _round_half_up((X / nrm) @ Cn.T, 9)
-            return pd.Series(np.argmax(sim, axis=1).astype("int64"))
-
+        # not pair scoring -- was the probe's bottleneck)
         assigned = (_ensure_scan_width(vectors)
-                    .withColumn("_cell", _cell_of(F.col(vec_col))))
+                    .withColumn("_cell", cell_assigner_udf(
+                        centroids, coarse_dim)(F.col(vec_col))))
     else:
         cents = _centroid_table(vectors, centroids, n_cells, coarse_dim,
                                 id_col, vec_col)
@@ -506,49 +517,15 @@ def ivf_topk(
     coarse_dim = 16
     cents = _centroid_table(vectors, centroids, n_centroids, coarse_dim,
                             id_col, vec_col)
-
-    def assign(df: DataFrame, vec: str, norm: str, key: str,
-               n: int) -> DataFrame:
-        """Nearest-n centroid ids per row: broadcast cross join against
-        the tiny centroid table -- rows x n_centroids narrow
-        intermediates, no giant literal expression trees (which cost
-        seconds of codegen at even 8x64 floats), and the same plan
-        shape holds at thousands of centroids.
-
-        n=1 (the corpus-side hot path) reduces with max_by, a hash
-        aggregate whose MAP-SIDE partial combine collapses the
-        n_centroids candidate rows per key before the exchange --
-        1/n_centroids the shuffle rows of the window-rank formulation
-        and no sort (this plus widening the corpus scan measured
-        8.4 -> 4.2 s on the assignment-dominated ann_ivf_topk at the
-        100x probe). n>1 (query-side n_probe) keeps the window rank.
-        Ties are impossible: _cid is unique."""
-        tv = F.slice(F.col(vec), 1, coarse_dim)
-        tn = F.sqrt(dot(tv, tv))
-        scored = (df.crossJoin(F.broadcast(cents))
-                  .withColumn("_ccos",
-                              F.round(dot(tv, F.col("_cvec"))
-                                      / (tn * F.col("_cn")), 9)))
-        if n == 1:
-            val = F.struct(*[F.col(c) for c in df.columns],
-                           F.col("_cid").alias("_cell"))
-            ordkey = F.struct(F.col("_ccos").alias("c"),
-                              (-F.col("_cid")).alias("nc"))
-            return (scored.groupBy(key)
-                    .agg(F.max_by(val, ordkey).alias("_m"))
-                    .select("_m.*"))
-        w = W.partitionBy(key).orderBy(F.col("_ccos").desc(), F.col("_cid"))
-        return (scored.withColumn("_crn", F.row_number().over(w))
-                .where(F.col("_crn") <= n)
-                .withColumnRenamed("_cid", "_cell")
-                .drop("_cvec", "_cn", "_ccos", "_crn"))
-
-    v = (_ensure_scan_width(vectors)
-         .withColumn("_vn", F.sqrt(dot(F.col(vec_col), F.col(vec_col)))))
-    v = assign(v, vec_col, "_vn", id_col, 1)
-    q = queries.withColumn(
-        "_qn", F.sqrt(dot(F.col(q_vec_col), F.col(q_vec_col))))
-    q = assign(q, q_vec_col, "_qn", q_id_col, n_probe) \
+    v = assign_nearest_cell(
+        _ensure_scan_width(vectors)
+        .withColumn("_vn", F.sqrt(dot(F.col(vec_col), F.col(vec_col)))),
+        cents, vec_col=vec_col, key_col=id_col, coarse_dim=coarse_dim)
+    q = probe_cells(
+        queries.withColumn("_qn",
+                           F.sqrt(dot(F.col(q_vec_col), F.col(q_vec_col)))),
+        cents, n_probe=n_probe, vec_col=q_vec_col, key_col=q_id_col,
+        coarse_dim=coarse_dim, out_col="_cell") \
         .select(q_id_col, q_vec_col, "_qn", "_cell")
     scored = (v.join(F.broadcast(q), "_cell")
               .where(F.col(id_col) != F.col(q_id_col))

@@ -23,6 +23,10 @@ Distance bookkeeping mirrors pq.py: rank by the two-dot form
 round 6 dp, ties to the lowest corpus id) -- every float term a
 sequential-fold dot product the DuckDB oracle reproduces bit-for-bit.
 
+The IVF-SQ8 index (routing, stored serving, append/compact lifecycle)
+is ivf.py's with the ``SQ8`` codec below; the functions here keep the
+SQ-specific names and signatures as thin wrappers.
+
 Reference parity: the reference delegates vector search to a managed
 external index (bodo/pandas/frame.py:721 S3 Vectors); here the engine
 provides the compression tier itself, like pq.py.
@@ -30,10 +34,11 @@ provides the compression tier itself, like pq.py.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
-from pyspark.sql import Window as W
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from . import ivf
+from .ivf import Codec, _topk_by_adist
 from .similarity import dot
 
 __all__ = ["sq_train", "sq_encode", "sq_code_expr", "sq_topk",
@@ -131,24 +136,61 @@ def sq_topk(codes: DataFrame, queries: DataFrame, los: list, his: list, *,
     broadcast(queries), score = one fold expression over the
     reconstructed array, per-query WindowGroupLimit -- the raw corpus
     is never read at search time."""
-    dq = sq_dequantize(code_col, los, his, bits=bits)
+    codec = SQ8(los, his, bits)
     qv = queries.select(F.col(q_id_col).alias("q_id"),
                         F.col(q_vec_col).alias("_qv"))
-    # dot(dq, dq) is query-independent: evaluate it ONCE per corpus row
-    # before the join (the brute_force_topk norm trick) -- at q queries
-    # that saves q-1 redundant d-length folds per row
-    scored = (codes.withColumn("_dq", dq)
-              .withColumn("_dd", dot(F.col("_dq"), F.col("_dq")))
-              .crossJoin(F.broadcast(qv))
+    scored = (codec.prep(codes, code_col).crossJoin(F.broadcast(qv))
               .select(F.col("q_id"), F.col(id_col),
-                      F.round(F.col("_dd")
-                              - 2 * dot(F.col("_dq"), F.col("_qv")), 6)
-                      .alias("adist")))
-    w = W.partitionBy("q_id").orderBy("adist", id_col)
-    return (scored.withColumn("rn", F.row_number().over(w))
-            .where(F.col("rn") <= k)
-            .select("q_id", id_col, "adist",
-                    F.col("rn").cast("bigint").alias("rn")))
+                      codec.score().alias("adist")))
+    return _topk_by_adist(scored, k, "q_id", id_col)
+
+
+class SQ8(Codec):
+    """The IVF codec for SQ codes: per-dimension ``(los, his)`` bounds
+    and ``bits``-bit codes, scored by exact l2 against the dequantized
+    code in the two-dot form ``dot(dq, dq) - 2 * dot(dq, q)``. Row prep
+    is the dequantize plus the query-independent self-dot, so it runs
+    once per index row and only after the cell prune."""
+
+    name = "sq"
+    meta_ddl = "los array<double>, his array<double>, bits int"
+    prep_folds = True
+
+    def __init__(self, los: list, his: list, bits: int = 8):
+        self.los, self.his, self.bits = list(los), list(his), int(bits)
+
+    @classmethod
+    def train(cls, vectors: DataFrame, *, vec_col: str = "embedding",
+              bits: int = 8) -> SQ8:
+        return cls(*sq_train(vectors, vec_col=vec_col), bits)
+
+    @classmethod
+    def from_meta(cls, meta: dict) -> SQ8:
+        return cls(meta["los"], meta["his"], meta["bits"])
+
+    def meta_values(self) -> tuple:
+        return ([float(v) for v in self.los], [float(v) for v in self.his],
+                self.bits)
+
+    def encode_assigned(self, assigned: DataFrame, *, id_col: str,
+                        vec_col: str, cell_col: str) -> DataFrame:
+        code = sq_code_expr(vec_col, self.los, self.his, bits=self.bits)
+        return assigned.select(id_col, F.col(cell_col).alias("cell"),
+                               code.alias("code"))
+
+    def prep(self, rows: DataFrame, code_col: str = "code") -> DataFrame:
+        # dot(dq, dq) is query-independent: evaluate it ONCE per index
+        # row before the query join (the brute_force_topk norm trick)
+        dq = sq_dequantize(code_col, self.los, self.his, bits=self.bits)
+        return (rows.withColumn("_dq", dq)
+                .withColumn("_dd", dot(F.col("_dq"), F.col("_dq"))))
+
+    def query_side(self, queries: DataFrame, q_id_col: str,
+                   q_vec_col: str) -> DataFrame:
+        return queries.select(q_id_col, F.col(q_vec_col).alias("_qv"))
+
+    def score(self) -> Column:
+        return F.round(F.col("_dd") - 2 * dot(F.col("_dq"), F.col("_qv")), 6)
 
 
 # --------------------------------------------------------------------------
@@ -164,38 +206,15 @@ def ivf_sq_index(vectors: DataFrame, los: list, his: list, *,
                  coarse_dim: int = 16,
                  seed_vectors: DataFrame | None = None,
                  bits: int = 8) -> DataFrame:
-    """The IVF-SQ inverted file: ``(id, cell, code)``. Cell routing is
-    the shared IVF machinery (deterministic lowest-id centroid table,
-    or explicit ``centroids`` via the gemm assigner); codes are
-    sq_code_expr's. Same lifecycle contract as ivf_pq_index: pin
-    ``seed_vectors``/``centroids`` across incremental builds so
-    batches route identically.
-
-    ONE pass over the corpus (r14): the code expression is computed on
-    the SAME rows the cell assignment carries through (assign_nearest_
-    cell's max_by struct keeps every input column), so the former
-    ``codes.join(cells, id)`` -- a second corpus scan plus an id
-    join/exchange re-associating two projections of the same rows --
-    is gone. Row values are identical: the join was 1:1 on the shared
-    id by construction."""
-    from .similarity import (_centroid_table, _ensure_scan_width,
-                             assign_nearest_cell, cell_assigner_udf)
-    code = sq_code_expr(vec_col, los, his, bits=bits)
-    if centroids is not None:
-        # per-row gemm assignment + per-row encode: zero shuffles
-        return (_ensure_scan_width(vectors).select(id_col, vec_col)
-                .select(id_col,
-                        cell_assigner_udf(centroids, coarse_dim)(
-                            F.col(vec_col)).alias("cell"),
-                        code.alias("code")))
-    cents = _centroid_table(
-        seed_vectors if seed_vectors is not None else vectors,
-        None, n_cells, coarse_dim, id_col, vec_col)
-    assigned = assign_nearest_cell(
-        _ensure_scan_width(vectors).select(id_col, vec_col), cents,
-        vec_col=vec_col, key_col=id_col, coarse_dim=coarse_dim)
-    return assigned.select(id_col, F.col("_cell").alias("cell"),
-                           code.alias("code"))
+    """The IVF-SQ inverted file: ``(id, cell, code)`` in one corpus pass
+    (ivf.build_index). Cells come from the deterministic lowest-id
+    centroid table, or explicit ``centroids`` via the gemm assigner;
+    codes are sq_code_expr's. Pin ``seed_vectors``/``centroids`` across
+    incremental builds so batches route identically."""
+    return ivf.build_index(vectors, SQ8(los, his, bits), n_cells=n_cells,
+                           centroids=centroids, id_col=id_col,
+                           vec_col=vec_col, coarse_dim=coarse_dim,
+                           seed_vectors=seed_vectors)
 
 
 def ivf_sq_topk(index: DataFrame, queries: DataFrame, vectors: DataFrame,
@@ -205,75 +224,20 @@ def ivf_sq_topk(index: DataFrame, queries: DataFrame, vectors: DataFrame,
                 q_id_col: str = "q_id", q_vec_col: str = "q_vec",
                 coarse_dim: int = 16, bits: int = 8) -> DataFrame:
     """IVF-SQ search: each query probes its ``n_probe`` nearest cells
-    (cosine on the truncated vector vs the broadcast centroid table --
-    the shared IVF probe rule) and l2-scores ONLY those cells' rows
-    against the dequantized codes. Returns (q_id, vec_id, adist, rn).
+    and l2-scores ONLY those cells' rows against the dequantized codes.
+    Returns (q_id, vec_id, adist, rn).
 
     Scale shape: the scored pass reads 1 byte/dim for ~n_probe/n_cells
     of the corpus, and the d-length dequantize/self-dot folds run over
     that SAME pruned fraction -- the index is semi-joined against the
-    probed-cell set BEFORE the reconstruction projection (Catalyst does
-    not push a join below a Project, so computing _dq first would fold
-    over 100% of index rows; caught in the r11 executed-plan probe and
-    pinned by test_ivf_sq_prunes_before_dequantize). Raw vectors are
-    never touched at search time (``vectors`` only seeds the
-    deterministic centroid table -- pass ``centroids`` and it is not
-    read at all); the only corpus-sized exchange is the hash join on
-    the cell id."""
-    scored = _ivf_sq_scored(index, queries, vectors, los, his,
-                            n_probe=n_probe, n_cells=n_cells,
-                            centroids=centroids, id_col=id_col,
-                            vec_col=vec_col, q_id_col=q_id_col,
-                            q_vec_col=q_vec_col, coarse_dim=coarse_dim,
-                            bits=bits)
-    return _sq_topk_by_adist(scored, k, q_id_col, id_col)
-
-
-def _sq_topk_by_adist(scored: DataFrame, k: int, q_id_col: str,
-                      id_col: str) -> DataFrame:
-    from pyspark.sql import Window as Wnd
-    wk = Wnd.partitionBy(q_id_col).orderBy("adist", id_col)
-    return (scored.withColumn("rn", F.row_number().over(wk))
-            .where(F.col("rn") <= k)
-            .select(q_id_col, id_col, "adist",
-                    F.col("rn").cast("bigint").alias("rn")))
-
-
-def _ivf_sq_scored(index: DataFrame, queries: DataFrame,
-                   vectors: DataFrame, los: list, his: list, *,
-                   n_probe: int, n_cells: int,
-                   centroids: list | None, id_col: str, vec_col: str,
-                   q_id_col: str, q_vec_col: str, coarse_dim: int,
-                   bits: int) -> DataFrame:
-    from pyspark.sql import Window as Wnd
-
-    from .similarity import _centroid_table
-    cents = _centroid_table(vectors, centroids, n_cells, coarse_dim,
-                            id_col, vec_col)
-    tv = F.slice(F.col(q_vec_col), 1, coarse_dim)
-    tn = F.sqrt(dot(tv, tv))
-    qscored = (queries.select(q_id_col, q_vec_col)
-               .crossJoin(F.broadcast(cents))
-               .withColumn("_ccos",
-                           F.round(dot(tv, F.col("_cvec"))
-                                   / (tn * F.col("_cn")), 9)))
-    w = Wnd.partitionBy(q_id_col).orderBy(F.col("_ccos").desc(), "_cid")
-    qprobe = (qscored.withColumn("_crn", F.row_number().over(w))
-              .where(F.col("_crn") <= n_probe)
-              .select(q_id_col, F.col("_cid").alias("cell")))
-    qv = queries.select(q_id_col, F.col(q_vec_col).alias("_qv"))
-    dq = sq_dequantize("code", los, his, bits=bits)
-    # prune FIRST, reconstruct SECOND: the semi join bounds the O(d)
-    # _dq/_dd folds to the probed cells' rows; qprobe is top-n_probe
-    # per query, so its distinct cell set is tiny and broadcasts
-    probed = qprobe.select("cell").distinct()
-    pruned = index.join(F.broadcast(probed), "cell", "left_semi")
-    cand = (pruned.withColumn("_dq", dq)
-            .withColumn("_dd", dot(F.col("_dq"), F.col("_dq")))
-            .join(F.broadcast(qprobe), "cell")
-            .join(F.broadcast(qv), q_id_col))
-    adist = F.round(F.col("_dd") - 2 * dot(F.col("_dq"), F.col("_qv")), 6)
-    return cand.select(q_id_col, id_col, adist.alias("adist"))
+    probed-cell set BEFORE the reconstruction projection (pinned by
+    test_ivf_sq_prunes_before_dequantize). Raw vectors are never
+    touched at search time (``vectors`` only seeds the deterministic
+    centroid table -- pass ``centroids`` and it is not read at all)."""
+    return ivf.search([(index, SQ8(los, his, bits), centroids)], queries,
+                      vectors, k=k, n_probe=n_probe, n_cells=n_cells,
+                      id_col=id_col, vec_col=vec_col, q_id_col=q_id_col,
+                      q_vec_col=q_vec_col, coarse_dim=coarse_dim)
 
 
 def ivf_sq_topk_segments(segments: list, queries: DataFrame,
@@ -288,43 +252,25 @@ def ivf_sq_topk_segments(segments: list, queries: DataFrame,
     """Search SPANNING index segments encoded under DIFFERENT bounds
     versions -- the mid-migration state the SQ lifecycle passes through
     (old segments on the previous [lo, hi], new batches on retrained
-    bounds) -- the ivf_pq_topk_segments contract for the bounds-model
-    family. ``segments`` is a list of ``(index, los, his)`` or
+    bounds). ``segments`` is a list of ``(index, los, his)`` or
     ``(index, los, his, centroids)``; each segment's rows are
-    dequantized under ITS OWN bounds (dequantization is bounds-bound:
-    mixing generations is the correctness bug sq_compact's docstring
-    warns against), the per-segment scored passes union, and one
-    global per-query top-k ranks them. Cell routing stays the SHARED
-    centroid source (pin ``vectors``/centroids across segments so all
-    generations live in one cell space). Per-segment work is the
-    probed fraction of that segment's code rows; the union is a
-    no-shuffle concatenate; the only exchange is the final top-k
-    window."""
-    if not segments:
-        raise ValueError("segments must be non-empty")
-    scored = None
-    for seg in segments:
-        idx, los, his, *rest = seg
-        cents = rest[0] if rest else None
-        s = _ivf_sq_scored(idx, queries, vectors, los, his,
-                           n_probe=n_probe, n_cells=n_cells,
-                           centroids=cents, id_col=id_col,
-                           vec_col=vec_col, q_id_col=q_id_col,
-                           q_vec_col=q_vec_col, coarse_dim=coarse_dim,
-                           bits=bits)
-        scored = s if scored is None else scored.unionByName(s)
-    return _sq_topk_by_adist(scored, k, q_id_col, id_col)
+    dequantized under ITS OWN bounds (dequantization is bounds-bound),
+    the per-segment scored passes union, and one global per-query top-k
+    ranks them. Cell routing stays the SHARED centroid source (pin
+    ``vectors``/centroids across segments so all generations live in
+    one cell space)."""
+    segs = [(idx, SQ8(los, his, bits), rest[0] if rest else None)
+            for idx, los, his, *rest in segments]
+    return ivf.search(segs, queries, vectors, k=k, n_probe=n_probe,
+                      n_cells=n_cells, id_col=id_col, vec_col=vec_col,
+                      q_id_col=q_id_col, q_vec_col=q_vec_col,
+                      coarse_dim=coarse_dim)
 
 
 # --------------------------------------------------------------------------
-# Stored serving: the bm25_store_index discipline applied to the vector
-# tier. The inverted file is persisted hive-partitioned BY CELL, so a
-# query batch's probed-cell set (a bounded driver value -- <= n_probe x
-# n_queries ints) becomes a PartitionFilters IN list on the index scan:
-# serving I/O is bound by the probed cells' directories, not the corpus
-# (asserted in test_plans). The centroid table and the (lo, hi) bounds
-# ride along as tiny metadata tables, so searches never touch the raw
-# vectors OR recompute the model artifacts.
+# Stored serving: ivf.py's cell-partitioned store with the (lo, hi) bounds
+# in ``meta/`` -- a query batch's probed-cell set prunes the index scan to
+# those cell directories (asserted in test_plans).
 
 def sq_store_index(index: DataFrame, path: str, los: list, his: list, *,
                    n_cells: int = 8, centroids: list | None = None,
@@ -332,78 +278,27 @@ def sq_store_index(index: DataFrame, path: str, los: list, his: list, *,
                    coarse_dim: int = 16, bits: int = 8,
                    id_col: str = "vec_id", vec_col: str = "embedding",
                    mode: str = "errorifexists") -> None:
-    """Persist an IVF-SQ inverted file as the serving artifact:
-    ``index/`` hive-partitioned by cell (repartitioned BY the cell
-    first -- one file per cell directory, the dynamic-partition
-    file-explosion fix), ``centroids/`` the (_cid, _cvec, _cn) probe
-    table, ``meta/`` one row pinning (los, his, bits, coarse_dim,
-    id_col). Pass the SAME centroid source as the build
-    (centroids/seed_vectors -- the ivf_sq_index lifecycle contract) so
-    the stored probe table routes queries exactly like the build
-    routed the corpus.
-
-    The centroid probe table and the meta one-rower are bounded driver
-    values (<= n_cells rows / one row), so they are written
-    driver-locally (rowframe.write_artifact_rows -- no Spark job, no
-    commit protocol per artifact); only the index write is a job."""
-    from .similarity import _centroid_table
-    if seed_vectors is None and centroids is None:
-        raise ValueError("pass centroids or seed_vectors (the stored "
-                         "probe table must match the build's routing)")
-    from ..rowframe import write_artifact_rows
-    cents = _centroid_table(
-        seed_vectors if seed_vectors is not None else index,
-        centroids, n_cells, coarse_dim, id_col, vec_col)
-    (index.repartition(int(n_cells), F.col("cell"))
-     .write.mode(mode).partitionBy("cell").parquet(f"{path}/index"))
-    write_artifact_rows(
-        f"{path}/centroids", [tuple(r) for r in cents.collect()],
-        cents.schema, mode=mode)
-    write_artifact_rows(
-        f"{path}/meta",
-        [([float(v) for v in los], [float(v) for v in his],
-          int(bits), int(coarse_dim), id_col)],
-        "los array<double>, his array<double>, bits int, "
-        "coarse_dim int, id_col string", mode=mode)
+    """Persist an IVF-SQ inverted file as the serving artifact
+    (ivf.store): ``index/`` hive-partitioned by cell, ``centroids/``
+    the (_cid, _cvec, _cn) probe table, ``meta/`` one row pinning (los,
+    his, bits, coarse_dim, id_col). Pass the SAME centroid source as
+    the build (centroids/seed_vectors) so the stored probe table routes
+    queries exactly like the build routed the corpus."""
+    ivf.store(index, path, SQ8(los, his, bits), n_cells=n_cells,
+              centroids=centroids, seed_vectors=seed_vectors,
+              coarse_dim=coarse_dim, id_col=id_col, vec_col=vec_col,
+              mode=mode)
 
 
 def sq_stored_append(new_vectors: DataFrame, path: str, *,
                      vec_col: str = "embedding") -> None:
     """Append a batch into the STORED cell-partitioned index under the
-    stored model artifacts: encode + route ONLY the batch (reading the
-    bounds and the centroid probe table back from the store -- the
-    sq_append lifecycle contract, so batches route identically to the
-    original build) and APPEND its rows into the touched cell
-    directories (dynamic-partition append, repartitioned by cell
-    first). Cost is O(batch): the existing index files are never
-    opened. Out-of-range values clamp to the stored bounds by the
-    sq_encode contract -- watch sq_clamp_fraction and compact.
-    Single-writer: holds the store's publish lock so an append cannot
-    interleave with a compaction swap (it would land in the superseded
-    tree and vanish)."""
-    from ..rowframe import artifact_df, read_artifact_rows
-    from .merge import publish_lock
-    from .similarity import _ensure_scan_width, assign_nearest_cell
-    spark = new_vectors.sparkSession
-    # meta/centroids are bounded store artifacts -- driver-local pyarrow
-    # read, no Spark job per append (see rowframe.read_artifact_rows)
-    m = read_artifact_rows(f"{path}/meta")[0][0]
-    los, his = list(m["los"]), list(m["his"])
-    bits, coarse_dim = int(m["bits"]), int(m["coarse_dim"])
-    id_col = m["id_col"]
-    cents = artifact_df(spark, f"{path}/centroids")
-    # one pass: encode on the rows the assignment carries through
-    # (the ivf_sq_index r14 fusion -- no second batch scan, no id join)
-    assigned = assign_nearest_cell(
-        _ensure_scan_width(new_vectors).select(id_col, vec_col), cents,
-        vec_col=vec_col, key_col=id_col, coarse_dim=coarse_dim)
-    batch = assigned.select(
-        id_col, F.col("_cell").alias("cell"),
-        sq_code_expr(vec_col, los, his, bits=bits).alias("code"))
-    with publish_lock(path.rstrip("/"), owner="sq_stored_append"):
-        (batch.repartition(F.col("cell"))
-         .write.mode("append").partitionBy("cell")
-         .parquet(f"{path}/index"))
+    stored bounds and centroid probe table (ivf.stored_append): O(batch),
+    the existing index files are never opened, and batches route
+    identically to the original build. Out-of-range values clamp to the
+    stored bounds by the sq_encode contract -- watch sq_clamp_fraction
+    and compact. Single-writer: holds the store's publish lock."""
+    ivf.stored_append(new_vectors, path, vec_col=vec_col)
 
 
 def sq_stored_compact(vectors: DataFrame, path: str, *,
@@ -413,111 +308,32 @@ def sq_stored_compact(vectors: DataFrame, path: str, *,
                       vec_col: str = "embedding",
                       seed_vectors: DataFrame | None = None,
                       retain_history: bool = False) -> int | None:
-    """Re-train + re-encode compaction of a STORED index (sq_compact
-    for the cell-partitioned layout): derive fresh bounds from the
-    CURRENT raw corpus, rebuild the inverted file, and REPLACE the
-    whole store -- index, centroids, bounds -- in one guarded swap
-    (bounds and codes must switch together; a reader sees either the
-    old store or the new one, never a mix -- the dequantization-is-
-    bounds-bound contract). Needs the raw ``vectors`` (codes alone
-    cannot retrain; the store keeps only the serving artifacts).
-
-    ``retain_history``: keep the superseded store as a numbered
-    generation under ``<path>/archive`` (hardlink snapshot -- metadata
-    cost) so serving can roll back a bad compaction via
-    store_swap.restore_store_generation; returns the generation
-    number (else None)."""
-    import shutil
-    import uuid
-
-    from .store_swap import guarded_store_swap
-    idx, los, his = sq_compact(vectors, n_cells=n_cells,
-                               centroids=centroids, id_col=id_col,
-                               vec_col=vec_col, coarse_dim=coarse_dim,
-                               seed_vectors=seed_vectors, bits=bits)
-    norm = path.rstrip("/")
-    staging = f"{norm}.__sqc_staging_{uuid.uuid4().hex[:8]}"
-    try:
-        sq_store_index(idx, staging, los, his, n_cells=n_cells,
-                       centroids=centroids, coarse_dim=coarse_dim,
-                       bits=bits, id_col=id_col, vec_col=vec_col,
-                       seed_vectors=(seed_vectors
-                                     if seed_vectors is not None
-                                     else vectors))
-    except Exception:
-        shutil.rmtree(staging, ignore_errors=True)
-        raise
-    return guarded_store_swap(norm, staging,
-                              retain_history=retain_history)
+    """Re-train + re-encode compaction of a STORED index: fresh bounds
+    from the CURRENT raw corpus, a rebuilt inverted file, and the whole
+    store -- index, centroids, bounds -- replaced in one guarded swap
+    (ivf.stored_compact; bounds and codes switch together). Needs the
+    raw ``vectors`` (codes alone cannot retrain). ``retain_history``
+    keeps the superseded store as a numbered generation under
+    ``<path>/archive`` for store_swap.restore_store_generation and
+    returns its number (else None)."""
+    return ivf.stored_compact(
+        vectors, path, SQ8.train(vectors, vec_col=vec_col, bits=bits),
+        n_cells=n_cells, centroids=centroids, coarse_dim=coarse_dim,
+        id_col=id_col, vec_col=vec_col, seed_vectors=seed_vectors,
+        retain_history=retain_history)
 
 
 def sq_stored_topk(spark, path: str, queries: DataFrame, *,
                    k: int = 5, n_probe: int = 2,
                    q_id_col: str = "q_id",
                    q_vec_col: str = "q_vec") -> DataFrame:
-    """Serving-path IVF-SQ search over a stored index: queries probe
-    their ``n_probe`` nearest cells against the stored centroid table,
-    the probed-cell set (bounded driver list) prunes the index scan to
-    those partition directories (static PartitionFilters), and the
-    ranking is the shared dequantize-and-fold pass -- value-identical
-    to ivf_sq_topk over the in-memory index (the ann_sq_stored_prune
-    gate shares ann_ivf_sq_topk's oracle). Per query batch, I/O is
-    bound by the probed shards, not the corpus."""
-    from pyspark.sql import Window as Wnd
-
-    from ..rowframe import artifact_df, read_artifact_rows
-    # meta/centroids are bounded store artifacts -- driver-local pyarrow
-    # read, no Spark job per serve (see rowframe.read_artifact_rows)
-    m = read_artifact_rows(f"{path}/meta")[0][0]
-    los, his = list(m["los"]), list(m["his"])
-    bits, coarse_dim = int(m["bits"]), int(m["coarse_dim"])
-    id_col = m["id_col"]
-    cents = artifact_df(spark, f"{path}/centroids")
-    tv = F.slice(F.col(q_vec_col), 1, coarse_dim)
-    tn = F.sqrt(dot(tv, tv))
-    qscored = (queries.select(q_id_col, q_vec_col)
-               .crossJoin(F.broadcast(cents))
-               .withColumn("_ccos",
-                           F.round(dot(tv, F.col("_cvec"))
-                                   / (tn * F.col("_cn")), 9)))
-    w = Wnd.partitionBy(q_id_col).orderBy(F.col("_ccos").desc(), "_cid")
-    qprobe = (qscored.withColumn("_crn", F.row_number().over(w))
-              .where(F.col("_crn") <= n_probe)
-              .select(q_id_col, F.col("_cid").alias("cell")))
-    # qprobe is consumed twice -- the probed-cell collect below and the
-    # candidate join in the final plan -- and is top-n_probe-per-query
-    # small. For the bounded serving case ONE limit-collect localizes
-    # it (LocalTableScan consumer, driver-local broadcast) instead of
-    # paying a localCheckpoint job plus a distinct+collect job per
-    # serve; an over-budget query batch falls back to the distributed
-    # form (leaf-RDD consumers, no unbounded driver collect).
-    from ..rowframe import localize_if_small
-    qlocal, qrows = localize_if_small(qprobe)
-    if qlocal is not None:
-        qprobe = qlocal
-        cells = sorted({r[1] for r in qrows})
-    else:
-        qprobe = qprobe.localCheckpoint(eager=True)
-        cells = [r[0] for r in
-                 qprobe.select("cell").distinct().collect()]
-    # explicit footer-derived schema: no inference job per serve; the
-    # probed-cell IN list stays a static PartitionFilters prune
-    from pyspark.sql.types import IntegerType
-
-    from ..rowframe import table_schema
-    isch = table_schema(f"{path}/index", {"cell": IntegerType()})
-    ird = spark.read if isch is None else spark.read.schema(isch)
-    pruned = (ird.parquet(f"{path}/index")
-              .where(F.col("cell").isin(cells)))
-    qv = queries.select(q_id_col, F.col(q_vec_col).alias("_qv"))
-    dq = sq_dequantize("code", los, his, bits=bits)
-    cand = (pruned.withColumn("_dq", dq)
-            .withColumn("_dd", dot(F.col("_dq"), F.col("_dq")))
-            .join(F.broadcast(qprobe), "cell")
-            .join(F.broadcast(qv), q_id_col))
-    adist = F.round(F.col("_dd") - 2 * dot(F.col("_dq"), F.col("_qv")), 6)
-    scored = cand.select(q_id_col, id_col, adist.alias("adist"))
-    return _sq_topk_by_adist(scored, k, q_id_col, id_col)
+    """Serving-path IVF-SQ search over a stored index (ivf.stored_topk):
+    the probed-cell set prunes the index scan to those partition
+    directories, and the ranking is the shared dequantize-and-fold pass
+    -- value-identical to ivf_sq_topk over the in-memory index (the
+    ann_sq_stored_prune gate shares ann_ivf_sq_topk's oracle)."""
+    return ivf.stored_topk(spark, path, queries, k=k, n_probe=n_probe,
+                           q_id_col=q_id_col, q_vec_col=q_vec_col)
 
 
 # --------------------------------------------------------------------------
@@ -553,7 +369,6 @@ def sq_append(index: DataFrame, new_vectors: DataFrame,
                          vec_col=vec_col, coarse_dim=coarse_dim,
                          seed_vectors=seed_vectors, bits=bits)
     return index.unionByName(batch)
-
 
 def sq_clamp_fraction(vectors: DataFrame, los: list, his: list, *,
                       vec_col: str = "embedding") -> DataFrame:
@@ -637,9 +452,9 @@ def sq_compact(vectors: DataFrame, *, n_cells: int = 8,
     switch bounds and index atomically (dequantization is
     bounds-bound, exactly the pq_compact codebook contract). By
     construction the compacted index equals a fresh one-shot build."""
-    los, his = sq_train(vectors, vec_col=vec_col)
-    idx = ivf_sq_index(vectors, los, his, n_cells=n_cells,
-                       centroids=centroids, id_col=id_col,
-                       vec_col=vec_col, coarse_dim=coarse_dim,
-                       seed_vectors=seed_vectors, bits=bits)
-    return idx, los, his
+    codec = SQ8.train(vectors, vec_col=vec_col, bits=bits)
+    idx = ivf.build_index(vectors, codec, n_cells=n_cells,
+                          centroids=centroids, id_col=id_col,
+                          vec_col=vec_col, coarse_dim=coarse_dim,
+                          seed_vectors=seed_vectors)
+    return idx, codec.los, codec.his

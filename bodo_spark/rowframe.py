@@ -106,8 +106,11 @@ def localize_if_small(df: DataFrame, budget_rows: int = 4096):
     rows) feed TWO consumers (a cell-list collect and the candidate
     join). The distributed form pays a localCheckpoint materialization
     job PLUS a distinct+collect job per serve; for the bounded serving
-    case ONE limit-collect replaces both and the rebuilt frame plans as
-    a LocalTableScan whose broadcast collects driver-locally. The limit
+    case ONE limit-collect replaces both. The rebuilt frame is a
+    local_df: on its arrow path (arrow-safe schemas, which the probe
+    frames are) it plans as a LocalTableScan whose broadcast collects
+    driver-locally; on the pickle fallback it is a one-partition RDD
+    frame whose broadcast still schedules one small job. The limit
     probe bounds driver memory: an over-budget frame costs one wasted
     CollectLimit (which stops early) and falls back unchanged."""
     rows = df.limit(budget_rows + 1).collect()

@@ -80,9 +80,9 @@ def _lut_blas_udf(codebooks: list):
     Python). Same round-half-up 9 dp entries as the expression path."""
     import numpy as np
 
+    from ..operators.pq import _books
     from ..operators.similarity import _round_half_up
-    CW = [np.array(b, dtype=np.float64) for b in codebooks]
-    CC = [(c * c).sum(axis=1) for c in CW]
+    CW, CC = _books(codebooks)
     m = len(CW)
     d = CW[0].shape[1]
 
@@ -130,6 +130,7 @@ def stream_ivf_pq_topk(
     corpus-sized side never enters Python either way)."""
     from pyspark.sql.streaming.state import GroupStateTimeout
 
+    from ..operators.pq import adc_score
     lut = (_lut_expr(codebooks, q_vec_col) if luts == "expr"
            else _lut_blas_udf(codebooks)(F.col(q_vec_col)))
     q = (stream_queries
@@ -138,13 +139,7 @@ def stream_ivf_pq_topk(
          .withColumn("_lut", lut)
          .select(q_id_col, F.explode("_probes").alias("cell"), "_lut"))
     cand = q.join(index.select(id_col, "cell", "code"), "cell")
-    score = F.round(F.aggregate(
-        F.zip_with(F.col("code"), F.col("_lut"),
-                   lambda c, row: F.element_at(row, c + 1)),
-        F.lit(0).cast("decimal(28,9)"),
-        lambda acc, x: (acc + x.cast("decimal(28,9)"))
-        .cast("decimal(28,9)")).cast("double"), 6)
-    scored = cand.select(q_id_col, id_col, score.alias("adist"))
+    scored = cand.select(q_id_col, id_col, adc_score(True).alias("adist"))
 
     def topk(key, pdfs, state):
         import pandas as pd
@@ -168,30 +163,26 @@ def stream_ivf_pq_topk(
                 "dummy int", "update", GroupStateTimeout.NoTimeout))
 
 
-def serve_sq_stored_stream(queries_stream, index_path: str,
-                           out_path: str, *, k: int = 5,
-                           n_probe: int = 2, q_id_col: str = "q_id",
-                           q_vec_col: str = "q_vec",
-                           query_name: str = "sq_stored_serve",
-                           available_now: bool = True):
-    """Streaming serving over the CELL-PARTITIONED stored IVF-SQ index
-    (operators/sq.sq_store_index): each query micro-batch probes its
-    cells and reads ONLY those partition directories through
-    sq_stored_topk (the probed-cell PartitionFilters list is a
-    per-batch bounded driver value, which is exactly why this runs in
-    foreachBatch rather than as a pure stream transform), appending
-    ranked results to ``out_path``. Per batch, I/O is bound by the
-    probed shards -- the stored-serving economics under a query
-    stream; the stream_ann_stored_topk gate pins the served results
-    against the batch search's oracle."""
-    from ..operators.sq import sq_stored_topk
+def _serve_stored(queries_stream, index_path: str, out_path: str, *,
+                  k: int, n_probe: int, q_id_col: str, q_vec_col: str,
+                  query_name: str, available_now: bool):
+    """Streaming serving over a CELL-PARTITIONED stored IVF index of any
+    codec (operators/ivf.store): each query micro-batch probes its cells
+    against the stored centroid table and reads ONLY those partition
+    directories through ivf.stored_topk (the probed-cell
+    PartitionFilters list is a per-batch bounded driver value, which is
+    exactly why this runs in foreachBatch rather than as a pure stream
+    transform), appending ranked results to ``out_path``. Per batch,
+    I/O is bound by the probed shards -- the stored-serving economics
+    under a query stream."""
+    from ..operators.ivf import stored_topk
 
     def serve(bdf, batch_id: int) -> None:
         if not bdf.take(1):
             return
-        out = sq_stored_topk(bdf.sparkSession, index_path, bdf, k=k,
-                             n_probe=n_probe, q_id_col=q_id_col,
-                             q_vec_col=q_vec_col)
+        out = stored_topk(bdf.sparkSession, index_path, bdf, k=k,
+                          n_probe=n_probe, q_id_col=q_id_col,
+                          q_vec_col=q_vec_col)
         out.write.mode("append").parquet(out_path)
 
     q = (queries_stream.writeStream.queryName(query_name)
@@ -202,6 +193,22 @@ def serve_sq_stored_stream(queries_stream, index_path: str,
         sq.awaitTermination()
         return sq
     return q.start()
+
+
+def serve_sq_stored_stream(queries_stream, index_path: str,
+                           out_path: str, *, k: int = 5,
+                           n_probe: int = 2, q_id_col: str = "q_id",
+                           q_vec_col: str = "q_vec",
+                           query_name: str = "sq_stored_serve",
+                           available_now: bool = True):
+    """Streaming serving over the stored IVF-SQ index
+    (operators/sq.sq_store_index), as sq_stored_topk per micro-batch;
+    the stream_ann_stored_topk gate pins the served results against the
+    batch search's oracle."""
+    return _serve_stored(queries_stream, index_path, out_path, k=k,
+                         n_probe=n_probe, q_id_col=q_id_col,
+                         q_vec_col=q_vec_col, query_name=query_name,
+                         available_now=available_now)
 
 
 def serve_pq_stored_stream(queries_stream, index_path: str,
@@ -210,33 +217,12 @@ def serve_pq_stored_stream(queries_stream, index_path: str,
                            q_vec_col: str = "q_vec",
                            query_name: str = "pq_stored_serve",
                            available_now: bool = True):
-    """Streaming serving over the CELL-PARTITIONED stored IVF-PQ index
-    (operators/pq.pq_store_index) -- serve_sq_stored_stream's twin for
-    the codebook family: each query micro-batch probes its cells
-    against the stored centroid table and reads ONLY those partition
-    directories through pq_stored_topk (the probed-cell
-    PartitionFilters list is a per-batch bounded driver value, which
-    is exactly why this runs in foreachBatch rather than as a pure
-    stream transform), appending ranked results to ``out_path``. Per
-    batch, I/O is the probed cells' m-int code rows -- the IVF pruning
-    and PQ compression multiply under a query stream just as in batch;
-    the stream_ann_pq_stored_topk gate pins the served results against
-    the batch search's oracle."""
-    from ..operators.pq import pq_stored_topk
-
-    def serve(bdf, batch_id: int) -> None:
-        if not bdf.take(1):
-            return
-        out = pq_stored_topk(bdf.sparkSession, index_path, bdf, k=k,
-                             n_probe=n_probe, q_id_col=q_id_col,
-                             q_vec_col=q_vec_col)
-        out.write.mode("append").parquet(out_path)
-
-    q = (queries_stream.writeStream.queryName(query_name)
-         .foreachBatch(serve)
-         .option("checkpointLocation", f"{out_path}__ckpt"))
-    if available_now:
-        sq = q.trigger(availableNow=True).start()
-        sq.awaitTermination()
-        return sq
-    return q.start()
+    """Streaming serving over the stored IVF-PQ index
+    (operators/pq.pq_store_index), as pq_stored_topk per micro-batch:
+    the IVF pruning and PQ compression multiply under a query stream
+    just as in batch; the stream_ann_pq_stored_topk gate pins the
+    served results against the batch search's oracle."""
+    return _serve_stored(queries_stream, index_path, out_path, k=k,
+                         n_probe=n_probe, q_id_col=q_id_col,
+                         q_vec_col=q_vec_col, query_name=query_name,
+                         available_now=available_now)

@@ -4,6 +4,7 @@ read-time reconcile, compaction equivalence, tombstone semantics."""
 from __future__ import annotations
 
 import glob
+import json
 import os
 
 import pytest
@@ -207,6 +208,47 @@ def test_mor_bucketed_pruned_compact_leaves_untouched_files(spark,
     assert got == want
     assert (3, "upd", 1) in got and (900, "new", 1) in got
     assert all(k != 7 for k, _, _ in got)
+
+
+@pytest.mark.parametrize("bad", [
+    [3, 7],
+    {"n_buckets": 32},
+    {"n_buckets": 32, "touched": [3, "7"]},
+    {"n_buckets": 32, "touched": [99]},
+], ids=["not-a-dict", "no-touched", "non-int-entry", "out-of-range"])
+def test_mor_compact_malformed_sidecar_falls_back(spark, tmp_path,
+                                                  monkeypatch, bad):
+    """A touched-bucket sidecar that parses as JSON but has the wrong
+    shape must make mor_compact take the distinct+collect fallback
+    (never raise, never trust it) and fold to the correct table."""
+    path = str(tmp_path / "t")
+    M.mor_init(spark.createDataFrame(
+        [(i, f"s{i}", 0) for i in range(50)],
+        "k long, seg string, _cdc_seq long"), path, key_cols=["k"],
+        n_buckets=32)
+    M.mor_apply(spark.createDataFrame(
+        [(3, "upd", "U", 1), (7, None, "D", 1), (900, "new", "U", 1)],
+        "k long, seg string, op string, seq long"), path, key_cols=["k"])
+    cars = glob.glob(os.path.join(path, "delta", "*", "_touched.json"))
+    assert cars
+    for c in cars:
+        with open(c, "w") as f:
+            json.dump(bad, f)
+    want = _state(spark, path)
+    seen = []
+    parse = M._touched_from_sidecars
+
+    def spy(segs, nb):
+        seen.append(parse(segs, nb))
+        return seen[-1]
+
+    monkeypatch.setattr(M, "_touched_from_sidecars", spy)
+    M.mor_compact(spark, path, key_cols=["k"])
+    assert seen == [None]
+    assert M.mor_delta_stats(spark, path)["n_segments"] == 0
+    assert _state(spark, path) == want
+    assert (3, "upd", 1) in want and (900, "new", 1) in want
+    assert all(k != 7 for k, _, _ in want)
 
 
 def test_mor_retained_time_travel_across_compaction(spark, tmp_path):

@@ -6,6 +6,7 @@ properties that make the same plan viable at 100 TB.
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from bodo_spark.queries._util import tbl
@@ -441,22 +442,43 @@ def test_mor_pruned_read_no_full_base_exchange(spark, tmp_path):
             scan and scan.group(0)
 
 
-def test_sq_stored_serving_partition_prunes(spark, tmp_path):
-    """Stored-IVF-SQ serving plan contract: the index scan carries the
-    probed-cell IN list as PartitionFilters -- only the probed cells'
-    directories are opened (serving I/O bound by the probe set, not
-    the corpus)."""
-    import re
-
+def _stored_ivf(spark, tmp_path, codec):
+    """A cell-partitioned stored index of ``codec`` ('sq' | 'pq') over
+    the embeddings table at 8 cells: ``(emb, path, stored_topk,
+    memory_topk)`` where memory_topk(q, k, n_probe) is the in-memory
+    search over the same index."""
+    from bodo_spark.operators import pq as PQ
     from bodo_spark.operators import sq as Q
     emb = tbl(spark, SF_DIR, "embeddings")
-    los, his = Q.sq_train(emb)
-    idx = Q.ivf_sq_index(emb, los, his, n_cells=8)
-    path = str(tmp_path / "sqidx")
-    Q.sq_store_index(idx, path, los, his, n_cells=8, seed_vectors=emb)
+    path = str(tmp_path / f"{codec}idx")
+    if codec == "sq":
+        los, his = Q.sq_train(emb)
+        idx = Q.ivf_sq_index(emb, los, his, n_cells=8)
+        Q.sq_store_index(idx, path, los, his, n_cells=8, seed_vectors=emb)
+        return emb, path, Q.sq_stored_topk, lambda q, k, n_probe: \
+            Q.ivf_sq_topk(idx, q, emb, los, his, k=k, n_probe=n_probe,
+                          n_cells=8)
+    cbs = PQ.lowest_id_pq_codebooks(emb, m=4, k=16)
+    idx = PQ.ivf_pq_index(emb, cbs, n_cells=8)
+    PQ.pq_store_index(idx, path, cbs, n_cells=8, seed_vectors=emb)
+    return emb, path, PQ.pq_stored_topk, lambda q, k, n_probe: \
+        PQ.ivf_pq_topk(idx, q, emb, cbs, k=k, n_probe=n_probe, n_cells=8)
+
+
+@pytest.mark.parametrize("codec", ["sq", "pq"])
+def test_stored_serving_partition_prunes(spark, tmp_path, codec):
+    """Stored-IVF serving plan contract, for every codec: the index
+    scan carries the probed-cell IN list as PartitionFilters -- only
+    the probed cells' directories are opened (serving I/O bound by the
+    probe set, not the corpus) -- and the served rows equal the
+    in-memory search's."""
+    import re
+
+    emb, path, stored_topk, memory_topk = _stored_ivf(spark, tmp_path,
+                                                      codec)
     q = (emb.where("vec_id < 2")
          .selectExpr("vec_id AS q_id", "embedding AS q_vec"))
-    out = Q.sq_stored_topk(spark, path, q, k=3, n_probe=2)
+    out = stored_topk(spark, path, q, k=3, n_probe=2)
     p = plan_str(out)
     assert "PartitionFilters" in p, p
     seg = p.split("PartitionFilters")[1][:300]
@@ -464,30 +486,53 @@ def test_sq_stored_serving_partition_prunes(spark, tmp_path):
     # 2 queries x 2 probes -> <= 4 of 8 cells in the IN list
     m = re.search(r"cell[^\]]*IN \(([^)]*)\)", seg)
     assert m and len(m.group(1).split(",")) <= 4, seg
-    # value parity with the in-memory search
-    mem = sorted(map(tuple, Q.ivf_sq_topk(
-        idx, q, emb, los, his, k=3, n_probe=2, n_cells=8).collect()))
+    mem = sorted(map(tuple, memory_topk(q, k=3, n_probe=2).collect()))
     assert sorted(map(tuple, out.collect())) == mem
 
 
-def test_pq_stored_serving_partition_prunes(spark, tmp_path):
-    """Stored-IVF-PQ serving plan contract: probed-cell PartitionFilters
-    on the index scan + value parity with the in-memory search."""
-    from bodo_spark.operators import pq as PQ
-    emb = tbl(spark, SF_DIR, "embeddings")
-    cbs = PQ.lowest_id_pq_codebooks(emb, m=4, k=16)
-    idx = PQ.ivf_pq_index(emb, cbs, n_cells=8)
-    path = str(tmp_path / "pqidx")
-    PQ.pq_store_index(idx, path, cbs, n_cells=8, seed_vectors=emb)
-    q = (emb.where("vec_id < 2")
+@pytest.mark.parametrize("codec,ddl", [
+    ("sq", "los array<double>, his array<double>, bits int, "
+           "coarse_dim int, id_col string"),
+    ("pq", "codebooks array<array<array<double>>>, coarse_dim int, "
+           "id_col string"),
+], ids=["sq", "pq"])
+def test_stored_meta_schema_pinned(spark, tmp_path, codec, ddl):
+    """The stored ``meta`` row keeps the exact schema stores have always
+    been written with, so a store written by an earlier release still
+    serves (the stored top-k recognises its codec from these fields)."""
+    from pyspark.sql.types import StructType
+
+    from bodo_spark.rowframe import read_artifact_rows
+    _, path, _, _ = _stored_ivf(spark, tmp_path, codec)
+    assert read_artifact_rows(f"{path}/meta")[1] == StructType.fromDDL(ddl)
+
+
+@pytest.mark.parametrize("codec", ["sq", "pq"])
+def test_stored_topk_over_budget_fallback(spark, tmp_path, monkeypatch,
+                                          codec):
+    """The distributed branch of the stored top-k -- taken when
+    localize_if_small reports the probe frame over budget: the probe
+    frame is localCheckpointed and its cells distinct-collected --
+    serves exactly the rows of the localized branch."""
+    from bodo_spark.operators import ivf
+
+    emb, path, stored_topk, _ = _stored_ivf(spark, tmp_path, codec)
+    q = (emb.where("vec_id < 3")
          .selectExpr("vec_id AS q_id", "embedding AS q_vec"))
-    out = PQ.pq_stored_topk(spark, path, q, k=3, n_probe=2)
-    p = plan_str(out)
-    assert "PartitionFilters" in p, p
-    assert "cell" in p.split("PartitionFilters")[1][:300], p
-    mem = sorted(map(tuple, PQ.ivf_pq_topk(
-        idx, q, emb, cbs, k=3, n_probe=2, n_cells=8).collect()))
-    assert sorted(map(tuple, out.collect())) == mem
+    local = sorted(map(tuple, stored_topk(spark, path, q, k=4,
+                                          n_probe=3).collect()))
+    calls = []
+
+    def over_budget(df, budget_rows=4096):
+        calls.append(budget_rows)
+        return None, None
+
+    monkeypatch.setattr(ivf, "localize_if_small", over_budget)
+    out = stored_topk(spark, path, q, k=4, n_probe=3)
+    assert calls
+    opt = out._jdf.queryExecution().optimizedPlan().toString()
+    assert "LogicalRDD" in opt, opt  # the checkpointed probe frame
+    assert sorted(map(tuple, out.collect())) == local
 
 
 def test_mor_changes_never_scans_base(spark, tmp_path):
