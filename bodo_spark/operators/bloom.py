@@ -102,45 +102,31 @@ def append_bloom_index(batch: DataFrame, index_dir: str,
     parquet-APPEND the batch's own word rows as a new segment (the
     LSM discipline -- never read-modify-write the whole index on the
     ingest path); ``read_bloom_index`` bit_or-folds segments on read.
-    ``compact_after`` rewrites the directory down to one folded segment
-    (staged write + swap, no in-place truncation window) for
-    trickle-append hygiene. Deletions are not supported, as in any
-    plain Bloom filter -- rebuild for that."""
-    bloom_word_table(batch, key, m_bits=m_bits, k=k).coalesce(1) \
-        .write.mode("append").parquet(index_dir)
+    ``compact_after`` instead folds the batch's words and the stored
+    segments into ONE segment published through merge.cow_publish
+    (staged write + guarded_swap under the index's publish lock, so a
+    concurrent compaction raises ConcurrentWriteError; between the
+    swap's two renames a reader listing the index can find it
+    missing) for trickle-append hygiene. Deletions are not supported,
+    as in any plain Bloom filter -- rebuild for that."""
+    words = bloom_word_table(batch, key, m_bits=m_bits, k=k)
     if compact_after:
-        # staged-write + backup-swap, the same protocol as
-        # sources/io.compact_parquet: the live index is never the only
-        # copy -- a failure between the moves restores the original.
-        # (The first version rmtree'd the index before the move with a
-        # finally deleting the staged replacement: one crash window
-        # away from losing the filter entirely.)
-        import os
-        import shutil
-        import uuid
+        from .merge import cow_publish
+        stored = batch.sparkSession.read.parquet(index_dir)
+        cow_publish(_fold(stored.unionByName(words)).coalesce(1), index_dir)
+    else:
+        words.coalesce(1).write.mode("append").parquet(index_dir)
 
-        spark = batch.sparkSession
-        norm = index_dir.rstrip("/")
-        staging = f"{norm}.__compact_staging_{uuid.uuid4().hex[:8]}"
-        backup = f"{norm}.__compact_backup_{uuid.uuid4().hex[:8]}"
-        read_bloom_index(spark, norm).coalesce(1) \
-            .write.mode("errorifexists").parquet(staging)
-        try:
-            shutil.move(norm, backup)
-            shutil.move(staging, norm)
-        except Exception:
-            if not os.path.isdir(norm) and os.path.isdir(backup):
-                shutil.move(backup, norm)
-            shutil.rmtree(staging, ignore_errors=True)
-            raise
-        shutil.rmtree(backup, ignore_errors=True)
+
+def _fold(words: DataFrame) -> DataFrame:
+    return (words.groupBy("word_idx")
+            .agg(F.expr("bit_or(word)").alias("word")))
 
 
 def read_bloom_index(spark, index_dir: str) -> DataFrame:
     """Load the filter, folding any appended segments (bit_or per
     word -- at most segments * m/64 rows, trivially small)."""
-    return (spark.read.parquet(index_dir)
-            .groupBy("word_idx").agg(F.expr("bit_or(word)").alias("word")))
+    return _fold(spark.read.parquet(index_dir))
 
 
 def probe_hit_flag(df: DataFrame, words: DataFrame, key: Column, *,
@@ -161,8 +147,7 @@ def probe_hit_flag(df: DataFrame, words: DataFrame, key: Column, *,
     spark.read.parquet instead of read_bloom_index) would otherwise
     multiply batch rows through the k equi-joins and break the
     bit-for-bit anti-join contract."""
-    words = (words.groupBy("word_idx")
-             .agg(F.expr("bit_or(word)").alias("word")))
+    words = _fold(words)
     out = df
     h1 = F.xxhash64(F.lit(1), key)
     h2 = F.xxhash64(F.lit(2), key)

@@ -36,8 +36,6 @@ provides the index itself.
 
 from __future__ import annotations
 
-import shutil
-import uuid
 from abc import ABC, abstractmethod
 from functools import reduce
 
@@ -289,21 +287,20 @@ def stored_compact(vectors: DataFrame, path: str, codec: Codec, *,
     rebuild and the stored probe table. ``retain_history`` keeps the
     superseded store as a numbered generation under ``<path>/archive``
     (store_swap.restore_store_generation rolls back) and returns its
-    number, else None."""
-    idx = build_index(vectors, codec, n_cells=n_cells, centroids=centroids,
-                      id_col=id_col, vec_col=vec_col, coarse_dim=coarse_dim,
-                      seed_vectors=seed_vectors)
-    norm = path.rstrip("/")
-    staging = f"{norm}.__{codec.name}c_staging_{uuid.uuid4().hex[:8]}"
-    try:
+    number, else None. The rebuild runs under the store's publish lock,
+    so an append that lands meanwhile raises instead of being swapped
+    away."""
+    def build(staging: str) -> None:
+        idx = build_index(vectors, codec, n_cells=n_cells,
+                          centroids=centroids, id_col=id_col,
+                          vec_col=vec_col, coarse_dim=coarse_dim,
+                          seed_vectors=seed_vectors)
         store(idx, staging, codec, n_cells=n_cells, centroids=centroids,
               seed_vectors=(seed_vectors if seed_vectors is not None
                             else vectors),
               coarse_dim=coarse_dim, id_col=id_col, vec_col=vec_col)
-    except Exception:
-        shutil.rmtree(staging, ignore_errors=True)
-        raise
-    return guarded_store_swap(norm, staging, retain_history=retain_history)
+
+    return guarded_store_swap(path, build, retain_history=retain_history)
 
 
 def stored_topk(spark, path: str, queries: DataFrame, *, k: int = 5,

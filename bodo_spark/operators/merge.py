@@ -18,7 +18,12 @@ parquet write.
 from __future__ import annotations
 
 import contextlib
-from typing import Mapping
+import json
+import os
+import shutil
+import time
+import uuid
+from typing import Callable, Iterable, Mapping
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -31,12 +36,16 @@ class ConcurrentWriteError(RuntimeError):
     optimistic transactions (reference bodo/io/iceberg/merge_into.py:33
     commits through the catalog, which rejects a stale snapshot); plain
     parquet directories have no catalog, so the engine enforces the
-    SINGLE-WRITER contract explicitly -- every mutating publish
-    (cow_publish, _publish_partitions, MoR apply/compact, stored-index
-    swaps) takes a lockfile for the duration of the operation and a
-    concurrent mutator raises THIS instead of silently folding past or
-    double-publishing. Readers never take the lock (swaps stay atomic
-    renames)."""
+    SINGLE-WRITER contract explicitly -- every table, store and index
+    mutator holds the publish lock for the whole operation, staging
+    write included (the directory swaps all through guarded_swap; MoR
+    apply/compact and the stored append take publish_lock directly),
+    and a concurrent mutator raises THIS as soon as it starts instead
+    of silently folding past or double-publishing. Readers never take
+    the lock. The window that
+    remains: between guarded_swap's two renames of a directory, a
+    reader listing that path can find it missing (an atomic manifest
+    commit would remove it)."""
 
 
 @contextlib.contextmanager
@@ -49,10 +58,6 @@ def publish_lock(path: str, *, owner: str = ""):
     the next mutator raises with its identity, and the operator removes
     the stale file after confirming the writer is gone (auto-breaking
     on pid-liveness would be wrong across hosts)."""
-    import json
-    import os
-    import time
-
     lock = f"{path.rstrip('/')}.__lock"
     try:
         fd = os.open(lock, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
@@ -78,6 +83,58 @@ def publish_lock(path: str, *, owner: str = ""):
             os.remove(lock)
         except OSError:
             pass
+
+
+def guarded_swap(path: str, write: Callable[[str], object], *,
+                 children: Iterable[str] | None = None,
+                 retire: Callable[[str, str], object] | None = None,
+                 owner: str = ""):
+    """The one guarded publish: every table, store and index mutator
+    replaces its directory through here. Under ``path``'s publish_lock:
+
+    1. ``write(staging)`` builds the new content in a private
+       ``<path>.__staging_<tag>`` directory, removed on any failure;
+    2. the staging directory is swapped in by renames through
+       ``<path>.__backup_<tag>`` -- the whole directory, or with
+       ``children`` only those child directories (a named child missing
+       from staging is deleted from the live tree). If any rename
+       fails, every directory already moved is moved back;
+    3. the superseded copy is deleted, or handed to ``retire(path,
+       backup)`` still under the lock (store_swap's generation
+       archiver), whose result is returned.
+
+    Readers see the old tree or the new one, except between the two
+    renames of a directory, when a reader listing it finds it missing.
+    Local-FS renames; on object stores the staged layout would feed a
+    catalog commit instead."""
+    norm = path.rstrip("/")
+    tag = uuid.uuid4().hex[:8]
+    staging, backup = f"{norm}.__staging_{tag}", f"{norm}.__backup_{tag}"
+    dirs = ([(norm, backup, staging)] if children is None else
+            [(os.path.join(norm, c), os.path.join(backup, c),
+              os.path.join(staging, c)) for c in sorted(children)])
+    with publish_lock(norm, owner=owner):
+        moved = []
+        try:
+            write(staging)
+            if children is not None:
+                os.makedirs(backup)
+            for live, old, new in dirs:
+                for src, dst in ((live, old), (new, live)):
+                    if children is None or os.path.isdir(src):
+                        os.rename(src, dst)
+                        moved.append((src, dst))
+        except BaseException:
+            for src, dst in reversed(moved):
+                os.rename(dst, src)
+            shutil.rmtree(staging, ignore_errors=True)
+            shutil.rmtree(backup, ignore_errors=True)
+            raise
+        shutil.rmtree(staging, ignore_errors=True)
+        if retire is not None:
+            return retire(norm, backup)
+        shutil.rmtree(backup, ignore_errors=True)
+        return None
 
 
 def merge_into(
@@ -288,7 +345,9 @@ def merge_into_parquet(
     write while the original is untouched -- then swap directories. The
     swap itself is the only non-atomic window and is driver-local metadata
     work; a real lakehouse table (Iceberg/Delta) is this exact operation
-    plus an atomic snapshot-pointer commit."""
+    plus an atomic snapshot-pointer commit. The swap is cow_publish's
+    guarded_swap; between its two renames a reader listing ``path``
+    can find it missing."""
     target = spark.read.parquet(path)
     merged = merge_into(target, source, on, **merge_kwargs)
     cow_publish(merged, path)
@@ -566,8 +625,6 @@ def _read_bucket_slice(spark, path: str, pcol: str, touched: list):
     publish contract) -- no full-table listing, no schema-inference
     job. Value-identical to
     ``spark.read.parquet(path).where(pcol.isin(touched))``."""
-    import os
-
     import pyarrow.parquet as papq
     from pyspark.sql import types as T
     from pyspark.sql.pandas.types import from_arrow_schema
@@ -601,7 +658,6 @@ def _count_data_files(path: str) -> int:
     """Driver-local data-file count of a parquet table tree (skips
     _SUCCESS/metadata and hidden files) -- the cheap bound the
     auto-validation default keys on."""
-    import os
     n = 0
     for _root, _dirs, files in os.walk(path):
         n += sum(1 for f in files if not f.startswith(("_", ".")))
@@ -622,31 +678,18 @@ def _escape_part(v) -> str:
     return s
 
 
+
+
 def _publish_partitions(merged: DataFrame, path: str, pcol: str,
                         touched: list) -> None:
-    """Stage ONLY the touched partitions and swap their directories in,
-    with the cow_publish restore discipline applied per partition. A
-    touched partition absent from the staged output (every row deleted)
-    is removed. Local-FS path, like cow_publish; on object stores the
-    same staged layout feeds a catalog commit."""
-    import os
-    import shutil
-    import uuid
+    """Stage ONLY the touched partitions and swap their directories in
+    through guarded_swap's partition form: a touched partition absent
+    from the staged output (every row deleted) is removed. A staged
+    partition outside the touched set (an update moved a row across
+    partitions) fails the write step, so nothing is swapped."""
+    expected = {f"{pcol}={_escape_part(v)}" for v in touched}
 
-    norm = path.rstrip("/")
-    staging = f"{norm}.__cow_parts_{uuid.uuid4().hex[:8]}"
-    with publish_lock(norm, owner="publish_partitions"):
-        _publish_partitions_locked(merged, norm, staging, pcol, touched)
-
-
-def _publish_partitions_locked(merged: DataFrame, norm: str,
-                               staging: str, pcol: str,
-                               touched: list) -> None:
-    import os
-    import shutil
-    import uuid
-
-    try:
+    def write(staging: str) -> None:
         # one shuffle keyed on the partition col bounds the staged
         # write to ~one file per touched partition (vs tasks x touched
         # tiny files -- the per-file overhead measured on the BM25
@@ -656,91 +699,28 @@ def _publish_partitions_locked(merged: DataFrame, norm: str,
                             F.col(pcol))
          .write.mode("errorifexists").partitionBy(pcol)
          .parquet(staging))
-    except Exception:
-        shutil.rmtree(staging, ignore_errors=True)
-        raise
-    expected = {f"{pcol}={_escape_part(v)}" for v in touched}
-    staged = {d for d in os.listdir(staging)
-              if d.startswith(f"{pcol}=")}
-    stray = staged - expected
-    if stray:
-        shutil.rmtree(staging, ignore_errors=True)
-        raise ValueError(
-            f"merge produced partitions outside the touched set "
-            f"({sorted(stray)[:5]}): part_col must be immutable under "
-            "the merge -- an update moved a row across partitions")
-    backup = f"{norm}.__cow_partbak_{uuid.uuid4().hex[:8]}"
-    os.makedirs(backup)
-    moved_out, moved_in = [], []
-    try:
-        for name in sorted(expected):
-            old = os.path.join(norm, name)
-            if os.path.isdir(old):
-                shutil.move(old, os.path.join(backup, name))
-                moved_out.append(name)
-            new = os.path.join(staging, name)
-            if os.path.isdir(new):
-                shutil.move(new, os.path.join(norm, name))
-                moved_in.append(name)
-    except Exception:
-        # restore: drop the new dirs that made it in, put the originals
-        # back (same-FS dir moves are atomic renames)
-        for name in moved_in:
-            shutil.rmtree(os.path.join(norm, name), ignore_errors=True)
-        for name in moved_out:
-            bsrc = os.path.join(backup, name)
-            dst = os.path.join(norm, name)
-            if os.path.isdir(bsrc) and not os.path.isdir(dst):
-                shutil.move(bsrc, dst)
-        shutil.rmtree(staging, ignore_errors=True)
-        shutil.rmtree(backup, ignore_errors=True)
-        raise
-    shutil.rmtree(staging, ignore_errors=True)
-    shutil.rmtree(backup, ignore_errors=True)
+        stray = {d for d in os.listdir(staging)
+                 if d.startswith(f"{pcol}=")} - expected
+        if stray:
+            raise ValueError(
+                f"merge produced partitions outside the touched set "
+                f"({sorted(stray)[:5]}): part_col must be immutable "
+                "under the merge -- an update moved a row across "
+                "partitions")
+
+    guarded_swap(path, write, children=expected,
+                 owner="publish_partitions")
 
 
 def cow_publish(merged: DataFrame, path: str, *,
                 partition_by: list[str] | None = None) -> None:
     """Publish ``merged`` as the new content of the parquet table at
-    ``path``: durable staging write -> directory swap, with the
-    exception-restore discipline every COW maintainer needs (shared by
-    merge_into_parquet, maintain_rollup_stream and the file-pruned
-    merge). A failed staging write leaves the table untouched and
-    removes the staging dir; a failure between the two moves restores
-    the original from the backup. Serialized per table by publish_lock
-    (two concurrent publishers would each stage from the same snapshot
-    and the loser's changes would silently vanish)."""
-    import shutil
-    import uuid
-
-    norm = path.rstrip("/")
-    staging = f"{norm}.__cow_staging_{uuid.uuid4().hex[:8]}"
-    backup = f"{norm}.__cow_backup_{uuid.uuid4().hex[:8]}"
-    with publish_lock(norm, owner="cow_publish"):
-        w = merged.write.mode("errorifexists")
-        if partition_by:
-            w = w.partitionBy(*partition_by)
-        try:
-            w.parquet(staging)
-        except Exception:
-            shutil.rmtree(staging, ignore_errors=True)
-            raise
-        try:
-            shutil.move(norm, backup)
-            shutil.move(staging, norm)
-        except Exception:
-            # Local-FS path only; on object stores callers should point
-            # a catalog/table pointer at `staging` instead of renaming.
-            # shutil can raise shutil.Error (partial cross-device copy)
-            # as well as OSError; restore the original, drop staging.
-            if not _exists_dir(norm) and _exists_dir(backup):
-                shutil.move(backup, norm)
-            shutil.rmtree(staging, ignore_errors=True)
-            raise
-        shutil.rmtree(backup, ignore_errors=True)
-
-
-def _exists_dir(p: str) -> bool:
-    import os
-
-    return os.path.isdir(p)
+    ``path``: a durable staging write, then guarded_swap's
+    whole-directory swap (shared by merge_into_parquet,
+    maintain_rollup_stream, compact_parquet, bloom compaction and the
+    MoR compactions). A failed write or swap leaves the table as it
+    was."""
+    w = merged.write.mode("errorifexists")
+    if partition_by:
+        w = w.partitionBy(*partition_by)
+    guarded_swap(path, w.parquet, owner="cow_publish")

@@ -56,6 +56,7 @@ import glob
 import json
 import os
 import shutil
+import time
 import uuid
 
 from pyspark.sql import DataFrame
@@ -414,10 +415,26 @@ def mor_apply(changes: DataFrame, path: str, *, key_cols: list[str],
             try:
                 _write_touched_sidecar(
                     seg, int(meta["n_buckets"]),
-                    sorted(int(v) for v in obs.get["b"]))
+                    sorted(int(v) for v in _observed(obs)["b"]))
             except Exception:
                 pass  # optional fast path; compaction falls back
     return seg
+
+
+_OBSERVATION_WAIT_S = 5.0
+
+
+def _observed(obs) -> dict:
+    """An Observation's metrics, waiting at most _OBSERVATION_WAIT_S:
+    ``obs.get`` waits on the JVM's ``Duration.Inf``, unbounded under the
+    publish lock, while ``getRowOrEmpty`` waits at most 100 ms per call
+    (Spark 4.1.2). Raises TimeoutError when the metrics never arrive --
+    no added latency once they have."""
+    deadline = time.monotonic() + _OBSERVATION_WAIT_S
+    while not obs._jo.getRowOrEmpty().isDefined():
+        if time.monotonic() > deadline:
+            raise TimeoutError("observed metrics did not arrive")
+    return obs.get
 
 
 def _write_touched_sidecar(seg: str, n_buckets: int,
@@ -824,25 +841,6 @@ def mor_maintain(spark, path: str, *, key_cols: list[str],
             "base_bytes": base_bytes}
 
 
-def _snapshot_dir(src: str, dst: str) -> None:
-    """Hardlink-copy a parquet directory tree: snapshots cost metadata,
-    not data movement, because parquet files are immutable once written
-    and the publish steps only move/unlink whole files -- exactly the
-    share-unchanged-files economics of an Iceberg/Delta snapshot (old
-    manifests keep referencing old files). Falls back to a real copy
-    where the filesystem refuses links."""
-    for root, _dirs, files in os.walk(src):
-        rel = os.path.relpath(root, src)
-        tdir = dst if rel == "." else os.path.join(dst, rel)
-        os.makedirs(tdir, exist_ok=True)
-        for fn in files:
-            s, t = os.path.join(root, fn), os.path.join(tdir, fn)
-            try:
-                os.link(s, t)
-            except OSError:
-                shutil.copy2(s, t)
-
-
 def mor_compact(spark, path: str, *, key_cols: list[str],
                 seq_col: str = "_cdc_seq",
                 retain_history: bool = False,
@@ -887,6 +885,7 @@ def mor_compact(spark, path: str, *, key_cols: list[str],
     broadcast would be most dangerous)."""
     from .merge import (ConcurrentWriteError, _bucket_expr,
                         _publish_partitions, cow_publish, publish_lock)
+    from .store_swap import snapshot_hardlink
     with publish_lock(path, owner="mor_compact"):
         meta = _read_meta(path)
         # sweep leftovers from a crashed prior compaction (folded
@@ -907,7 +906,7 @@ def mor_compact(spark, path: str, *, key_cols: list[str],
             snap = os.path.join(path, "archive",
                                 f"base-{meta['base_seg']:06d}")
             if not os.path.isdir(snap):
-                _snapshot_dir(base_path, snap)
+                snapshot_hardlink(base_path, snap)
         nb = meta["n_buckets"]
         if relayout:
             # partition evolution (the Iceberg rewrite-with-new-spec

@@ -287,60 +287,51 @@ def bm25_stored_append(new_docs: DataFrame, path: str, *,
     the live store's inodes are never modified through the links) and
     the whole store swaps once, under the publish lock. A reader sees
     the pre-append store or the post-append store, never a torn one;
-    a failed append leaves the live store untouched. ``retain_history``
+    a failed append leaves the live store untouched. The snapshot and
+    the staged mutations run inside the swap's build step, under the
+    lock, so a second append raises ConcurrentWriteError instead of
+    swapping the first one's documents away. ``retain_history``
     keeps the superseded store as an archive generation (rollback via
     store_swap.restore_store_generation); returns its number."""
-    import shutil
-    import uuid
-
     from pyspark import StorageLevel
 
-    from .merge import merge_into_partitioned
+    from ..rowframe import read_artifact_rows, write_artifact_rows
+    from .merge import _keyed_write_width, merge_into_partitioned
     from .store_swap import guarded_store_swap, snapshot_hardlink
     spark = new_docs.sparkSession
     norm = path.rstrip("/")
-    staging = f"{norm}.__bm25a_staging_{uuid.uuid4().hex[:8]}"
-    from ..rowframe import read_artifact_rows
-    nb = int(read_artifact_rows(f"{norm}/meta")[0][0]["n_term_buckets"])
-    batch = (bm25_index(new_docs, id_col=id_col, text_col=text_col)
-             .persist(StorageLevel.MEMORY_AND_DISK))
-    try:
-        snapshot_hardlink(norm, staging)
-        from .merge import _keyed_write_width
-        tb = _term_bucket(nb)
-        (batch.withColumn("tbucket", tb)
-         .repartition(_keyed_write_width(batch, nb), F.col("tbucket"))
-         .write.mode("append").partitionBy("tbucket")
-         .parquet(f"{staging}/postings"))
-        bts, bcs = bm25_corpus_stats(batch)
-        merge_into_partitioned(
-            spark, f"{staging}/term_stats", bts, ["term"],
-            n_buckets=nb, bucket_col="tbucket",
-            when_matched_update={"df": F.col("df") + F.col("src_df")},
-            when_not_matched_insert={"term": F.col("src_term"),
-                                     "df": F.col("src_df")})
-        b = bcs.collect()[0]
-        # additive one-row update of a bounded artifact: driver-local
-        # read + write (no local_df evaluation, no write job, no
-        # cow_publish swap -- the staging dir is private until the
-        # whole-store guarded_store_swap below publishes it)
-        from ..rowframe import write_artifact_rows
-        cur, cschema = read_artifact_rows(f"{staging}/corpus_stats")
-        write_artifact_rows(
-            f"{staging}/corpus_stats",
-            [(int(cur[0]["n_docs"]) + int(b["n_docs"]),
-              int(cur[0]["sum_dl"]) + int(b["sum_dl"]))],
-            cschema, mode="overwrite")
-    except Exception:
-        shutil.rmtree(staging, ignore_errors=True)
-        raise
-    finally:
+
+    def build(staging: str) -> None:
+        nb = int(read_artifact_rows(f"{norm}/meta")[0][0]["n_term_buckets"])
+        batch = (bm25_index(new_docs, id_col=id_col, text_col=text_col)
+                 .persist(StorageLevel.MEMORY_AND_DISK))
         try:
+            snapshot_hardlink(norm, staging)
+            (batch.withColumn("tbucket", _term_bucket(nb))
+             .repartition(_keyed_write_width(batch, nb), F.col("tbucket"))
+             .write.mode("append").partitionBy("tbucket")
+             .parquet(f"{staging}/postings"))
+            bts, bcs = bm25_corpus_stats(batch)
+            merge_into_partitioned(
+                spark, f"{staging}/term_stats", bts, ["term"],
+                n_buckets=nb, bucket_col="tbucket",
+                when_matched_update={"df": F.col("df") + F.col("src_df")},
+                when_not_matched_insert={"term": F.col("src_term"),
+                                         "df": F.col("src_df")})
+            b = bcs.collect()[0]
+            # additive one-row update of a bounded artifact: driver-local
+            # read + write (no local_df evaluation, no write job; the
+            # staging dir is private until the whole-store swap)
+            cur, cschema = read_artifact_rows(f"{staging}/corpus_stats")
+            write_artifact_rows(
+                f"{staging}/corpus_stats",
+                [(int(cur[0]["n_docs"]) + int(b["n_docs"]),
+                  int(cur[0]["sum_dl"]) + int(b["sum_dl"]))],
+                cschema, mode="overwrite")
+        finally:
             batch.unpersist()
-        except Exception:
-            pass
-    return guarded_store_swap(norm, staging,
-                              retain_history=retain_history)
+
+    return guarded_store_swap(norm, build, retain_history=retain_history)
 
 
 def bm25_stored_topk(spark, path: str, queries: DataFrame, *,

@@ -4,8 +4,8 @@ serving artifacts (IVF-SQ / IVF-PQ / BM25 stores).
 The stored-index compactions replace a multi-part store (index +
 centroids/bounds/codebooks + stats) in ONE directory swap -- readers see
 the old store or the new one, never a mix (the model artifacts and the
-codes they decode are bound together). This module factors that swap out
-and adds the snapshot discipline the MoR tier already has
+codes they decode are bound together). This module adds to that swap
+the snapshot discipline the MoR tier already has
 (operators/mor.py retain_history / mor_expire_snapshots): a compaction
 or append can RETAIN the superseded store as a numbered generation under
 ``<store>/archive/gen-NNNN``, serving can ROLL BACK to any retained
@@ -13,6 +13,11 @@ generation after a bad compaction (wrong trainer, corrupt batch), and an
 expiry bounds the archive. Snapshots are hardlink trees -- metadata
 cost, no data movement -- safe because every store artifact is an
 immutable parquet file; mutations only ever add or swap whole files.
+
+The swap itself is merge.guarded_swap, the one guarded publish every
+mutator shares; this module adds only the generation archive around it.
+Between the swap's two renames a reader listing the store can find it
+missing.
 
 Reference parity: the reference leans on Iceberg snapshots for this
 (rollback/expire_snapshots); plain-directory stores need it spelled out.
@@ -24,7 +29,7 @@ import glob
 import os
 import re
 import shutil
-import uuid
+from typing import Callable
 
 __all__ = ["guarded_store_swap", "store_generations",
            "restore_store_generation", "expire_store_generations",
@@ -63,51 +68,43 @@ def store_generations(path: str) -> list[int]:
     return sorted(out)
 
 
-def guarded_store_swap(path: str, staging: str, *,
+def guarded_store_swap(path: str, build: Callable[[str], object], *,
                        retain_history: bool = False) -> int | None:
-    """Swap ``staging`` in as the new content of ``path`` with the
-    cow_publish restore discipline, serialized by the store's publish
-    lock. With ``retain_history`` the superseded store is kept as the
-    next ``archive/gen-NNNN`` (its own archive of older generations is
-    first folded into the new live store's archive, so history is
-    linear, never nested); without it the old store is deleted.
-    Returns the archived generation number, or None.
+    """Replace the store at ``path`` with what ``build(staging)`` writes,
+    through merge.guarded_swap: the build runs under the store's publish
+    lock, so a concurrent append or compaction raises
+    ConcurrentWriteError instead of being swapped away. With
+    ``retain_history`` the superseded store is kept as the next
+    ``archive/gen-NNNN`` (its own archive of older generations is first
+    folded into the new live store's archive, so history is linear,
+    never nested); without it the old store is deleted. Returns the
+    archived generation number, or None. Between the swap's two
+    renames a reader listing ``path`` can find it missing."""
+    from .merge import guarded_swap
+    return guarded_swap(path, build, owner="store_swap",
+                        retire=_archive_generation if retain_history
+                        else None)
 
-    The caller builds ``staging`` OUTSIDE the lock (the expensive
-    Spark writes); only the driver-local swap serializes."""
-    from .merge import publish_lock
-    norm = path.rstrip("/")
-    backup = f"{norm}.__swap_backup_{uuid.uuid4().hex[:8]}"
-    with publish_lock(norm, owner="store_swap"):
-        try:
-            shutil.move(norm, backup)
-            shutil.move(staging, norm)
-        except Exception:
-            if not os.path.isdir(norm) and os.path.isdir(backup):
-                shutil.move(backup, norm)
-            shutil.rmtree(staging, ignore_errors=True)
-            raise
-        if not retain_history:
-            shutil.rmtree(backup, ignore_errors=True)
-            return None
-        arch = os.path.join(norm, "archive")
-        os.makedirs(arch, exist_ok=True)
-        old_arch = os.path.join(backup, "archive")
-        if os.path.isdir(old_arch):
-            for d in sorted(os.listdir(old_arch)):
-                dst = os.path.join(arch, d)
-                if not os.path.exists(dst):
-                    shutil.move(os.path.join(old_arch, d), dst)
-            shutil.rmtree(old_arch, ignore_errors=True)
-        gens = store_generations(norm)
-        g = (gens[-1] + 1) if gens else 0
-        shutil.move(backup, os.path.join(arch, f"gen-{g:04d}"))
-        return g
+
+def _archive_generation(norm: str, backup: str) -> int:
+    arch = os.path.join(norm, "archive")
+    os.makedirs(arch, exist_ok=True)
+    old_arch = os.path.join(backup, "archive")
+    if os.path.isdir(old_arch):
+        for d in sorted(os.listdir(old_arch)):
+            dst = os.path.join(arch, d)
+            if not os.path.exists(dst):
+                shutil.move(os.path.join(old_arch, d), dst)
+        shutil.rmtree(old_arch, ignore_errors=True)
+    gens = store_generations(norm)
+    g = (gens[-1] + 1) if gens else 0
+    shutil.move(backup, os.path.join(arch, f"gen-{g:04d}"))
+    return g
 
 
 def restore_store_generation(path: str, gen: int) -> int:
     """Roll the live store back to a retained generation: the archived
-    snapshot is hardlink-copied to a staging tree (the archive KEEPS
+    snapshot is hardlink-copied into the staging tree (the archive KEEPS
     its copy -- restoring twice works) and swapped in with
     ``retain_history=True``, so the rolled-back-FROM store becomes a
     new generation itself (rollback is undoable). Returns the
@@ -119,11 +116,9 @@ def restore_store_generation(path: str, gen: int) -> int:
             f"no retained generation {gen} under {norm}/archive "
             f"(have {store_generations(norm)}) -- it was never "
             "retained or was expired")
-    staging = f"{norm}.__restore_{uuid.uuid4().hex[:8]}"
-    snapshot_hardlink(gsrc, staging)
-    new_gen = guarded_store_swap(norm, staging, retain_history=True)
-    assert new_gen is not None
-    return new_gen
+    return guarded_store_swap(
+        norm, lambda staging: snapshot_hardlink(gsrc, staging),
+        retain_history=True)
 
 
 def expire_store_generations(path: str, *, keep_last: int) -> dict:

@@ -519,7 +519,7 @@ def merge_file_pruned(spark: SparkSession, sf: str) -> DataFrame:
                   "untouched_intact boolean")
     finally:
         shutil.rmtree(stage, ignore_errors=True)
-        for d in glob.glob(f"{stage}.__cow_*"):
+        for d in glob.glob(f"{stage}.__*"):
             shutil.rmtree(d, ignore_errors=True)
 
 

@@ -695,8 +695,8 @@ def text_bm25_stored_append(spark: SparkSession, sf: str) -> DataFrame:
     finally:
         shutil.rmtree(stage, ignore_errors=True)
         import glob as g
-        for dd in g.glob(f"{stage}/term_stats.__cow_*") + \
-                g.glob(f"{stage}/corpus_stats.__cow_*"):
+        for dd in g.glob(f"{stage}/term_stats.__*") + \
+                g.glob(f"{stage}/corpus_stats.__*"):
             shutil.rmtree(dd, ignore_errors=True)
 
 

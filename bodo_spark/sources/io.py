@@ -254,35 +254,21 @@ def compact_parquet(spark: SparkSession, path: str,
     """Small-file compaction (the lakehouse OPTIMIZE primitive; the
     reference's MPI writer sizes files at write time, a long-lived table
     still degrades under trickle appends). Rewrites the directory to
-    ceil(bytes/target) files via repartition, using the same
-    staged-write + swap protocol as merge_into_parquet -- the original
-    is untouched until the compacted copy is fully durable. Returns the
-    new file count."""
+    ceil(bytes/target) files via repartition, published through
+    operators.merge.cow_publish (staged write + guarded_swap under the
+    table's publish lock) -- the original is untouched until the
+    compacted copy is fully durable. Returns the new file count."""
     import math
     import os
-    import shutil
-    import uuid
+
+    from ..operators.merge import cow_publish
 
     norm = path.rstrip("/")
     total = sum(os.path.getsize(os.path.join(dp, f))
                 for dp, _, fs in os.walk(norm) for f in fs
                 if f.endswith(".parquet"))
     n_files = max(1, math.ceil(total / target_file_bytes))
-    staging = f"{norm}.__compact_staging_{uuid.uuid4().hex[:8]}"
-    backup = f"{norm}.__compact_backup_{uuid.uuid4().hex[:8]}"
-    (spark.read.parquet(norm).repartition(n_files)
-     .write.mode("errorifexists").parquet(staging))
-    try:
-        shutil.move(norm, backup)
-        shutil.move(staging, norm)
-    except Exception:
-        # restore the original and drop the (possibly partial) staging
-        # copy -- shutil can raise shutil.Error as well as OSError
-        if not os.path.isdir(norm) and os.path.isdir(backup):
-            shutil.move(backup, norm)
-        shutil.rmtree(staging, ignore_errors=True)
-        raise
-    shutil.rmtree(backup, ignore_errors=True)
+    cow_publish(spark.read.parquet(norm).repartition(n_files), norm)
     return n_files
 
 

@@ -161,8 +161,9 @@ def maintain_rollup_stream(facts: DataFrame, path: str, *,
     the incremental-ETL loop as a stream, additive-exact by the same
     argument as the batch operator (the stream_rollup gate pins the
     replayed stream against the one-shot aggregation oracle). The
-    publish step reuses merge.cow_publish, so a failure anywhere in
-    the staging write or the swap leaves the stored rollup intact.
+    publish step is merge.cow_publish (guarded_swap), so a failure
+    anywhere in the staging write or the swap leaves the stored rollup
+    intact.
 
     ``aggs``: {out_col: Column} aggregate expressions at the grain
     (counts / DECIMAL sums -- additive measures only); ``add_cols``
@@ -188,8 +189,6 @@ def maintain_rollup_stream(facts: DataFrame, path: str, *,
         cur = spark.read.parquet(path)
         merged = merge_rollup(cur, batch_agg, keys=keys,
                               add_cols=add_cols)
-        # guarded COW swap (staging write + exception-restore), shared
-        # with merge_into_parquet
         cow_publish(merged, path)
 
     q = (facts.writeStream.queryName(query_name)

@@ -297,7 +297,7 @@ def test_compact_parquet_reduces_files(spark, tmp_path):
     after = len(_glob.glob(f"{path}/*.parquet"))
     assert n == 1 and after == 1 and before >= 8
     assert spark.read.parquet(path).count() == total_before
-    assert not _glob.glob(f"{path}.__compact_*")
+    assert not _glob.glob(f"{path}.__*")
 
 
 def test_read_sql_table_routes(spark):

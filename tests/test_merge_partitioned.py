@@ -71,7 +71,7 @@ def test_untouched_partition_files_never_rewritten(spark, tmp_path):
     after = {f for f in _files(path)
              if not f[0].startswith(touched_dir)}
     assert before == after and before
-    assert not glob.glob(str(tmp_path / "tbl.__cow_*"))
+    assert not glob.glob(str(tmp_path / "tbl.__*"))
 
 
 def test_delete_empties_partition_dir(spark, tmp_path):
@@ -115,7 +115,7 @@ def test_natural_part_col_and_cross_partition_guard(spark, tmp_path):
                                  "region": F.lit("c")})
     assert sorted(map(tuple, spark.read.parquet(path)
                       .select("k", "v", "region").collect())) == got
-    assert not glob.glob(str(tmp_path / "tbl.__cow_*"))
+    assert not glob.glob(str(tmp_path / "tbl.__*"))
 
 
 def test_empty_source_is_noop(spark, tmp_path):
@@ -145,7 +145,7 @@ def test_pruned_failed_staging_leaves_table(spark, tmp_path):
                 .cast("double")})
     assert sorted(map(tuple, spark.read.parquet(path)
                       .select("k", "seg", "bal").collect())) == before
-    assert not glob.glob(str(tmp_path / "tbl.__cow_*"))
+    assert not glob.glob(str(tmp_path / "tbl.__*"))
 
 
 def test_arg_validation(spark, tmp_path):

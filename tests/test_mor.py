@@ -46,7 +46,7 @@ def test_mor_apply_read_compact_roundtrip(spark, tmp_path):
     M.mor_compact(spark, path, key_cols=["k"])
     assert M.mor_delta_stats(spark, path)["n_segments"] == 0
     assert _state(spark, path) == want
-    assert not glob.glob(os.path.join(path, "base.__cow_*"))
+    assert not glob.glob(os.path.join(path, "base.__*"))
 
 
 def test_mor_tombstone_beats_late_old_upsert(spark, tmp_path):
@@ -210,6 +210,26 @@ def test_mor_bucketed_pruned_compact_leaves_untouched_files(spark,
     assert all(k != 7 for k, _, _ in got)
 
 
+def _assert_fallback_compaction(spark, path, monkeypatch):
+    """mor_compact must skip the sidecar fast path (the parser returns
+    None) and fold the batch applied by the caller to the right table."""
+    want = _state(spark, path)
+    seen = []
+    parse = M._touched_from_sidecars
+
+    def spy(segs, nb):
+        seen.append(parse(segs, nb))
+        return seen[-1]
+
+    monkeypatch.setattr(M, "_touched_from_sidecars", spy)
+    M.mor_compact(spark, path, key_cols=["k"])
+    assert seen == [None]
+    assert M.mor_delta_stats(spark, path)["n_segments"] == 0
+    assert _state(spark, path) == want
+    assert (3, "upd", 1) in want and (900, "new", 1) in want
+    assert all(k != 7 for k, _, _ in want)
+
+
 @pytest.mark.parametrize("bad", [
     [3, 7],
     {"n_buckets": 32},
@@ -234,21 +254,42 @@ def test_mor_compact_malformed_sidecar_falls_back(spark, tmp_path,
     for c in cars:
         with open(c, "w") as f:
             json.dump(bad, f)
-    want = _state(spark, path)
-    seen = []
-    parse = M._touched_from_sidecars
+    _assert_fallback_compaction(spark, path, monkeypatch)
 
-    def spy(segs, nb):
-        seen.append(parse(segs, nb))
-        return seen[-1]
 
-    monkeypatch.setattr(M, "_touched_from_sidecars", spy)
-    M.mor_compact(spark, path, key_cols=["k"])
-    assert seen == [None]
-    assert M.mor_delta_stats(spark, path)["n_segments"] == 0
-    assert _state(spark, path) == want
-    assert (3, "upd", 1) in want and (900, "new", 1) in want
-    assert all(k != 7 for k, _, _ in want)
+def test_mor_apply_observation_wait_is_bounded(spark, tmp_path,
+                                               monkeypatch):
+    """mor_apply reads its touched-bucket Observation under the publish
+    lock: a read that never completes must time out, not hang -- the
+    apply returns without a sidecar and compaction folds through the
+    distinct+collect fallback to the correct table."""
+    import time
+    from types import SimpleNamespace
+
+    path = str(tmp_path / "t")
+    M.mor_init(spark.createDataFrame(
+        [(i, f"s{i}", 0) for i in range(50)],
+        "k long, seg string, _cdc_seq long"), path, key_cols=["k"],
+        n_buckets=32)
+
+    class _Pending:
+        def getRowOrEmpty(self):
+            time.sleep(0.1)
+            return SimpleNamespace(isDefined=lambda: False)
+
+    observed = M._observed
+    monkeypatch.setattr(M, "_OBSERVATION_WAIT_S", 0.5)
+    monkeypatch.setattr(M, "_observed", lambda obs: observed(
+        SimpleNamespace(_jo=_Pending())))
+    t0 = time.monotonic()
+    seg = M.mor_apply(spark.createDataFrame(
+        [(3, "upd", "U", 1), (7, None, "D", 1), (900, "new", "U", 1)],
+        "k long, seg string, op string, seq long"), path, key_cols=["k"])
+    assert time.monotonic() - t0 < 60
+    assert os.path.isdir(seg)
+    assert not glob.glob(os.path.join(path, "delta", "*", "_touched.json"))
+    assert not os.path.exists(f"{path}.__lock")
+    _assert_fallback_compaction(spark, path, monkeypatch)
 
 
 def test_mor_retained_time_travel_across_compaction(spark, tmp_path):

@@ -5,6 +5,7 @@ BM25 stored append is all-or-nothing under the swap."""
 
 from __future__ import annotations
 
+import glob
 import os
 
 import pytest
@@ -89,8 +90,7 @@ def test_bm25_stored_append_is_atomic(spark, tmp_path):
     with pytest.raises(Exception):
         R.bm25_stored_append(bad, path)
     assert snap(path) == before
-    assert not [d for d in os.listdir(os.path.dirname(path))
-                if "__bm25a_staging" in d]
+    assert not glob.glob(f"{path}.__*")
     # a good append still serves one-shot-identically and can retain
     more = spark.createDataFrame([(4, "delta epsilon alpha")],
                                  "doc_id long, text string")

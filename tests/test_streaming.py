@@ -509,7 +509,7 @@ def test_cow_publish_failed_write_leaves_table(spark, tmp_path):
         cow_publish(bad, path)
     assert sorted(map(tuple, spark.read.parquet(path).collect())) \
         == [(1, "a")]
-    assert not glob.glob(str(tmp_path / "tbl.__cow_*"))
+    assert not glob.glob(str(tmp_path / "tbl.__*"))
 
 
 def test_cdc_apply_replay_idempotent(spark, tmp_path_factory):

@@ -599,7 +599,7 @@ def eng_merge_pruned(spark, sf):
     finally:
         shutil.rmtree(path, ignore_errors=True)
         import glob as g
-        for dd in g.glob(f"{path}.__cow_*"):
+        for dd in g.glob(f"{path}.__*"):
             shutil.rmtree(dd, ignore_errors=True)
 
 
