@@ -696,9 +696,11 @@ def mor_lookup(spark, path: str, keys: list, *, key_cols: list[str],
         from pyspark.sql import types as _T
         from ..rowframe import local_df
         kdf = local_df(spark, rows, _T.StructType(ktypes))
+        # no distinct(): a Project over the local key relation is folded
+        # and collected on the driver with zero Spark jobs, an Aggregate
+        # on top forces two; the set dedupes
         buckets = sorted({r[0] for r in kdf.select(
-            _bucket_expr(list(key_cols), nb).alias("_b"))
-            .distinct().collect()})
+            _bucket_expr(list(key_cols), nb).alias("_b")).collect()})
         base = (base.where(F.col(meta["bucket_col"]).isin(buckets))
                 .drop(meta["bucket_col"]))
     base = base.where(keyf)

@@ -245,7 +245,6 @@ def _query_luts(queries: DataFrame, codebooks: list, *,
     query frame against the broadcast codebook frame and folding back;
     all intermediates are ~queries * m * k rows."""
     m = len(codebooks)
-    kk = len(codebooks[0])
     d = len(codebooks[0][0])
     cb = _codebook_frame(queries.sparkSession, codebooks)
     qsub = F.slice(F.col(q_vec_col), F.col("_j") * d + 1, d)
@@ -253,21 +252,22 @@ def _query_luts(queries: DataFrame, codebooks: list, *,
                 .crossJoin(F.broadcast(cb))
                 .withColumn("_lv", F.round(
                     F.col("_cc") - 2 * dot(qsub, F.col("_cw")), 9)))
-    # ONE aggregation: collect all m*k cells per query, sort by (j, cid)
-    # and reshape index-arithmetically (entry (j, c) sits at j*k+c) --
-    # the previous per-j pre-aggregation was a second full exchange
-    # whose only job was grouping, pure fixed latency per query batch
-    flat = (lut_cell.groupBy(q_id_col)
-            .agg(F.array_sort(F.collect_list(
-                F.struct(F.col("_j"), F.col("_cid"), F.col("_lv"))))
-                .alias("_flat")))
-    lut = F.transform(
-        F.sequence(F.lit(0), F.lit(m - 1)),
-        lambda j: F.transform(
-            F.sequence(F.lit(0), F.lit(kk - 1)),
-            lambda c: F.element_at(F.col("_flat"),
-                                   (j * kk + c + 1).cast("int"))["_lv"]))
-    return flat.select(q_id_col, lut.alias("_lut"))
+    # ONE aggregation, one sorted list per subspace: collect_list skips
+    # the NULL of every other subspace's cells, and sorting by _cid
+    # (unique) puts codeword c at position c. Each list is the array
+    # argument of its transform, so it is sorted once per query. No
+    # aggregate output may be referenced inside a lambda: one referenced
+    # once is inlined into its consumer (CollapseProject) and so
+    # re-evaluated per element -- reshaping one (j, cid)-sorted list by
+    # element_at(j*k + c + 1) sorts all m*k cells once per LUT ENTRY,
+    # seconds per query at m=8, k=256 (tests/test_plans.py pins this).
+    # SQL text: one py4j call per expression, not one per Column node.
+    rows = lut_cell.groupBy(q_id_col).agg(*[F.expr(
+        f"sort_array(collect_list(IF(_j = {j}, struct(_cid, _lv), NULL)))"
+        f" AS _s{j}") for j in range(m)])
+    lut = F.expr("array(%s)" % ", ".join(
+        f"transform(_s{j}, x -> x._lv)" for j in range(m)))
+    return rows.select(q_id_col, lut.alias("_lut"))
 
 
 def _np_luts(books: tuple, qv) -> list:

@@ -34,6 +34,8 @@ provides the compression tier itself, like pq.py.
 
 from __future__ import annotations
 
+import math
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -72,10 +74,42 @@ def sq_train(vectors: DataFrame, *,
     return ([float(r["lo"]) for r in rows], [float(r["hi"]) for r in rows])
 
 
+def _sql_double(v: float) -> str:
+    """``v`` as SQL text that parses back to the same IEEE double
+    (repr is the shortest round-tripping decimal)."""
+    if math.isnan(v):
+        return "CAST('NaN' AS DOUBLE)"
+    if math.isinf(v):
+        return f"CAST('{'-' if v < 0 else ''}Infinity' AS DOUBLE)"
+    return f"{v!r}D"
+
+
 def _bound_arrays(los: list, his: list):
     lo = F.array(*[F.lit(float(v)) for v in los])
     hi = F.array(*[F.lit(float(v)) for v in his])
     return lo, hi
+
+
+def _bounds(los: list, his: list, levels: int) -> Column:
+    """The d per-dimension bounds as ONE literal array<struct<lo, rng,
+    step, flat>>, zipped element-wise with a vector or code array:
+    rng = hi - lo and step = rng / levels are the IEEE doubles the
+    per-element expression would compute, and flat is Spark's hi == lo
+    (NaN equals NaN), so each element reads struct fields and does no
+    index lookup.
+
+    The literal is SQL text parsed by one JVM call: built as a Column
+    per value, every value is a py4j round trip -- about 0.5 s per
+    call for this struct array at d=64."""
+    items = []
+    for lo, hi in zip(map(float, los), map(float, his)):
+        flat = lo == hi or (math.isnan(lo) and math.isnan(hi))
+        items.append(
+            f"named_struct('lo', {_sql_double(lo)}, "
+            f"'rng', {_sql_double(hi - lo)}, "
+            f"'step', {_sql_double((hi - lo) / levels)}, "
+            f"'flat', {str(flat).lower()})")
+    return F.expr(f"array({', '.join(items)})")
 
 
 def sq_code_expr(vec_col, los: list, his: list, *,
@@ -83,23 +117,19 @@ def sq_code_expr(vec_col, los: list, his: list, *,
     """The SQ code as a COLUMN over a vector column: code_i =
     clamp(floor((x_i - lo_i) / (hi_i - lo_i) * levels), 0, levels)
     with levels = 2^bits - 1; a constant dimension (hi == lo) encodes
-    0. Pure JVM transform expression (the bound arrays are two d-float
-    literals), so a consumer can compute it in the SAME pass that
-    assigns cells -- no second scan, no id join (ivf_sq_index /
-    sq_stored_append fuse on it)."""
+    0. Pure JVM zip_with expression over one d-struct bounds literal,
+    so a consumer can compute it in the SAME pass that assigns cells
+    -- no second scan, no id join (ivf_sq_index / sq_stored_append
+    fuse on it)."""
     if not 2 <= bits <= 16:
         raise ValueError(f"bits must be in [2, 16], got {bits}")
     levels = (1 << bits) - 1
-    lo, hi = _bound_arrays(los, his)
     v = F.col(vec_col) if isinstance(vec_col, str) else vec_col
-    return F.transform(
-        v,
-        lambda x, i: F.when(
-            F.element_at(hi, i + 1) == F.element_at(lo, i + 1),
-            F.lit(0)).otherwise(
+    return F.zip_with(
+        v, _bounds(los, his, levels),
+        lambda x, b: F.when(b["flat"], F.lit(0)).otherwise(
             F.least(F.lit(levels), F.greatest(F.lit(0), F.floor(
-                (x.cast("double") - F.element_at(lo, i + 1))
-                / (F.element_at(hi, i + 1) - F.element_at(lo, i + 1))
+                (x.cast("double") - b["lo"]) / b["rng"]
                 * levels).cast("int")))).cast("int"))
 
 
@@ -116,14 +146,10 @@ def sq_dequantize(code_col, los: list, his: list, *,
                   bits: int = 8):
     """Column expression reconstructing array<double> from a code
     array: dq_i = lo_i + code_i * ((hi_i - lo_i) / levels)."""
-    levels = (1 << bits) - 1
-    lo, hi = _bound_arrays(los, his)
     c = F.col(code_col) if isinstance(code_col, str) else code_col
-    return F.transform(
-        c, lambda v, i: F.element_at(lo, i + 1)
-        + v.cast("double") * ((F.element_at(hi, i + 1)
-                               - F.element_at(lo, i + 1))
-                              / F.lit(float(levels))))
+    return F.zip_with(
+        c, _bounds(los, his, (1 << bits) - 1),
+        lambda v, b: b["lo"] + v.cast("double") * b["step"])
 
 
 def sq_topk(codes: DataFrame, queries: DataFrame, los: list, his: list, *,

@@ -316,8 +316,9 @@ def hashed_tfidf_vectors(df: DataFrame, *, id_col: str = "doc_id",
 
     Plan: one explode + (doc, bucket) count; bucket doc-frequency
     reduced FROM the tf frame (no second corpus pass); the dense
-    vector built per doc from a map literal lookup over a sequence --
-    pure JVM, one groupBy. Exact mode buckets via the md5-derived h60
+    vector built per doc by ``dim`` conditional aggregates, or above
+    256 dims by zipping the doc's bucket map against the 0..dim-1 key
+    map -- pure JVM, one groupBy. Exact mode buckets via the md5-derived h60
     (oracle-reproducible); fast mode uses the xxhash64 intrinsic.
     Weights are rounded to 9 dp so downstream cosine folds are
     engine-reproducible."""
@@ -358,11 +359,20 @@ def hashed_tfidf_vectors(df: DataFrame, *, id_col: str = "doc_id",
                 .select(id_col,
                         F.array(*[F.col(f"_v{i}")
                                   for i in range(dim)]).alias("vec")))
-    # very wide vectors: dim agg expressions would blow up the plan --
-    # keep the map-lookup formulation
+    # very wide vectors: dim agg expressions would blow up the plan.
+    # Zip the doc's sparse bucket map against a dense 0..dim-1 key map:
+    # the result keeps the first map's key order, so its values (NULL
+    # for an absent bucket, filled with 0.0) are the dense vector. The
+    # sparse map must stay an ARGUMENT (built once per doc), never be
+    # referenced inside a per-dimension lambda: an aggregate output
+    # referenced once is inlined into its consumer (CollapseProject),
+    # so there it is rebuilt per dimension -- O(dim x entries) per doc.
+    keys = F.map_from_arrays(F.sequence(F.lit(0), F.lit(dim - 1)),
+                             F.array_repeat(F.lit(0.0), dim))
     vec = F.transform(
-        F.sequence(F.lit(0), F.lit(dim - 1)),
-        lambda i: F.coalesce(F.element_at(F.col("_m"), i), F.lit(0.0)))
+        F.map_values(F.map_zip_with(keys, F.col("_m"),
+                                    lambda b, zero, w: w)),
+        lambda w: F.coalesce(w, F.lit(0.0)))
     return (sparse.groupBy(id_col)
             .agg(F.map_from_entries(F.collect_list(F.struct("b", "w")))
                  .alias("_m"))

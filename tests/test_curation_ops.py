@@ -774,6 +774,43 @@ def test_hashed_tfidf_vectors_shape_and_semantics(spark):
         hashed_tfidf_vectors(df, dim=1)
 
 
+
+def test_hashed_tfidf_vectors_wide_branch(spark):
+    """dim > 256 takes the map-zip branch: each slot is the summed-tf
+    smooth-idf weight of the tokens hashing there, rounded to 9 dp,
+    and every other slot is 0.0 -- the dense branch's semantics."""
+    import math
+    from collections import Counter
+
+    from pyspark.sql import functions as F
+
+    from bodo_spark.modes import exact_mode
+    from bodo_spark.operators.dedup import h60
+    from bodo_spark.operators.text import hashed_tfidf_vectors
+    dim = 300
+    rows = [(0, "apple apple banana"), (1, "apple cherry"),
+            (2, "durian elderberry fig"), (3, "Fig fig fig grape")]
+    df = spark.createDataFrame(rows, "doc_id long, text string")
+    words = sorted({w for _, t in rows for w in t.lower().split()})
+    bucket = (h60(F.col("t")) % dim if exact_mode()
+              else F.pmod(F.xxhash64("t"), F.lit(dim))).cast("int")
+    b_of = dict(spark.createDataFrame([(w,) for w in words], "t string")
+                .select("t", bucket).collect())
+    tf = {i: Counter(b_of[w] for w in t.lower().split()) for i, t in rows}
+    df_b = Counter(b for c in tf.values() for b in c)
+    got = {r.doc_id: list(r.vec)
+           for r in hashed_tfidf_vectors(df, dim=dim).collect()}
+    assert set(got) == set(tf)
+    for i, counts in tf.items():
+        assert len(got[i]) == dim
+        for b in range(dim):
+            if b not in counts:
+                assert got[i][b] == 0.0, (i, b)
+                continue
+            idf = math.log((len(rows) + 1) / (df_b[b] + 1)) + 1
+            assert got[i][b] == pytest.approx(counts[b] * idf, abs=1e-9)
+
+
 def test_pretrain_pipeline_url_stage(spark):
     """url_col= switches on the pre-content URL dedup: two rows with
     the same canonical URL (tracking-param + case variants) collapse

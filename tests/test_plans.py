@@ -323,9 +323,9 @@ def test_ivf_sq_prunes_before_dequantize(spark, tmp_path):
     from bodo_spark.operators import sq as Q
     emb = tbl(spark, SF_DIR, "embeddings")
     los, his = Q.sq_train(emb)
-    # materialize the index so the only transform() in the search plan
-    # is the dequantize fold (an inline build would contribute
-    # sq_encode's transform and foil the position check)
+    # materialize the index so the only zip_with over the code column
+    # in the search plan is the dequantize (an inline build would
+    # contribute sq_encode's and foil the position check)
     Q.ivf_sq_index(emb, los, his, n_cells=4).write.parquet(
         str(tmp_path / "idx"))
     idx = spark.read.parquet(str(tmp_path / "idx"))
@@ -336,7 +336,7 @@ def test_ivf_sq_prunes_before_dequantize(spark, tmp_path):
     assert "LeftSemi" in opt, opt
     # logical tree prints root-first: the dequantize Project must
     # appear BEFORE (above) the semi join that prunes to probed cells
-    assert opt.index("transform(") < opt.index("LeftSemi"), opt
+    assert opt.index("zip_with(code") < opt.index("LeftSemi"), opt
     # value sanity: probing ALL cells must equal the flat SQ scan
     # bit-for-bit (n_probe=2 recall is the ann_ivf_sq_topk gate's job)
     full = Q.ivf_sq_topk(idx, q, emb, los, his, k=3, n_probe=4,
@@ -582,3 +582,110 @@ def test_mor_read_projection_pushdown(spark, tmp_path):
         for cols in scans:
             names = {c.split("#")[0] for c in cols.split(",") if c}
             assert "wide" not in names, (pruned, cols, p)
+
+
+def lambda_depths(plan: str, names=("array_sort", "sort_array",
+                                    "collect_list", "map_from_entries")
+                  ) -> dict:
+    """``{name: [depth, ...]}`` over a plan string: for each call of
+    ``name``, how many ``lambdafunction(`` scopes enclose it. A call at
+    depth n runs once per element of n nested array lambdas -- what an
+    aggregate output costs once CollapseProject has inlined it into a
+    per-element lambda. Parentheses are matched per plan line."""
+    import re
+    token = re.compile(r"(\w*)\(|\)")
+    depths = {n: [] for n in names}
+    for line in plan.splitlines():
+        opened = []  # per open parenthesis: does it open a lambda?
+        for t in token.finditer(line):
+            if t.group(0) == ")":
+                if opened:
+                    opened.pop()
+                continue
+            fn = t.group(1)
+            if fn in depths:
+                depths[fn].append(sum(opened))
+            opened.append(fn == "lambdafunction")
+    return depths
+
+
+def optimized_plan(df) -> str:
+    return df._jdf.queryExecution().optimizedPlan().toString()
+
+
+def spark_jobs(spark, fn):
+    """``(fn(), n)``: the result of ``fn`` and the number of Spark jobs
+    it ran, read from the status tracker over a private job group once
+    the listener bus has delivered every job-start event."""
+    import uuid
+    sc = spark.sparkContext
+    group = f"spark-jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_lambda_depths_parser():
+    plan = ("Aggregate [q], [transform(x, lambdafunction(transform(y, "
+            "lambdafunction(element_at(array_sort(collect_list(s, 0, 0), "
+            "lambdafunction(if (l < r) -1 else 0, l, r, false), false), "
+            "1)._lv, c, false)), j, false)) AS a, sort_array(z, true) AS b]")
+    d = lambda_depths(plan)
+    assert d["array_sort"] == [2] and d["collect_list"] == [2], d
+    assert d["sort_array"] == [0] and d["map_from_entries"] == [], d
+
+
+def test_query_luts_sort_outside_lambdas(spark):
+    """PQ LUT plan contract: no sort of the collected cells runs inside
+    a lambda. Reshaping one aggregated (j, cid)-sorted list with
+    element_at inside transform(sequence(m), transform(sequence(k)))
+    had the sort inlined at depth 2 -- m*k sorts of m*k structs per
+    query; each subspace's list is now sorted once per query."""
+    from bodo_spark.operators import pq as P
+    emb = tbl(spark, SF_DIR, "embeddings")
+    cbs = P.lowest_id_pq_codebooks(emb, m=4, k=16)
+    q = (emb.where("vec_id < 2")
+         .selectExpr("vec_id AS q_id", "embedding AS q_vec"))
+    d = lambda_depths(optimized_plan(P._query_luts(q, cbs)))
+    sorts = d["array_sort"] + d["sort_array"]
+    assert sorts and max(sorts) == 0, d
+    assert d["collect_list"] and max(d["collect_list"]) == 0, d
+
+
+def test_wide_tfidf_map_built_once(spark):
+    """Wide hashed TF-IDF plan contract (dim > 256): each doc's sparse
+    bucket map is built outside every lambda -- referenced once inside
+    the per-dimension transform, it was inlined there and rebuilt per
+    dimension."""
+    from bodo_spark.operators.text import hashed_tfidf_vectors
+    d = lambda_depths(optimized_plan(hashed_tfidf_vectors(
+        tbl(spark, SF_DIR, "documents"), dim=300)))
+    assert d["map_from_entries"] and max(d["map_from_entries"]) == 0, d
+    assert max(d["collect_list"]) == 0, d
+
+
+def test_mor_lookup_job_budget(spark, tmp_path):
+    """Job-count contract for the bucketed point lookup: the key ->
+    bucket step evaluates a Project over the local key relation, folded
+    and collected on the driver with zero jobs (a distinct() on it ran
+    two), so the whole lookup -- meta, bucket step, pruned read and its
+    collect -- runs 6 jobs, not 8."""
+    from bodo_spark.operators import mor as M
+    path = str(tmp_path / "t")
+    M.mor_init(spark.createDataFrame(
+        [(k, f"s{k}", 0) for k in range(64)],
+        "k long, seg string, _cdc_seq long"), path,
+        key_cols=["k"], n_buckets=16)
+    M.mor_apply(spark.createDataFrame(
+        [(1, "u", "U", 1)], "k long, seg string, op string, seq long"),
+        path, key_cols=["k"])
+    rows, jobs = spark_jobs(spark, lambda: M.mor_lookup(
+        spark, path, [1, 3, 7], key_cols=["k"]).collect())
+    assert sorted(map(tuple, rows)) == [(1, "u", 1), (3, "s3", 0),
+                                        (7, "s7", 0)]
+    assert jobs <= 6, jobs

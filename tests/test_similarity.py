@@ -680,3 +680,72 @@ def test_pq_stored_compact_threads_seed_vectors(spark, tmp_path):
     got = {tuple(r) for r in served.collect()}
     want = {tuple(r) for r in expect.collect()}
     assert got == want and len(want) > 0
+
+
+def _element_at_luts(queries, cbs):
+    """The reference LUT formulation: every query's m*k cells collected
+    into one (j, cid)-sorted list, reshaped by element_at(j*k + c + 1)
+    inside transform(sequence(m), transform(sequence(k)))."""
+    from pyspark.sql import functions as F
+
+    from bodo_spark.operators import pq as PQ
+    m, kk, d = len(cbs), len(cbs[0]), len(cbs[0][0])
+    qsub = F.slice(F.col("q_vec"), F.col("_j") * d + 1, d)
+    flat = (queries.crossJoin(F.broadcast(
+        PQ._codebook_frame(queries.sparkSession, cbs)))
+        .withColumn("_lv", F.round(
+            F.col("_cc") - 2 * S.dot(qsub, F.col("_cw")), 9))
+        .groupBy("q_id").agg(F.array_sort(F.collect_list(
+            F.struct("_j", "_cid", "_lv"))).alias("_flat")))
+    lut = F.transform(
+        F.sequence(F.lit(0), F.lit(m - 1)),
+        lambda j: F.transform(
+            F.sequence(F.lit(0), F.lit(kk - 1)),
+            lambda c: F.element_at(
+                F.col("_flat"), (j * kk + c + 1).cast("int"))["_lv"]))
+    return flat.select("q_id", lut.alias("_lut"))
+
+
+@pytest.fixture(scope="module")
+def production_pq(spark):
+    """The production codebook shape, m=8 subspaces of k=256 codewords,
+    over the embeddings table, with two query rows."""
+    from bodo_spark.operators import pq as PQ
+    from bodo_spark.queries._util import tbl
+    emb = tbl(spark, SF_DIR, "embeddings")
+    cbs = PQ.lowest_id_pq_codebooks(emb, m=8, k=256)
+    q = (emb.where("vec_id IN (3, 77)")
+         .selectExpr("vec_id AS q_id",
+                     "CAST(embedding AS array<double>) AS q_vec"))
+    return emb, cbs, q
+
+
+def test_query_luts_production_shape_equal_reference(spark, production_pq):
+    """At m=8, k=256 the per-subspace sorted LUT rows, schema included,
+    equal the element_at reshape's exactly."""
+    from bodo_spark.operators import pq as PQ
+    _, cbs, q = production_pq
+    got, ref = PQ._query_luts(q, cbs), _element_at_luts(q, cbs)
+    assert got.schema == ref.schema
+    rows = sorted(map(tuple, got.collect()))
+    assert len(rows) == 2 and len(rows[0][1]) == 8
+    assert all(len(lut) == 256 for _, luts in rows for lut in luts)
+    assert rows == sorted(map(tuple, ref.collect()))
+
+
+@pytest.mark.parametrize("exact", ["0", "1"])
+def test_pq_stored_topk_production_shape_equals_memory(
+        spark, production_pq, tmp_path, monkeypatch, exact):
+    """The stored IVF-PQ serve at the production codebook shape returns
+    exactly the in-memory IVF search's rows, in both numeric modes."""
+    from bodo_spark.operators import pq as PQ
+    monkeypatch.setenv("BODO_SPARK_EXACT", exact)
+    emb, cbs, q = production_pq
+    idx = PQ.ivf_pq_index(emb, cbs, n_cells=8)
+    path = str(tmp_path / "pq")
+    PQ.pq_store_index(idx, path, cbs, n_cells=8, seed_vectors=emb)
+    stored = sorted(map(tuple, PQ.pq_stored_topk(
+        spark, path, q, k=5, n_probe=3).collect()))
+    memory = sorted(map(tuple, PQ.ivf_pq_topk(
+        idx, q, emb, cbs, k=5, n_probe=3, n_cells=8).collect()))
+    assert len(stored) == 10 and stored == memory

@@ -220,3 +220,48 @@ def test_sampled_reconstruction_mse_deterministic_and_sane(spark):
 
     with pytest.raises(ValueError, match="quantize"):
         Q.sq_reconstruction_mse(emb, idx, los, his, sample_frac=0.001)
+
+
+def test_bound_zip_equals_element_at_form(spark, emb):
+    """sq_code_expr and sq_dequantize zip each element with one literal
+    bounds struct; codes and reconstructions, schemas included, equal
+    the per-element element_at lookups into two bound arrays -- over a
+    constant dimension and a NaN-bounded one too."""
+    los, his = Q.sq_train(emb)
+    los[5] = his[5] = 0.25
+    los[7] = his[7] = float("nan")
+    lo = F.array(*[F.lit(v) for v in los])
+    hi = F.array(*[F.lit(v) for v in his])
+
+    def at(a, i):
+        return F.element_at(a, i + 1)
+
+    def code_ref(bits):
+        levels = (1 << bits) - 1
+        return F.transform("embedding", lambda x, i: F.when(
+            at(hi, i) == at(lo, i), F.lit(0)).otherwise(F.least(
+                F.lit(levels), F.greatest(F.lit(0), F.floor(
+                    (x.cast("double") - at(lo, i)) / (at(hi, i) - at(lo, i))
+                    * levels).cast("int")))).cast("int"))
+
+    def dq_ref(bits):
+        return F.transform("code", lambda v, i: at(lo, i) + v.cast("double")
+                           * ((at(hi, i) - at(lo, i))
+                              / F.lit(float((1 << bits) - 1))))
+
+    def same(a, b):
+        assert a.schema == b.schema
+        ra = sorted(map(tuple, a.collect()))
+        rb = sorted(map(tuple, b.collect()))
+        assert len(ra) == len(rb) == 500
+        for (ia, va), (ib, vb) in zip(ra, rb):
+            assert ia == ib and len(va) == len(vb)
+            assert all(x == y or (x != x and y != y) for x, y in zip(va, vb))
+
+    for bits in (8, 4):
+        codes = emb.select("vec_id", Q.sq_code_expr(
+            "embedding", los, his, bits=bits).alias("code"))
+        same(codes, emb.select("vec_id", code_ref(bits).alias("code")))
+        same(codes.select("vec_id", Q.sq_dequantize(
+            "code", los, his, bits=bits).alias("dq")),
+            codes.select("vec_id", dq_ref(bits).alias("dq")))
