@@ -10,7 +10,9 @@ is the same for every codec, so it is written here once:
   (similarity._centroid_table + assign_nearest_cell), or explicit
   ``centroids`` through the gemm assigner (cells = list positions);
 - the query-side probe (similarity.probe_cells): each query's
-  ``n_probe`` nearest cells against the broadcast centroid table;
+  ``n_probe`` nearest cells against the broadcast centroid table --
+  for a stored serve's bounded fast-mode batch, its driver twin
+  similarity.probe_cells_local;
 - the probed scoring join and the per-query top-k window;
 - the multi-segment union (segments encoded under different codec
   versions, one global top-k);
@@ -40,15 +42,17 @@ from abc import ABC, abstractmethod
 from functools import reduce
 
 from pyspark.sql import Column, DataFrame
-from pyspark.sql import Window as W
 from pyspark.sql import functions as F
-from pyspark.sql.types import IntegerType
+from pyspark.sql.types import IntegerType, StructField, StructType
 
-from ..rowframe import (artifact_df, localize_if_small, read_artifact_rows,
-                        table_schema, write_artifact_rows)
+from ..modes import exact_mode
+from ..rowframe import (artifact_df, local_df, localize_if_small,
+                        read_artifact_rows, table_schema,
+                        write_artifact_rows)
 from .merge import publish_lock
 from .similarity import (_centroid_table, _ensure_scan_width,
-                         assign_nearest_cell, cell_assigner_udf, probe_cells)
+                         assign_nearest_cell, cell_assigner_udf,
+                         probe_cells, probe_cells_local, sql_ident)
 from .store_swap import guarded_store_swap
 
 __all__ = ["Codec", "route", "build_index", "search", "store",
@@ -95,10 +99,19 @@ class Codec(ABC):
         """Per-row columns ``score`` reads, added after the cell prune."""
         return rows
 
-    @abstractmethod
     def query_side(self, queries: DataFrame, q_id_col: str,
                    q_vec_col: str) -> DataFrame:
-        """One row per query: ``q_id_col`` plus what ``score`` reads."""
+        """One row per query: ``q_id_col`` plus what ``score`` reads
+        (by default the vector itself, as ``_qv``)."""
+        return queries.select(q_id_col, F.col(q_vec_col).alias("_qv"))
+
+    def local_query_side(self, qvecs: list, q_vec_type):
+        """The driver twin of ``query_side`` for a fast-mode batch
+        already on the driver: ``(fields, values)`` -- the fields
+        ``query_side`` adds after the id, and one tuple of their values
+        per vector of ``qvecs`` -- or None when this batch's query side
+        must be built in Spark."""
+        return [StructField("_qv", q_vec_type)], [(v,) for v in qvecs]
 
     @abstractmethod
     def score(self) -> Column:
@@ -148,16 +161,18 @@ def _probe(queries: DataFrame, cents: DataFrame, *, n_probe: int,
                        coarse_dim=coarse_dim).select(q_id_col, "cell")
 
 
-def _score_probed(rows: DataFrame, qprobe: DataFrame, queries: DataFrame,
-                  codec: Codec, *, id_col: str, q_id_col: str,
-                  q_vec_col: str) -> DataFrame:
+def _score_probed(rows: DataFrame, qcells: DataFrame, codec: Codec, *,
+                  id_col: str, q_id_col: str,
+                  qside: DataFrame | None = None) -> DataFrame:
     """``(q_id, id, adist)`` for index rows already pruned to the probed
-    cells: prep, then join each row to the queries that probe its cell
-    and to their query side (both broadcast -- top-n_probe per query is
-    tiny); the only corpus-sized exchange is the join on the cell id."""
-    qside = codec.query_side(queries, q_id_col, q_vec_col)
-    cand = (codec.prep(rows).join(F.broadcast(qprobe), "cell")
-            .join(F.broadcast(qside), q_id_col))
+    cells: prep, then join each row to the ``(q_id, cell)`` rows of the
+    queries that probe its cell and to their query side -- carried by
+    ``qcells`` itself, or the separate ``qside`` frame (all broadcast:
+    top-n_probe per query is tiny); the only corpus-sized exchange is
+    the join on the cell id."""
+    cand = codec.prep(rows).join(F.broadcast(qcells), "cell")
+    if qside is not None:
+        cand = cand.join(F.broadcast(qside), q_id_col)
     return cand.select(q_id_col, id_col, codec.score().alias("adist"))
 
 
@@ -165,11 +180,11 @@ def _topk_by_adist(scored: DataFrame, k: int, q_id_col: str,
                    id_col: str) -> DataFrame:
     """Per-query top-k by ascending adist, ties to the lowest id:
     ``(q_id, id, adist, rn)`` with rn 1..k (a WindowGroupLimit)."""
-    w = W.partitionBy(q_id_col).orderBy("adist", id_col)
-    return (scored.withColumn("rn", F.row_number().over(w))
-            .where(F.col("rn") <= k)
-            .select(q_id_col, id_col, "adist",
-                    F.col("rn").cast("bigint").alias("rn")))
+    q, i = sql_ident(q_id_col), sql_ident(id_col)
+    return (scored.withColumn("rn", F.expr(
+        f"row_number() OVER (PARTITION BY {q} ORDER BY adist, {i})"))
+            .where(f"rn <= {int(k)}")
+            .selectExpr(q, i, "adist", "CAST(rn AS BIGINT) AS rn"))
 
 
 def search(segments: list, queries: DataFrame, vectors: DataFrame, *,
@@ -197,9 +212,9 @@ def search(segments: list, queries: DataFrame, vectors: DataFrame, *,
             # qprobe's distinct cell set is tiny and broadcasts
             index = index.join(F.broadcast(qprobe.select("cell").distinct()),
                                "cell", "left_semi")
-        parts.append(_score_probed(index, qprobe, queries, codec,
-                                   id_col=id_col, q_id_col=q_id_col,
-                                   q_vec_col=q_vec_col))
+        parts.append(_score_probed(
+            index, qprobe, codec, id_col=id_col, q_id_col=q_id_col,
+            qside=codec.query_side(queries, q_id_col, q_vec_col)))
     return _topk_by_adist(reduce(DataFrame.unionByName, parts), k,
                           q_id_col, id_col)
 
@@ -212,6 +227,16 @@ def search(segments: list, queries: DataFrame, vectors: DataFrame, *,
 # test_plans). The centroid table and the codec's model artifacts ride
 # along as tiny driver-local tables, so serving never touches the raw
 # vectors or recomputes a model artifact.
+#
+# A serve's query side is driver work: a bounded batch is collected once
+# and, in fast mode, probed and given its codec query side (SQ: the
+# vector; PQ: numpy LUTs for <= 32 queries) on the driver, shipped as
+# local relations. Those answer on the driver, so the serve runs the
+# batch collect plus the pruned scan and its top-k -- 3 jobs, where the
+# Spark probe, its localization and the LUT aggregation ran 7 (SQ) and 9
+# (PQ); tests/test_plans.py pins both counts. Exact mode, an over-budget
+# batch and an empty one keep the Spark probe: it is the oracle
+# reference and the path that stays safe at scale.
 
 def store(index: DataFrame, path: str, codec: Codec, *, n_cells: int = 8,
           centroids: list | None = None,
@@ -303,6 +328,38 @@ def stored_compact(vectors: DataFrame, path: str, codec: Codec, *,
     return guarded_store_swap(path, build, retain_history=retain_history)
 
 
+def _local_queries(queries: DataFrame, q_id_col: str, q_vec_col: str):
+    """``(local_frame, rows)`` of a query batch within the localize
+    budget, else ``(None, None)`` -- one bounded collect."""
+    return localize_if_small(queries.select(q_id_col, q_vec_col))
+
+
+def _local_probe(spark, path: str, codec: Codec, qlocal: DataFrame,
+                 qrows: list, *, n_probe: int, coarse_dim: int):
+    """``(qcells, cells)`` for a batch on the driver: ``qcells`` is ONE
+    local relation of each query's probed cells
+    (similarity.probe_cells_local over the stored centroid rows) next
+    to its codec query side -- one relation, because each broadcast
+    local relation costs a job -- and ``cells`` the sorted probed-cell
+    set. None where the driver probe cannot rank or the codec builds
+    this batch's query side in Spark (PQ above the driver-LUT
+    crossover): the Spark probe runs instead."""
+    vecs = [r[1] for r in qrows]
+    cents, csch = read_artifact_rows(f"{path}/centroids")
+    probed = probe_cells_local(vecs, cents, n_probe=n_probe,
+                               coarse_dim=coarse_dim)
+    q_id, q_vec = qlocal.schema.fields
+    side = probed and codec.local_query_side(vecs, q_vec.dataType)
+    if not side:
+        return None
+    fields, values = side
+    rows = [(r[0], c, *v) for r, cs, v in zip(qrows, probed, values)
+            for c in cs]
+    schema = StructType([q_id, StructField("cell", csch["_cid"].dataType),
+                         *fields])
+    return local_df(spark, rows, schema), sorted({r[1] for r in rows})
+
+
 def stored_topk(spark, path: str, queries: DataFrame, *, k: int = 5,
                 n_probe: int = 2, q_id_col: str = "q_id",
                 q_vec_col: str = "q_vec") -> DataFrame:
@@ -310,27 +367,50 @@ def stored_topk(spark, path: str, queries: DataFrame, *, k: int = 5,
     probe the stored centroid table, the probed-cell set prunes the
     index scan to those partition directories (static
     PartitionFilters), and the ranking is ``search``'s scoring pass --
-    value-identical to the in-memory search over the same index."""
+    value-identical to the in-memory search over the same index.
+
+    In fast mode a batch within the localize budget is collected once,
+    and its probe and codec query side are computed on the driver and
+    shipped as one local relation (``_local_probe``; see the section
+    comment). Otherwise the probe is the Spark ``_probe`` over the
+    stored centroid table: localized when small, else checkpointed --
+    and a batch already known to be over budget skips the localize
+    attempt."""
     codec, coarse_dim, id_col = _stored_meta(path)
-    cents = artifact_df(spark, f"{path}/centroids")
-    qprobe = _probe(queries, cents, n_probe=n_probe, coarse_dim=coarse_dim,
-                    q_id_col=q_id_col, q_vec_col=q_vec_col)
-    # qprobe is consumed twice -- the probed-cell collect and the
-    # candidate join. For the bounded serving case ONE limit-collect
-    # localizes it instead of paying a localCheckpoint job plus a
-    # distinct+collect job per serve; an over-budget query batch keeps
-    # the distributed form (no unbounded driver collect).
-    qlocal, qrows = localize_if_small(qprobe)
-    if qlocal is not None:
-        qprobe, cells = qlocal, sorted({r[1] for r in qrows})
+    qrows = local = None
+    if not exact_mode():
+        qlocal, qrows = _local_queries(queries, q_id_col, q_vec_col)
+        if qrows:
+            queries = qlocal
+            local = _local_probe(spark, path, codec, qlocal, qrows,
+                                 n_probe=n_probe, coarse_dim=coarse_dim)
+    qside = None
+    if local is not None:
+        qcells, cells = local
     else:
-        qprobe = qprobe.localCheckpoint(eager=True)
-        cells = [r[0] for r in qprobe.select("cell").distinct().collect()]
+        cents = artifact_df(spark, f"{path}/centroids")
+        qcells = _probe(queries, cents, n_probe=n_probe,
+                        coarse_dim=coarse_dim, q_id_col=q_id_col,
+                        q_vec_col=q_vec_col)
+        # the probe is consumed twice -- the probed-cell collect and the
+        # candidate join. For the bounded serving case ONE limit-collect
+        # localizes it instead of paying a localCheckpoint job plus a
+        # distinct+collect job per serve; an over-budget query batch
+        # keeps the distributed form (no unbounded driver collect).
+        over = not exact_mode() and qrows is None
+        plocal, prows = (None, None) if over else localize_if_small(qcells)
+        if plocal is not None:
+            qcells, cells = plocal, sorted({r[1] for r in prows})
+        else:
+            qcells = qcells.localCheckpoint(eager=True)
+            cells = [r[0] for r in
+                     qcells.select("cell").distinct().collect()]
+        qside = codec.query_side(queries, q_id_col, q_vec_col)
     # explicit footer-derived schema: no inference job per serve; the
     # probed-cell IN list stays a static PartitionFilters prune
     isch = table_schema(f"{path}/index", {"cell": IntegerType()})
     ird = spark.read if isch is None else spark.read.schema(isch)
     pruned = ird.parquet(f"{path}/index").where(F.col("cell").isin(cells))
-    scored = _score_probed(pruned, qprobe, queries, codec, id_col=id_col,
-                           q_id_col=q_id_col, q_vec_col=q_vec_col)
+    scored = _score_probed(pruned, qcells, codec, id_col=id_col,
+                           q_id_col=q_id_col, qside=qside)
     return _topk_by_adist(scored, k, q_id_col, id_col)

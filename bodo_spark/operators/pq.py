@@ -39,10 +39,11 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
+from pyspark.sql.types import ArrayType, DoubleType
 
 from . import ivf
 from .ivf import Codec, _topk_by_adist
-from .similarity import _ensure_scan_width, _round_half_up, dot
+from .similarity import _ensure_scan_width, _round_half_up, dot, sql_ident
 
 __all__ = ["lowest_id_pq_codebooks", "train_pq_codebooks", "pq_encode",
            "pq_topk", "pq_search", "ivf_pq_index", "ivf_pq_topk",
@@ -123,6 +124,9 @@ def train_pq_codebooks(vectors: DataFrame, *, m: int = 8, k: int = 256,
                     best[worst] = -np.inf  # don't reuse for another empty
         cbs.append([[float(x) for x in row] for row in C])
     return cbs
+
+
+_LUT_TYPE = ArrayType(ArrayType(DoubleType()))
 
 
 def _codebook_frame(spark, cbs: list) -> DataFrame:
@@ -280,6 +284,15 @@ def _np_luts(books: tuple, qv) -> list:
             for j in range(len(CW))]
 
 
+def _lut_values(codebooks: list, qvecs: list) -> list:
+    """Per query vector, its m x k ADC lookup table as nested lists
+    (the ``_lut`` value) -- numpy gemv per subspace."""
+    import numpy as np
+    books = _books(codebooks)
+    return [[lut.tolist() for lut in _np_luts(
+        books, np.array(list(v), dtype=np.float64))] for v in qvecs]
+
+
 def _driver_luts(spark, qrows: list, codebooks: list, *,
                  q_id_col: str = "q_id",
                  q_vec_col: str = "q_vec") -> DataFrame:
@@ -291,18 +304,13 @@ def _driver_luts(spark, qrows: list, codebooks: list, *,
     unchanged. Numpy's gemm is a pairwise/SIMD summation, not the
     sequential fold the DuckDB oracles replay, so a 9-dp boundary can
     round differently in rare ulp cases -- this path is therefore
-    FAST-MODE ONLY (pq_topk keeps the Spark LUTs under the exact gate,
-    the retrieval-tier _sum6 policy)."""
-    import numpy as np
-    books = _books(codebooks)
-    data = [(r[q_id_col], [lut.tolist() for lut in _np_luts(
-        books, np.array(list(r[q_vec_col]), dtype=np.float64))])
-        for r in qrows]
-    from pyspark.sql.types import (ArrayType, DoubleType, StructField,
-                                   StructType)
-    schema = StructType([
-        StructField(q_id_col, _py_type(data[0][0])),
-        StructField("_lut", ArrayType(ArrayType(DoubleType())))])
+    FAST-MODE ONLY (_driver_lut_rows never picks it under the exact
+    gate, the retrieval-tier _sum6 policy)."""
+    data = list(zip([r[q_id_col] for r in qrows], _lut_values(
+        codebooks, [r[q_vec_col] for r in qrows])))
+    from pyspark.sql.types import StructField, StructType
+    schema = StructType([StructField(q_id_col, _py_type(data[0][0])),
+                         StructField("_lut", _LUT_TYPE)])
     from ..rowframe import local_df
     return local_df(spark, data, schema)
 
@@ -326,16 +334,41 @@ def adc_score(exact: bool, code_col: str = "code") -> Column:
     bit-identical to the oracle's SUM(DECIMAL)); otherwise a plain
     double fold -- the fold order is fixed (sequential over m), only
     the representation differs, and fast mode trades the cross-engine
-    bit guarantee for m plain adds per row."""
-    looked = F.zip_with(F.col(code_col), F.col("_lut"),
-                        lambda c, row: F.element_at(row, c + 1))
+    bit guarantee for m plain adds per row. SQL text: one JVM parse."""
+    looked = (f"zip_with({sql_ident(code_col)}, _lut, "
+              "(c, row) -> element_at(row, c + 1))")
     if exact:
-        return F.round(F.aggregate(
-            looked, F.lit(0).cast("decimal(28,9)"),
-            lambda acc, x: (acc + x.cast("decimal(28,9)"))
-            .cast("decimal(28,9)")).cast("double"), 6)
-    return F.round(F.aggregate(looked, F.lit(0.0),
-                               lambda acc, x: acc + x), 6)
+        return F.expr(
+            f"round(CAST(aggregate({looked}, CAST(0 AS DECIMAL(28,9)), "
+            "(acc, x) -> CAST(acc + CAST(x AS DECIMAL(28,9)) "
+            "AS DECIMAL(28,9))) AS DOUBLE), 6)")
+    return F.expr(f"round(aggregate({looked}, 0.0D, (acc, x) -> acc + x), 6)")
+
+
+def _driver_lut_rows(queries: DataFrame | None = None, *,
+                     qrows: list | None = None, q_id_col: str = "q_id",
+                     q_vec_col: str = "q_vec", luts: str = "auto",
+                     max_driver_queries: int = 32) -> list | None:
+    """The one place the driver/Spark LUT choice is made: the query
+    rows whose LUTs the driver builds (_driver_luts), or None for the
+    Spark LUT job (_query_luts). 'driver' takes every row; 'auto' takes
+    a fast-mode batch of at most ``max_driver_queries`` rows -- the
+    A/B-measured crossover -- read from ``qrows`` when the caller
+    already holds the batch (``queries`` may then be None), else from
+    one take(max_driver_queries + 1). Exact mode and 'spark' keep the
+    Spark LUTs: numpy's pairwise gemm summation can round a 9-dp LUT
+    boundary differently from the oracle's sequential fold. An EMPTY
+    batch also gets None: the Spark path returns the empty result."""
+    from ..modes import exact_mode
+    if luts == "spark" or (luts == "auto" and exact_mode()):
+        return None
+    if qrows is None:
+        sel = queries.select(q_id_col, q_vec_col)
+        qrows = (sel.collect() if luts == "driver"
+                 else sel.take(max_driver_queries + 1))
+    if luts == "auto" and len(qrows) > max_driver_queries:
+        return None
+    return qrows or None
 
 
 def pq_topk(codes: DataFrame, queries: DataFrame, codebooks: list, *,
@@ -379,24 +412,14 @@ def pq_topk(codes: DataFrame, queries: DataFrame, codebooks: list, *,
     from ..modes import exact_mode
     if luts not in ("auto", "spark", "driver"):
         raise ValueError(f"luts must be auto|spark|driver, got {luts!r}")
-    m = len(codebooks)
-    qrows = None
-    if luts == "driver":
-        qrows = queries.select(q_id_col, q_vec_col).collect()
-    elif luts == "auto" and not exact_mode():
-        head = (queries.select(q_id_col, q_vec_col)
-                .take(max_driver_queries + 1))
-        if len(head) <= max_driver_queries:
-            qrows = head
-    # an EMPTY query frame must take the Spark-LUT path in every mode:
-    # _driver_luts derives the q_id type from the first row, so [] would
-    # crash where the Spark path correctly returns an empty result
-    if qrows:
-        luts_df = _driver_luts(queries.sparkSession, qrows, codebooks,
-                               q_id_col=q_id_col, q_vec_col=q_vec_col)
-    else:
-        luts_df = _query_luts(queries, codebooks, q_id_col=q_id_col,
-                              q_vec_col=q_vec_col)
+    qrows = _driver_lut_rows(queries, q_id_col=q_id_col,
+                             q_vec_col=q_vec_col, luts=luts,
+                             max_driver_queries=max_driver_queries)
+    luts_df = (_driver_luts(queries.sparkSession, qrows, codebooks,
+                            q_id_col=q_id_col, q_vec_col=q_vec_col)
+               if qrows else
+               _query_luts(queries, codebooks, q_id_col=q_id_col,
+                           q_vec_col=q_vec_col))
     scored = (codes.crossJoin(F.broadcast(luts_df))
               .select(q_id_col, id_col,
                       adc_score(exact_mode(), code_col).alias("adist")))
@@ -409,7 +432,6 @@ def pq_topk(codes: DataFrame, queries: DataFrame, codebooks: list, *,
     # explicit refine_vec_col wins; the positional fallback validates the
     # chosen column IS an array (a refine frame with, e.g., a label column
     # listed first would otherwise silently re-rank on the wrong column)
-    from pyspark.sql.types import ArrayType
     if refine_vec_col is not None:
         vec_col = refine_vec_col
         if vec_col not in refine.columns:
@@ -511,8 +533,11 @@ def _pq_search_fused(vectors: DataFrame, codebooks: list, qrows: list,
 class PQ(Codec):
     """The IVF codec for PQ codes: m codeword ids per vector under
     ``codebooks`` (cbs[j][c] = list[float] of length d/m), scored by ADC
-    against per-query Spark LUTs in the decimal fold (value-identical
-    in both modes). No row prep: the score reads the code directly."""
+    against per-query LUTs in the decimal fold (value-identical in both
+    modes). The LUTs are Spark's, or -- for a small fast-mode batch a
+    stored serve holds on the driver -- the driver's
+    (``local_query_side``). No row prep: the score reads the code
+    directly."""
 
     name = "pq"
     meta_ddl = "codebooks array<array<array<double>>>"
@@ -554,6 +579,14 @@ class PQ(Codec):
                    q_vec_col: str) -> DataFrame:
         return _query_luts(queries, self.codebooks, q_id_col=q_id_col,
                            q_vec_col=q_vec_col)
+
+    def local_query_side(self, qvecs: list, q_vec_type):
+        # pq_topk's driver/Spark LUT choice, over the batch in hand
+        if not _driver_lut_rows(qrows=qvecs):
+            return None
+        from pyspark.sql.types import StructField
+        return ([StructField("_lut", _LUT_TYPE)],
+                [(lut,) for lut in _lut_values(self.codebooks, qvecs)])
 
     def score(self) -> Column:
         return adc_score(True)

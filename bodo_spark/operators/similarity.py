@@ -32,6 +32,20 @@ def dot(a: Column, b: Column) -> Column:
         F.lit(0.0), lambda acc, x: acc + x)
 
 
+def sql_ident(name: str) -> str:
+    """``name`` as a quoted SQL identifier."""
+    return "`" + name.replace("`", "``") + "`"
+
+
+def dot_sql(a: str, b: str) -> str:
+    """``dot`` as SQL text over two array expressions: the same fold,
+    parsed by ONE JVM call (``F.expr``) instead of one py4j round trip
+    per Column node -- 126-300 of them for a Column-built dot."""
+    return (f"aggregate(zip_with({a}, {b}, "
+            "(x, y) -> CAST(x AS DOUBLE) * CAST(y AS DOUBLE)), "
+            "0.0D, (acc, x) -> acc + x)")
+
+
 def cosine(a: Column, b: Column) -> Column:
     return dot(a, b) / (F.sqrt(dot(a, a)) * F.sqrt(dot(b, b)))
 
@@ -241,12 +255,12 @@ def _cell_cosines(df: DataFrame, cents: DataFrame, vec_col: str,
     centroid, rounded to 9 dp -- the one routing score every IVF path
     ranks cells by (rows x n_centroids narrow intermediates; no literal
     expression trees, which cost seconds of codegen at even 8x64
-    floats)."""
-    tv = F.slice(F.col(vec_col), 1, coarse_dim)
-    tn = F.sqrt(dot(tv, tv))
+    floats). SQL text: one JVM parse, not one py4j call per node."""
+    tv = f"slice({sql_ident(vec_col)}, 1, {int(coarse_dim)})"
     return (df.crossJoin(F.broadcast(cents))
-            .withColumn("_ccos", F.round(dot(tv, F.col("_cvec"))
-                                         / (tn * F.col("_cn")), 9)))
+            .withColumn("_ccos", F.expr(
+                f"round({dot_sql(tv, '_cvec')} "
+                f"/ (sqrt({dot_sql(tv, tv)}) * _cn), 9)")))
 
 
 def assign_nearest_cell(df: DataFrame, cents: DataFrame, *, vec_col: str,
@@ -282,6 +296,36 @@ def probe_cells(df: DataFrame, cents: DataFrame, *, n_probe: int,
             .where(F.col("_crn") <= n_probe)
             .select(*df.columns, F.col("_cid").alias(out_col)))
 
+
+def probe_cells_local(qvecs: list, cent_rows: list, *, n_probe: int,
+                      coarse_dim: int = 16) -> list | None:
+    """The driver twin of probe_cells for a bounded query batch: per
+    query vector, its ``n_probe`` cell ids ranked by (round-half-up 9 dp
+    cosine desc, lowest ``_cid``), from the ``(_cid, _cvec, _cn)``
+    centroid rows as plain dicts. The cosine is cell_assigner_udf's
+    (unit rows, one gemm), which can differ from the JVM's sequential
+    fold only in the last bits, so this is a fast-mode path. Returns
+    None -- the caller keeps the Spark probe -- where the JVM cosine is
+    null or NaN: a null, short or non-finite vector, or a zero norm on
+    either side."""
+    import numpy as np
+
+    if not qvecs or not cent_rows or any(v is None for v in qvecs):
+        return None
+    cids = np.array([r["_cid"] for r in cent_rows])
+    C = [list(r["_cvec"] or []) for r in cent_rows]
+    X = [list(v)[:coarse_dim] for v in qvecs]
+    width = len(C[0])
+    if not 0 < width <= coarse_dim or any(len(v) != width for v in C + X):
+        return None
+    C, X = (np.array(M, dtype=np.float64) for M in (C, X))
+    if not (np.isfinite(C).all() and np.isfinite(X).all()
+            and np.linalg.norm(C, axis=1).all()
+            and np.linalg.norm(X, axis=1).all()):
+        return None
+    sim = _cell_cosines_np(X, _unit_rows(C))
+    return [[int(cids[i]) for i in np.lexsort((cids, -row))[:n_probe]]
+            for row in sim]
 
 
 def _round_half_up(x, ndigits: int):
@@ -413,18 +457,30 @@ def cell_assigner_udf(centroids: list, coarse_dim: int = 16):
     lowest cid via first-argmax)."""
     import numpy as np
 
-    C = np.array([list(c)[:coarse_dim] for c in centroids],
-                 dtype=np.float64)
-    Cn = C / np.maximum(np.linalg.norm(C, axis=1, keepdims=True), 1e-300)
+    Cn = _unit_rows(np.array([list(c)[:coarse_dim] for c in centroids],
+                             dtype=np.float64))
 
     @F.pandas_udf("long")
     def _cell_of(vs: pd.Series) -> pd.Series:
         X = np.array(vs.tolist(), dtype=np.float64)[:, :coarse_dim]
-        nrm = np.maximum(np.linalg.norm(X, axis=1, keepdims=True), 1e-300)
-        sim = _round_half_up((X / nrm) @ Cn.T, 9)
-        return pd.Series(np.argmax(sim, axis=1).astype("int64"))
+        return pd.Series(np.argmax(_cell_cosines_np(X, Cn),
+                                   axis=1).astype("int64"))
 
     return _cell_of
+
+
+def _unit_rows(M):
+    """The rows of float64 matrix ``M`` scaled to unit l2 norm (a zero
+    row stays zero)."""
+    import numpy as np
+    return M / np.maximum(np.linalg.norm(M, axis=1, keepdims=True), 1e-300)
+
+
+def _cell_cosines_np(X, Cn):
+    """``_ccos`` in numpy: round-half-up 9 dp cosine of every row of
+    ``X`` against every unit centroid row of ``Cn`` -- one gemm, shared
+    by the gemm cell assigner and the driver probe."""
+    return _round_half_up(_unit_rows(X) @ Cn.T, 9)
 
 
 def semantic_cell_index(vectors: DataFrame, centroids: list, *,

@@ -41,7 +41,7 @@ from pyspark.sql import functions as F
 
 from . import ivf
 from .ivf import Codec, _topk_by_adist
-from .similarity import dot
+from .similarity import dot_sql, sql_ident
 
 __all__ = ["sq_train", "sq_encode", "sq_code_expr", "sq_topk",
            "ivf_sq_index",
@@ -90,17 +90,17 @@ def _bound_arrays(los: list, his: list):
     return lo, hi
 
 
-def _bounds(los: list, his: list, levels: int) -> Column:
+def _bounds(los: list, his: list, levels: int) -> str:
     """The d per-dimension bounds as ONE literal array<struct<lo, rng,
-    step, flat>>, zipped element-wise with a vector or code array:
-    rng = hi - lo and step = rng / levels are the IEEE doubles the
-    per-element expression would compute, and flat is Spark's hi == lo
-    (NaN equals NaN), so each element reads struct fields and does no
-    index lookup.
+    step, flat>> in SQL text, zipped element-wise with a vector or code
+    array: rng = hi - lo and step = rng / levels are the IEEE doubles
+    the per-element expression would compute, and flat is Spark's
+    hi == lo (NaN equals NaN), so each element reads struct fields and
+    does no index lookup.
 
-    The literal is SQL text parsed by one JVM call: built as a Column
-    per value, every value is a py4j round trip -- about 0.5 s per
-    call for this struct array at d=64."""
+    SQL text is parsed by one JVM call: built as a Column per value,
+    every value is a py4j round trip -- about 0.5 s per call for this
+    struct array at d=64."""
     items = []
     for lo, hi in zip(map(float, los), map(float, his)):
         flat = lo == hi or (math.isnan(lo) and math.isnan(hi))
@@ -109,7 +109,7 @@ def _bounds(los: list, his: list, levels: int) -> Column:
             f"'rng', {_sql_double(hi - lo)}, "
             f"'step', {_sql_double((hi - lo) / levels)}, "
             f"'flat', {str(flat).lower()})")
-    return F.expr(f"array({', '.join(items)})")
+    return f"array({', '.join(items)})"
 
 
 def sq_code_expr(vec_col, los: list, his: list, *,
@@ -126,7 +126,7 @@ def sq_code_expr(vec_col, los: list, his: list, *,
     levels = (1 << bits) - 1
     v = F.col(vec_col) if isinstance(vec_col, str) else vec_col
     return F.zip_with(
-        v, _bounds(los, his, levels),
+        v, F.expr(_bounds(los, his, levels)),
         lambda x, b: F.when(b["flat"], F.lit(0)).otherwise(
             F.least(F.lit(levels), F.greatest(F.lit(0), F.floor(
                 (x.cast("double") - b["lo"]) / b["rng"]
@@ -142,14 +142,15 @@ def sq_encode(vectors: DataFrame, los: list, his: list, *,
     return vectors.select(id_col, code.alias("code"))
 
 
-def sq_dequantize(code_col, los: list, his: list, *,
-                  bits: int = 8):
-    """Column expression reconstructing array<double> from a code
-    array: dq_i = lo_i + code_i * ((hi_i - lo_i) / levels)."""
-    c = F.col(code_col) if isinstance(code_col, str) else code_col
-    return F.zip_with(
-        c, _bounds(los, his, (1 << bits) - 1),
-        lambda v, b: b["lo"] + v.cast("double") * b["step"])
+def sq_dequantize(code_col: str, los: list, his: list, *,
+                  bits: int = 8) -> Column:
+    """Column expression reconstructing array<double> from the code
+    array column ``code_col``: dq_i = lo_i + code_i * ((hi_i - lo_i) /
+    levels). SQL text: one JVM parse for the whole expression."""
+    return F.expr(
+        f"zip_with({sql_ident(code_col)}, "
+        f"{_bounds(los, his, (1 << bits) - 1)}, "
+        "(v, b) -> b.lo + CAST(v AS DOUBLE) * b.step)")
 
 
 def sq_topk(codes: DataFrame, queries: DataFrame, los: list, his: list, *,
@@ -209,14 +210,10 @@ class SQ8(Codec):
         # row before the query join (the brute_force_topk norm trick)
         dq = sq_dequantize(code_col, self.los, self.his, bits=self.bits)
         return (rows.withColumn("_dq", dq)
-                .withColumn("_dd", dot(F.col("_dq"), F.col("_dq"))))
-
-    def query_side(self, queries: DataFrame, q_id_col: str,
-                   q_vec_col: str) -> DataFrame:
-        return queries.select(q_id_col, F.col(q_vec_col).alias("_qv"))
+                .withColumn("_dd", F.expr(dot_sql("_dq", "_dq"))))
 
     def score(self) -> Column:
-        return F.round(F.col("_dd") - 2 * dot(F.col("_dq"), F.col("_qv")), 6)
+        return F.expr(f"round(_dd - 2 * {dot_sql('_dq', '_qv')}, 6)")
 
 
 # --------------------------------------------------------------------------

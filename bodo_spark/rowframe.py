@@ -102,17 +102,21 @@ def localize_if_small(df: DataFrame, budget_rows: int = 4096):
     at most ``budget_rows`` rows, else ``(None, None)`` -- the caller
     keeps its scale-safe distributed plan (localCheckpoint + join).
 
-    Why: the stored-serve probe frames (qprobe: n_queries x n_probe
-    rows) feed TWO consumers (a cell-list collect and the candidate
-    join). The distributed form pays a localCheckpoint materialization
-    job PLUS a distinct+collect job per serve; for the bounded serving
-    case ONE limit-collect replaces both. The rebuilt frame is a
-    local_df: on its arrow path (arrow-safe schemas, which the probe
-    frames are) it plans as a LocalTableScan whose broadcast collects
-    driver-locally; on the pickle fallback it is a one-partition RDD
-    frame whose broadcast still schedules one small job. The limit
-    probe bounds driver memory: an over-budget frame costs one wasted
-    CollectLimit (which stops early) and falls back unchanged."""
+    Why: the stored IVF serve (operators/ivf.stored_topk) needs its
+    query batch on the driver. In fast mode it localizes the batch
+    itself and computes the probe and query side there; in exact mode
+    it localizes the Spark probe frame (n_queries x n_probe rows),
+    which feeds TWO consumers (a cell-list collect and the candidate
+    join) -- the distributed form pays a localCheckpoint
+    materialization job PLUS a distinct+collect job per serve, and ONE
+    limit-collect replaces both. The rebuilt frame is a local_df: on
+    its arrow path (arrow-safe schemas) it plans as a LocalTableScan;
+    on the pickle fallback it is a one-partition RDD frame. Either way
+    a broadcast of it schedules one small job (LocalTableScanExec
+    answers collect and take on the driver, but a broadcast reads it
+    through an RDD). The limit probe bounds driver memory: an
+    over-budget frame costs one wasted CollectLimit (which stops
+    early) and falls back unchanged."""
     rows = df.limit(budget_rows + 1).collect()
     if len(rows) > budget_rows:
         return None, None

@@ -465,8 +465,31 @@ def _stored_ivf(spark, tmp_path, codec):
         PQ.ivf_pq_topk(idx, q, emb, cbs, k=k, n_probe=n_probe, n_cells=8)
 
 
+@pytest.fixture(scope="module")
+def stored_ivf(spark, tmp_path_factory):
+    """``_stored_ivf`` built once per codec for the module's read-only
+    serving tests."""
+    cache = {}
+
+    def get(codec):
+        if codec not in cache:
+            cache[codec] = _stored_ivf(spark, tmp_path_factory.mktemp(codec),
+                                       codec)
+        return cache[codec]
+    return get
+
+
+def _local_batch(spark, emb, n):
+    """The first ``n`` corpus vectors as a serving-shaped query batch: a
+    local relation, as a server holds the queries it received."""
+    from bodo_spark.rowframe import local_df
+    rows = emb.where(F.col("vec_id") < n).select("vec_id", "embedding")
+    return local_df(spark, [tuple(r) for r in rows.collect()],
+                    "q_id bigint, q_vec array<float>")
+
+
 @pytest.mark.parametrize("codec", ["sq", "pq"])
-def test_stored_serving_partition_prunes(spark, tmp_path, codec):
+def test_stored_serving_partition_prunes(spark, stored_ivf, codec):
     """Stored-IVF serving plan contract, for every codec: the index
     scan carries the probed-cell IN list as PartitionFilters -- only
     the probed cells' directories are opened (serving I/O bound by the
@@ -474,8 +497,7 @@ def test_stored_serving_partition_prunes(spark, tmp_path, codec):
     in-memory search's."""
     import re
 
-    emb, path, stored_topk, memory_topk = _stored_ivf(spark, tmp_path,
-                                                      codec)
+    emb, path, stored_topk, memory_topk = stored_ivf(codec)
     q = (emb.where("vec_id < 2")
          .selectExpr("vec_id AS q_id", "embedding AS q_vec"))
     out = stored_topk(spark, path, q, k=3, n_probe=2)
@@ -496,43 +518,85 @@ def test_stored_serving_partition_prunes(spark, tmp_path, codec):
     ("pq", "codebooks array<array<array<double>>>, coarse_dim int, "
            "id_col string"),
 ], ids=["sq", "pq"])
-def test_stored_meta_schema_pinned(spark, tmp_path, codec, ddl):
+def test_stored_meta_schema_pinned(stored_ivf, codec, ddl):
     """The stored ``meta`` row keeps the exact schema stores have always
     been written with, so a store written by an earlier release still
     serves (the stored top-k recognises its codec from these fields)."""
     from pyspark.sql.types import StructType
 
     from bodo_spark.rowframe import read_artifact_rows
-    _, path, _, _ = _stored_ivf(spark, tmp_path, codec)
+    _, path, _, _ = stored_ivf(codec)
     assert read_artifact_rows(f"{path}/meta")[1] == StructType.fromDDL(ddl)
 
 
 @pytest.mark.parametrize("codec", ["sq", "pq"])
-def test_stored_topk_over_budget_fallback(spark, tmp_path, monkeypatch,
+def test_stored_topk_over_budget_fallback(spark, stored_ivf, monkeypatch,
                                           codec):
-    """The distributed branch of the stored top-k -- taken when
-    localize_if_small reports the probe frame over budget: the probe
-    frame is localCheckpointed and its cells distinct-collected --
-    serves exactly the rows of the localized branch."""
+    """The distributed branch of the stored top-k -- taken when the
+    query batch is over the localize budget: the Spark probe is
+    localCheckpointed and its cells distinct-collected, with no second
+    localize attempt on the probe (the batch is known to be over
+    budget) -- serves exactly the rows of the localized branch."""
     from bodo_spark.operators import ivf
 
-    emb, path, stored_topk, _ = _stored_ivf(spark, tmp_path, codec)
+    monkeypatch.setenv("BODO_SPARK_EXACT", "0")
+    emb, path, stored_topk, _ = stored_ivf(codec)
     q = (emb.where("vec_id < 3")
          .selectExpr("vec_id AS q_id", "embedding AS q_vec"))
     local = sorted(map(tuple, stored_topk(spark, path, q, k=4,
                                           n_probe=3).collect()))
-    calls = []
+    batches, probes = [], []
 
-    def over_budget(df, budget_rows=4096):
-        calls.append(budget_rows)
+    def over_budget(queries, q_id_col, q_vec_col):
+        batches.append(q_id_col)
         return None, None
 
-    monkeypatch.setattr(ivf, "localize_if_small", over_budget)
+    def localize(df, budget_rows=4096):
+        probes.append(df)
+        return None, None
+
+    monkeypatch.setattr(ivf, "_local_queries", over_budget)
+    monkeypatch.setattr(ivf, "localize_if_small", localize)
     out = stored_topk(spark, path, q, k=4, n_probe=3)
-    assert calls
+    assert batches and not probes
     opt = out._jdf.queryExecution().optimizedPlan().toString()
     assert "LogicalRDD" in opt, opt  # the checkpointed probe frame
     assert sorted(map(tuple, out.collect())) == local
+
+
+@pytest.mark.parametrize("codec,exact,budget", [
+    ("sq", "0", 3), ("pq", "0", 3), ("sq", "1", 7), ("pq", "1", 9)])
+def test_stored_topk_job_budget(spark, stored_ivf, monkeypatch, codec,
+                                exact, budget):
+    """Job-count contract of a stored serve over a local query batch.
+    In fast mode the probe and the query side are driver work shipped
+    as one local relation, so the serve runs its broadcast, the pruned
+    scan and the top-k result: 3 jobs, where the Spark probe, its
+    localization and (PQ) the LUT aggregation ran 7 (SQ) and 9 (PQ).
+    Exact mode keeps that Spark path, at no more than those counts.
+    Rows equal the in-memory search's either way."""
+    monkeypatch.setenv("BODO_SPARK_EXACT", exact)
+    emb, path, stored_topk, memory_topk = stored_ivf(codec)
+    q = _local_batch(spark, emb, 3)
+    rows, jobs = spark_jobs(spark, lambda: stored_topk(
+        spark, path, q, k=4, n_probe=3).collect())
+    assert jobs <= budget, jobs
+    assert sorted(map(tuple, rows)) == sorted(map(tuple, memory_topk(
+        q, k=4, n_probe=3).collect()))
+
+
+@pytest.mark.parametrize("codec", ["sq", "pq"])
+def test_stored_topk_empty_batch(spark, stored_ivf, monkeypatch, codec):
+    """An empty query batch serves an empty frame with the schema of a
+    non-empty serve, in both numeric modes."""
+    emb, path, stored_topk, _ = stored_ivf(codec)
+    q = _local_batch(spark, emb, 2)
+    for exact in ("0", "1"):
+        monkeypatch.setenv("BODO_SPARK_EXACT", exact)
+        full = stored_topk(spark, path, q, k=3, n_probe=2)
+        empty = stored_topk(spark, path, q.limit(0), k=3, n_probe=2)
+        assert empty.schema == full.schema, exact
+        assert empty.collect() == [], exact
 
 
 def test_mor_changes_never_scans_base(spark, tmp_path):

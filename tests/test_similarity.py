@@ -749,3 +749,54 @@ def test_pq_stored_topk_production_shape_equals_memory(
     memory = sorted(map(tuple, PQ.ivf_pq_topk(
         idx, q, emb, cbs, k=5, n_probe=3, n_cells=8).collect()))
     assert len(stored) == 10 and stored == memory
+
+
+@pytest.mark.parametrize("exact", ["0", "1"])
+def test_sq_stored_topk_production_shape_equals_memory(
+        spark, production_pq, tmp_path, monkeypatch, exact):
+    """The SQ twin: the stored IVF-SQ8 serve of the same queries returns
+    exactly the in-memory IVF search's rows, in both numeric modes (in
+    fast mode through the driver probe and query side)."""
+    from bodo_spark.operators import sq as Q
+    monkeypatch.setenv("BODO_SPARK_EXACT", exact)
+    emb, _, q = production_pq
+    los, his = Q.sq_train(emb)
+    idx = Q.ivf_sq_index(emb, los, his, n_cells=8)
+    path = str(tmp_path / "sq")
+    Q.sq_store_index(idx, path, los, his, n_cells=8, seed_vectors=emb)
+    stored = sorted(map(tuple, Q.sq_stored_topk(
+        spark, path, q, k=5, n_probe=3).collect()))
+    memory = sorted(map(tuple, Q.ivf_sq_topk(
+        idx, q, emb, los, his, k=5, n_probe=3, n_cells=8).collect()))
+    assert len(stored) == 10 and stored == memory
+
+
+def test_driver_probe_equals_spark_probe(spark):
+    """probe_cells_local's (q_id, cell) rows equal ivf._probe's, over
+    seeded queries and the lowest-id centroids plus a duplicate of
+    centroid 3 as cid 8: the queries near centroid 3 tie on both, and
+    both probes rank the tie to the lower cid. A zero or short vector
+    is left to the Spark probe (None)."""
+    from bodo_spark.operators import ivf
+    from bodo_spark.queries._util import tbl
+    emb = tbl(spark, SF_DIR, "embeddings")
+    seeds = [list(r[0]) for r in emb.orderBy("vec_id").select("embedding")
+             .limit(8).collect()]
+    cents = S._centroid_table(emb, seeds + [seeds[3]], 9, 16, "vec_id",
+                              "embedding")
+    rng = np.random.default_rng(11)
+    dim = len(seeds[0])
+    qv = ([rng.normal(size=dim).tolist() for _ in range(24)]
+          + [(np.array(seeds[3]) + rng.normal(0, 0.01, dim)).tolist()
+             for _ in range(4)])
+    q = spark.createDataFrame(list(enumerate(qv)),
+                              "q_id long, q_vec array<double>")
+    want = sorted(map(tuple, ivf._probe(
+        q, cents, n_probe=3, coarse_dim=16, q_id_col="q_id",
+        q_vec_col="q_vec").collect()))
+    rows = [r.asDict() for r in cents.collect()]
+    local = S.probe_cells_local(qv, rows, n_probe=3, coarse_dim=16)
+    assert sorted((i, c) for i, cs in enumerate(local) for c in cs) == want
+    assert all(cs[:2] == [3, 8] for cs in local[-4:]), local[-4:]
+    assert S.probe_cells_local([[0.0] * dim], rows, n_probe=3) is None
+    assert S.probe_cells_local([qv[0][:8]], rows, n_probe=3) is None
