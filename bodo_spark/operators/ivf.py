@@ -47,7 +47,7 @@ from pyspark.sql.types import IntegerType, StructField, StructType
 
 from ..modes import exact_mode
 from ..rowframe import (artifact_df, local_df, localize_if_small,
-                        read_artifact_rows, table_schema,
+                        read_artifact_rows, table_reader,
                         write_artifact_rows)
 from .merge import publish_lock
 from .similarity import (_centroid_table, _ensure_scan_width,
@@ -408,9 +408,8 @@ def stored_topk(spark, path: str, queries: DataFrame, *, k: int = 5,
         qside = codec.query_side(queries, q_id_col, q_vec_col)
     # explicit footer-derived schema: no inference job per serve; the
     # probed-cell IN list stays a static PartitionFilters prune
-    isch = table_schema(f"{path}/index", {"cell": IntegerType()})
-    ird = spark.read if isch is None else spark.read.schema(isch)
-    pruned = ird.parquet(f"{path}/index").where(F.col("cell").isin(cells))
+    pruned = (table_reader(spark, f"{path}/index", {"cell": IntegerType()})
+              .parquet(f"{path}/index").where(F.col("cell").isin(cells)))
     scored = _score_probed(pruned, qcells, codec, id_col=id_col,
                            q_id_col=q_id_col, qside=qside)
     return _topk_by_adist(scored, k, q_id_col, id_col)

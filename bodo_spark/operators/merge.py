@@ -28,6 +28,8 @@ from typing import Callable, Iterable, Mapping
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..rowframe import data_files, table_reader
+
 
 class ConcurrentWriteError(RuntimeError):
     """A second writer holds (or took) the table's publish lock.
@@ -556,20 +558,14 @@ def merge_into_partitioned(
             "natural part_col mode (the pruned scan cannot match them); "
             "use n_buckets mode")
     if n_buckets is not None:
-        # bucket mode: read ONLY the touched bucket dirs as direct
-        # paths with an explicit schema -- listing O(touched) instead
-        # of O(n_buckets) and no schema-inference job per merge; same
-        # rows as the isin partition-pruned full read (bucket dirs are
-        # int-valued by _bucket_expr, and the slice drops the bucket
-        # col below, so partition-type inference cannot differ).
-        # Natural mode keeps the inference path: its partition-value
-        # type interacts with the stored schema.
+        # natural mode keeps the inference read: its partition-value
+        # type interacts with the stored schema
         tgt = _read_bucket_slice(spark, path, pcol, touched)
     else:
         tgt = spark.read.parquet(path).where(F.col(pcol).isin(touched))
     validate = validate_cross_partition
     if validate is None and n_buckets is None:
-        nfiles = _count_data_files(path)
+        nfiles = len(data_files(path))
         validate = nfiles <= int(auto_validate_max_files)
         if not validate:
             import warnings
@@ -619,15 +615,15 @@ def merge_into_partitioned(
 
 
 def _read_bucket_slice(spark, path: str, pcol: str, touched: list):
-    """Touched-bucket slice of a bucket-partitioned table: direct
-    partition-dir paths under basePath with an explicit schema derived
-    from ONE parquet footer (partitioned tables keep one schema by the
-    publish contract) -- no full-table listing, no schema-inference
-    job. Value-identical to
-    ``spark.read.parquet(path).where(pcol.isin(touched))``."""
-    import pyarrow.parquet as papq
-    from pyspark.sql import types as T
-    from pyspark.sql.pandas.types import from_arrow_schema
+    """Touched-bucket slice of a bucket-partitioned table: the touched
+    bucket dirs as direct paths under basePath -- listing O(touched)
+    instead of O(n_buckets) -- with the first touched dir's footer
+    schema (rowframe.table_reader: no schema-inference job per merge).
+    Value-identical to
+    ``spark.read.parquet(path).where(pcol.isin(touched))``: bucket dirs
+    are int-valued by _bucket_expr and the caller drops the bucket
+    column, so partition-type inference cannot differ."""
+    from pyspark.sql.types import IntegerType
 
     norm = path.rstrip("/")
     paths = [os.path.join(norm, f"{pcol}={int(v)}") for v in touched]
@@ -635,33 +631,8 @@ def _read_bucket_slice(spark, path: str, pcol: str, touched: list):
     if not paths:
         return (spark.read.parquet(norm)
                 .where(F.col(pcol).isin(list(touched))))
-    first = None
-    for r, dirs, files in os.walk(paths[0]):
-        dirs.sort()
-        for fn in sorted(files):
-            if fn.endswith(".parquet"):
-                first = os.path.join(r, fn)
-                break
-        if first:
-            break
-    try:
-        sch = T.StructType(
-            list(from_arrow_schema(papq.read_schema(first)).fields)
-            + [T.StructField(pcol, T.IntegerType())])
-    except Exception:
-        return (spark.read.option("basePath", norm).parquet(*paths))
-    return (spark.read.schema(sch).option("basePath", norm)
-            .parquet(*paths))
-
-
-def _count_data_files(path: str) -> int:
-    """Driver-local data-file count of a parquet table tree (skips
-    _SUCCESS/metadata and hidden files) -- the cheap bound the
-    auto-validation default keys on."""
-    n = 0
-    for _root, _dirs, files in os.walk(path):
-        n += sum(1 for f in files if not f.startswith(("_", ".")))
-    return n
+    return (table_reader(spark, paths[0], {pcol: IntegerType()})
+            .option("basePath", norm).parquet(*paths))
 
 
 def _escape_part(v) -> str:

@@ -63,6 +63,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
+from ..rowframe import data_files, table_reader, table_schema
+
 __all__ = ["mor_init", "mor_apply", "mor_read", "mor_lookup",
            "mor_compact", "mor_maintain", "mor_delta_stats",
            "mor_changes", "mor_expire_snapshots",
@@ -177,92 +179,24 @@ def _tree_bytes(*roots: str) -> int:
     return total
 
 
-def _base_columns(path: str) -> set[str]:
-    """Column set of the MoR base, driver-locally: ONE parquet footer
-    (pyarrow) plus hive partition-col names parsed from the file's
-    directory path. Matches ``spark.read.parquet(base).columns`` --
-    which also takes the schema from a single footer (mergeSchema off)
-    -- without paying a reader construction (listing + schema job)
-    per ``mor_apply`` schema guard. Partitioned tables keep ONE schema
-    by the publish contract, so any footer is representative."""
-    import pyarrow.parquet as papq
-    base = os.path.join(path, "base")
-    first = None
-    for root, dirs, files in os.walk(base):
-        dirs.sort()
-        for fn in sorted(files):
-            if fn.endswith(".parquet"):
-                first = os.path.join(root, fn)
-                break
-        if first:
-            break
-    if first is None:
-        raise FileNotFoundError(f"no base parquet files under {base!r}")
-    cols = set(papq.read_schema(first).names)
-    rel = os.path.relpath(os.path.dirname(first), base)
-    if rel != ".":
-        for part in rel.split(os.sep):
-            if "=" in part:
-                cols.add(part.split("=", 1)[0])
-    return cols
-
-
-def _first_parquet(root: str) -> str | None:
-    """First parquet file under ``root`` in deterministic walk order."""
-    for r, dirs, files in os.walk(root):
-        dirs.sort()
-        for fn in sorted(files):
-            if fn.endswith(".parquet"):
-                return os.path.join(r, fn)
-    return None
-
-
-def _spark_file_schema(f: str):
-    """Spark StructType of one parquet footer, driver-locally (the
-    from_arrow_schema parity rowframe.read_artifact_rows relies on).
-    Returns None when the footer carries a type the arrow<->spark
-    mapping cannot express (caller falls back to Spark inference)."""
-    try:
-        import pyarrow.parquet as papq
-        from pyspark.sql.pandas.types import from_arrow_schema
-        return from_arrow_schema(papq.read_schema(f))
-    except Exception:
+def _part_cols(meta: dict) -> dict | None:
+    """The base's declared hive partition column: the int key-hash
+    bucket of a bucketed table, none for a plain one."""
+    from pyspark.sql.types import IntegerType
+    if meta["n_buckets"] is None:
         return None
-
-
-def _base_schema(base_dir: str, meta: dict):
-    """Full Spark schema of a MoR base (or archived base snapshot) from
-    ONE parquet footer plus the hive bucket partition column -- passed
-    to every base read so reader construction skips the
-    schema-inference job Spark otherwise schedules per
-    ``spark.read.parquet`` call (measured 0.18 -> 0.04 s per
-    construction at 256 bucket dirs; the lifecycle paths construct
-    several readers per operation). Partitioned tables keep ONE schema
-    by the publish contract, so any footer is representative. Returns
-    None (caller uses inference) for exotic footer types."""
-    from pyspark.sql import types as T
-    first = _first_parquet(base_dir)
-    if first is None:
-        return None
-    sch = _spark_file_schema(first)
-    if sch is None:
-        return None
-    if meta["n_buckets"] is not None:
-        sch = T.StructType(
-            list(sch.fields)
-            + [T.StructField(meta["bucket_col"], T.IntegerType())])
-    return sch
+    return {meta["bucket_col"]: IntegerType()}
 
 
 def _read_base(spark, base_path: str, meta: dict,
                touched: list | None = None) -> DataFrame:
-    """Base reader with the driver-derived explicit schema (no
-    inference job). ``touched`` (bucketed tables only): read ONLY those
-    bucket directories as direct paths under basePath -- listing cost
-    O(touched) instead of O(n_buckets), same rows as a partition-
-    pruned full read (compaction's touched-slice path)."""
-    sch = _base_schema(base_path, meta)
-    reader = spark.read if sch is None else spark.read.schema(sch)
+    """Base reader with the footer-derived explicit schema
+    (rowframe.table_reader: no inference job). ``touched`` (bucketed
+    tables only): read ONLY those bucket directories as direct paths
+    under basePath -- listing cost O(touched) instead of
+    O(n_buckets), same rows as a partition-pruned full read
+    (compaction's touched-slice path)."""
+    reader = table_reader(spark, base_path, _part_cols(meta))
     if touched is not None and meta["n_buckets"] is not None:
         paths = [os.path.join(base_path,
                               f"{meta['bucket_col']}={int(t)}")
@@ -276,32 +210,26 @@ def _read_base(spark, base_path: str, meta: dict,
     return reader.parquet(base_path)
 
 
+def _base_fields(spark, path: str, meta: dict) -> set[str]:
+    """Column names of the MoR base -- the footer schema without a
+    reader construction (listing + schema job) per ``mor_apply``
+    schema guard, else the inference reader's."""
+    base_path = os.path.join(path, "base")
+    sch = table_schema(base_path, _part_cols(meta))
+    if sch is None:
+        sch = _read_base(spark, base_path, meta).schema
+    return set(sch.fieldNames())
+
+
 def _read_deltas(spark, segs: list[str]) -> DataFrame:
     """Delta-segment read with schema union across segments: segments
     written before a column evolution lack the new columns and read as
     NULL for them -- exactly the versions-predate-the-column semantics
-    the reconcile needs. The union schema is derived driver-locally
-    from ONE footer per segment (segments are single-write uniform) and
-    passed explicitly, so the read needs neither the schema-inference
-    job nor the distributed ``mergeSchema`` footer pass; field order
-    matches mergeSchema's (first segment's fields, later segments'
-    new fields appended). Falls back to the mergeSchema reader when a
-    footer resists the arrow<->spark mapping."""
-    import pyarrow.parquet as papq
-    try:
-        import pyarrow as pa
-        arrs = []
-        for s in segs:
-            f = _first_parquet(s)
-            if f is None:
-                raise FileNotFoundError(s)
-            arrs.append(papq.read_schema(f))
-        unified = pa.unify_schemas(arrs)
-        from pyspark.sql.pandas.types import from_arrow_schema
-        sch = from_arrow_schema(unified)
-    except Exception:
-        return spark.read.option("mergeSchema", "true").parquet(*segs)
-    return spark.read.schema(sch).parquet(*segs)
+    the reconcile needs. rowframe.table_reader unifies ONE footer per
+    segment (segments are single-write uniform) in mergeSchema's field
+    order, so the read needs neither the schema-inference job nor the
+    distributed ``mergeSchema`` footer pass, which stays the fallback."""
+    return table_reader(spark, segs).parquet(*segs)
 
 
 def _widen_evolved(base: DataFrame, deltas: DataFrame,
@@ -358,7 +286,7 @@ def mor_apply(changes: DataFrame, path: str, *, key_cols: list[str],
     from .merge import publish_lock
     with publish_lock(path, owner="mor_apply"):
         meta = _read_meta(path)
-        base_cols = _base_columns(path)
+        base_cols = _base_fields(changes.sparkSession, path, meta)
         evolved = dict(meta.get("evolved", {}))
         known = base_cols | set(evolved)
         batch = [c for c in changes.columns
@@ -775,18 +703,21 @@ def mor_changes(spark, path: str, *, key_cols: list[str],
 def _tree_rows(spark, *roots: str) -> int:
     """Exact parquet row count of directory trees from file-footer
     metadata, driver-locally (num_rows is a footer field -- no data
-    read, no Spark job). Falls back to a distributed count past 10k
+    read, no Spark job), over the files a Spark scan reads
+    (rowframe.data_files). Falls back to a distributed count past 10k
     files, where a driver-side footer walk would serialize what the
-    executors' aggregate-pushdown count does in parallel."""
+    executors' aggregate-pushdown count does in parallel, and on any
+    unreadable footer."""
+    import pyarrow as pa
     import pyarrow.parquet as papq
-    files = []
-    for root in roots:
-        for r, _dirs, fs in os.walk(root):
-            files += [os.path.join(r, fn) for fn in fs
-                      if fn.endswith(".parquet")]
-    if len(files) > 10_000:
-        return spark.read.parquet(*roots).count()
-    return sum(papq.ParquetFile(f).metadata.num_rows for f in files)
+    files = data_files(*roots)
+    if len(files) <= 10_000:
+        try:
+            return sum(papq.ParquetFile(f).metadata.num_rows
+                       for f in files)
+        except (OSError, pa.ArrowException):
+            pass  # the distributed count below reads what Spark reads
+    return table_reader(spark, list(roots)).parquet(*roots).count()
 
 
 def mor_delta_stats(spark, path: str) -> dict:
@@ -937,7 +868,7 @@ def mor_compact(spark, path: str, *, key_cols: list[str],
             meta["n_buckets"] = None if nbt is None else int(nbt)
         elif nb is not None:
             deltas = _read_deltas(spark, consumed)
-            bcols = _base_columns(path)
+            bcols = _base_fields(spark, path, meta)
             evolving = any(f.name not in bcols
                            for f in deltas.schema.fields
                            if f.name not in ("_seq", _OP))

@@ -349,7 +349,9 @@ def bm25_stored_topk(spark, path: str, queries: DataFrame, *,
     verbatim). This is the read side of the "write partitioned by
     term" claim: per query batch, I/O is bound by the touched shards,
     not the corpus."""
-    from ..rowframe import artifact_df, read_artifact_rows
+    from pyspark.sql.types import IntegerType
+
+    from ..rowframe import artifact_df, read_artifact_rows, table_reader
     nb = int(read_artifact_rows(f"{path}/meta")[0][0]["n_term_buckets"])
     buckets = [r[0] for r in
                (queries.select(F.explode(tokenize_ws(q_text_col))
@@ -358,18 +360,12 @@ def bm25_stored_topk(spark, path: str, queries: DataFrame, *,
                 .distinct().collect())]
     # explicit footer-derived schemas: no inference job per serve; the
     # bucket IN lists stay static PartitionFilters prunes
-    from pyspark.sql.types import IntegerType
-
-    from ..rowframe import table_schema
-    psch = table_schema(f"{path}/postings", {"tbucket": IntegerType()})
-    prd = spark.read if psch is None else spark.read.schema(psch)
-    postings = (prd.parquet(f"{path}/postings")
+    def shards(name):
+        root = f"{path}/{name}"
+        return (table_reader(spark, root, {"tbucket": IntegerType()})
+                .parquet(root)
                 .where(F.col("tbucket").isin(buckets)).drop("tbucket"))
-    tsch = table_schema(f"{path}/term_stats",
-                        {"tbucket": IntegerType()})
-    trd = spark.read if tsch is None else spark.read.schema(tsch)
-    ts = (trd.parquet(f"{path}/term_stats")
-          .where(F.col("tbucket").isin(buckets)).drop("tbucket"))
+    postings, ts = shards("postings"), shards("term_stats")
     cs = artifact_df(spark, f"{path}/corpus_stats")
     return bm25_topk(postings, queries, q_id_col=q_id_col,
                      q_text_col=q_text_col, k=k, k1=k1, b=b,

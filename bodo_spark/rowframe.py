@@ -19,6 +19,8 @@ a cluster-wide empty-task storm.
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame, SparkSession
 
 
@@ -137,59 +139,117 @@ def read_artifact_rows(path: str):
     footer read, AQE planning and a scheduled job -- ~0.2-0.5 s of
     driver fixed cost PER artifact, repeated on every serve/append
     call of every stored index. pyarrow reads the same bytes in
-    single-digit ms with no job. Value parity: parquet is the wire
+    single-digit ms with no job. Value parity: the files are the ones
+    spark.read.parquet reads (``data_files``), parquet is the wire
     format either way, and the Spark schema is derived from the SAME
     arrow schema the file declares (from_arrow_schema), so types match
     what spark.read.parquet would produce."""
-    import glob
-    import os
-
     import pyarrow as pa
     import pyarrow.parquet as pq
     from pyspark.sql.pandas.types import from_arrow_schema
 
-    files = sorted(glob.glob(os.path.join(path, "*.parquet")))
+    files = data_files(path)
     if not files:
         raise FileNotFoundError(f"no parquet files under {path!r}")
     tbl = pa.concat_tables([pq.read_table(f) for f in files])
     return tbl.to_pylist(), from_arrow_schema(tbl.schema)
 
 
-def table_schema(path: str, part_cols: dict | None = None):
-    """Spark StructType of a parquet table from ONE footer, driver-
-    locally, with hive partition columns appended as the declared
-    types -- passed to ``spark.read.schema(...)`` so reader
-    construction skips the schema-inference job Spark otherwise
-    schedules per read (partitioned engine layouts keep ONE schema by
-    the publish contract, so any footer is representative; measured
-    0.18 -> 0.04 s per reader at 256 partition dirs). ``part_cols``:
-    {name: pyspark DataType} in partition order. Returns None when the
-    table has no parquet files yet or the footer carries a type the
-    arrow<->spark mapping cannot express -- callers fall back to the
-    inference read."""
-    import os
+def _listed(name: str) -> bool:
+    """Whether Spark's file index lists a file or directory ``name``:
+    ``InMemoryFileIndex`` skips a name starting with ``_`` that has no
+    ``=`` (``_temporary``, ``_SUCCESS``), a name starting with ``.``
+    (``.crc`` files, hidden staging) and a name ending in
+    ``._COPYING_``."""
+    return not ((name.startswith("_") and "=" not in name)
+                or name.startswith(".") or name.endswith("._COPYING_"))
 
+
+def _walk_data_files(root: str):
+    """Data files under ``root`` in one sorted walk: a directory's
+    files before its subdirectories, both in name order."""
+    for r, dirs, files in os.walk(root):
+        dirs[:] = sorted(d for d in dirs if _listed(d))
+        for fn in sorted(files):
+            if not (fn.endswith(".parquet") and _listed(fn)):
+                continue
+            f = os.path.join(r, fn)
+            try:
+                if os.path.getsize(f) > 0:
+                    yield f
+            except OSError:
+                pass  # removed since the listing
+
+
+def data_files(*roots: str) -> list[str]:
+    """The parquet data files of table trees ``roots``, driver-locally
+    and in sorted walk order -- the files a Spark scan of ``roots``
+    reads. Names Spark's listing skips are skipped with everything
+    under them (``_listed``: a leftover ``_temporary/`` of a crashed
+    writer, hidden ``.x.parquet`` files), and so are zero-byte files,
+    which the Spark scan drops as holding no rows."""
+    return [f for root in roots for f in _walk_data_files(root)]
+
+
+def table_schema(roots, part_cols: dict | None = None):
+    """Spark StructType of a parquet table from its first data file's
+    footer (``data_files`` order), driver-locally, with the declared
+    hive partition columns appended -- passed to
+    ``spark.read.schema(...)`` so reader construction skips the
+    schema-inference job Spark otherwise schedules per read (measured
+    0.18 -> 0.04 s per reader at 256 partition dirs). Partitioned
+    engine layouts keep ONE schema by the publish contract, so the
+    first footer is representative.
+
+    ``roots``: one table root, or a list of roots (MoR delta segments,
+    each single-write uniform) whose first footers are unified the way
+    ``mergeSchema`` orders fields: the first root's fields, then each
+    later root's new fields appended. ``part_cols``: {name: pyspark
+    DataType} in partition order.
+
+    None means "infer": it is returned when a root has no data file,
+    a footer is unreadable or carries a type the arrow<->spark mapping
+    cannot express, the roots' footers conflict, or the first file
+    sits under an undeclared ``name=value`` directory. Callers then
+    run the inference read (``table_reader``), which sees what Spark
+    sees; this fast path never raises."""
+    roots = [roots] if isinstance(roots, str) else list(roots)
+    part_cols = part_cols or {}
     try:
+        import pyarrow as pa
         import pyarrow.parquet as papq
         from pyspark.sql.pandas.types import from_arrow_schema
         from pyspark.sql.types import StructField, StructType
-        first = None
-        for r, dirs, files in os.walk(path):
-            dirs.sort()
-            for fn in sorted(files):
-                if fn.endswith(".parquet"):
-                    first = os.path.join(r, fn)
-                    break
-            if first:
-                break
-        if first is None:
-            return None
-        fields = list(from_arrow_schema(papq.read_schema(first)).fields)
-        for name, typ in (part_cols or {}).items():
-            fields.append(StructField(name, typ))
-        return StructType(fields)
+        footers = []
+        for root in roots:
+            first = next(_walk_data_files(root), None)
+            if first is None:
+                return None
+            rel = os.path.relpath(os.path.dirname(first), root)
+            if any("=" in d and d.split("=", 1)[0] not in part_cols
+                   for d in rel.split(os.sep)):
+                return None
+            footers.append(papq.read_schema(first))
+        fields = list(from_arrow_schema(pa.unify_schemas(footers)).fields)
+        return StructType(fields + [StructField(n, t)
+                                    for n, t in part_cols.items()])
     except Exception:
         return None
+
+
+def table_reader(spark: SparkSession, roots,
+                 part_cols: dict | None = None):
+    """``spark.read`` carrying ``table_schema(roots, part_cols)`` when
+    it is derivable (no schema-inference job), else the inference
+    reader -- with ``mergeSchema`` over several roots, so both readers
+    unify the roots' fields in the same order. Callers add options and
+    call ``.parquet(...)`` as on ``spark.read``."""
+    sch = table_schema(roots, part_cols)
+    if sch is not None:
+        return spark.read.schema(sch)
+    if isinstance(roots, str) or len(roots) == 1:
+        return spark.read
+    return spark.read.option("mergeSchema", "true")
 
 
 def write_artifact_rows(path: str, rows, schema, *,
@@ -214,7 +274,6 @@ def write_artifact_rows(path: str, rows, schema, *,
     ``schema``: StructType or DDL string (DDL needs an active session,
     which every caller has). ``mode``: errorifexists | overwrite,
     mirroring the DataFrameWriter contract."""
-    import os
     import shutil
     import uuid
 

@@ -262,11 +262,10 @@ def compact_parquet(spark: SparkSession, path: str,
     import os
 
     from ..operators.merge import cow_publish
+    from ..rowframe import data_files
 
     norm = path.rstrip("/")
-    total = sum(os.path.getsize(os.path.join(dp, f))
-                for dp, _, fs in os.walk(norm) for f in fs
-                if f.endswith(".parquet"))
+    total = sum(os.path.getsize(f) for f in data_files(norm))
     n_files = max(1, math.ceil(total / target_file_bytes))
     cow_publish(spark.read.parquet(norm).repartition(n_files), norm)
     return n_files

@@ -37,35 +37,6 @@ from pyspark.sql import functions as F
 __all__ = ["apply_cdc_stream", "maintain_rollup_stream"]
 
 
-def _table_columns(path: str) -> list[str]:
-    """Ordered column names of a parquet table from ONE footer plus
-    hive partition dirs parsed from the file's path, driver-locally --
-    matches ``spark.read.parquet(path).columns`` (which also reads a
-    single footer with mergeSchema off) without the listing + schema
-    job. Partitioned tables keep one schema by the publish contract."""
-    import os
-
-    import pyarrow.parquet as papq
-    first = None
-    for r, dirs, files in os.walk(path):
-        dirs.sort()
-        for fn in sorted(files):
-            if fn.endswith(".parquet"):
-                first = os.path.join(r, fn)
-                break
-        if first:
-            break
-    if first is None:
-        raise FileNotFoundError(f"no parquet files under {path!r}")
-    cols = list(papq.read_schema(first).names)
-    rel = os.path.relpath(os.path.dirname(first), path)
-    if rel != ".":
-        for part in rel.split(os.sep):
-            if "=" in part:
-                cols.append(part.split("=", 1)[0])
-    return cols
-
-
 def apply_cdc_stream(changes: DataFrame, path: str, *,
                      key_cols: list[str], op_col: str = "op",
                      seq_col: str = "_cdc_seq",
@@ -88,10 +59,14 @@ def apply_cdc_stream(changes: DataFrame, path: str, *,
     that grows with the TABLE at 100 TB). Values are identical in both
     modes (the stream_cdc_apply_pruned gate shares the plain oracle)."""
     from pyspark.sql import Window as W
+    from pyspark.sql.types import IntegerType
 
     from ..operators.merge import merge_into_parquet, merge_into_partitioned
+    from ..rowframe import table_schema
 
     spark = changes.sparkSession
+    parts = ({bucket_col: IntegerType()} if n_buckets is not None
+             else None)
 
     def apply_batch(bdf: DataFrame, batch_id: int) -> None:
         if not bdf.take(1):
@@ -106,13 +81,14 @@ def apply_cdc_stream(changes: DataFrame, path: str, *,
              .orderBy(F.col(src_seq_col).desc(), F.col(op_col).asc()))
         last = (bdf.withColumn("_rn", F.row_number().over(w))
                 .where(F.col("_rn") == 1).drop("_rn"))
-        # column NAMES only, from one parquet footer + the hive dir
-        # names -- a spark.read.parquet(path).columns here cost a
-        # listing + schema-inference job PER MICRO-BATCH on a
-        # 256-bucket table (the mor_apply _base_columns fix applied to
-        # the CDC maintainer); order matches the Spark read's (data
-        # fields, then partition cols)
-        table_cols = _table_columns(path)
+        # column NAMES only, from the footer schema (data fields, then
+        # the bucket partition col: the Spark read's order) -- a
+        # spark.read.parquet(path).columns here costs a listing +
+        # schema-inference job PER MICRO-BATCH on a 256-bucket table,
+        # and runs only when no footer schema is derivable
+        sch = table_schema(path, parts)
+        table_cols = (sch.fieldNames() if sch is not None
+                      else spark.read.parquet(path).columns)
         # bucket_col is bookkeeping ONLY in file-pruned mode; in plain
         # mode a real table column that happens to share the name is
         # ordinary payload and must keep updating
