@@ -29,6 +29,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..rowframe import data_files, table_reader
+from .similarity import sql_ident
 
 
 class ConcurrentWriteError(RuntimeError):
@@ -194,8 +195,9 @@ def merge_into(
         if when_matched_update and c in when_matched_update:
             val = F.when(matched, when_matched_update[c]).otherwise(val)
         if when_not_matched_insert is not None:
-            ins = when_not_matched_insert.get(c, F.lit(None).cast(
-                target.schema[c].dataType))
+            ins = when_not_matched_insert.get(c)
+            if ins is None:
+                ins = F.lit(None).cast(target.schema[c].dataType)
             val = F.when(~F.col("_t_ex"), ins).otherwise(val)
         out_cols.append(val.alias(c))
 
@@ -350,14 +352,16 @@ def merge_into_parquet(
     plus an atomic snapshot-pointer commit. The swap is cow_publish's
     guarded_swap; between its two renames a reader listing ``path``
     can find it missing."""
-    target = spark.read.parquet(path)
+    target = table_reader(spark, path).parquet(path)
     merged = merge_into(target, source, on, **merge_kwargs)
     cow_publish(merged, path)
 
 
 def _bucket_expr(key_cols: list[str], n_buckets: int):
-    return F.pmod(F.xxhash64(*[F.col(c) for c in key_cols]),
-                  F.lit(int(n_buckets))).cast("int")
+    """The int key-hash bucket ``pmod(xxhash64(keys), n_buckets)``, as
+    SQL text: one py4j call instead of one per Column node."""
+    keys = ", ".join(sql_ident(c) for c in key_cols)
+    return F.expr(f"CAST(pmod(xxhash64({keys}), {int(n_buckets)}) AS INT)")
 
 
 def _keyed_write_width(df: DataFrame, n_values: int) -> int:
@@ -558,11 +562,12 @@ def merge_into_partitioned(
             "natural part_col mode (the pruned scan cannot match them); "
             "use n_buckets mode")
     if n_buckets is not None:
-        # natural mode keeps the inference read: its partition-value
-        # type interacts with the stored schema
         tgt = _read_bucket_slice(spark, path, pcol, touched)
     else:
-        tgt = spark.read.parquet(path).where(F.col(pcol).isin(touched))
+        # the partition values read as the source's part_col type, the
+        # type the slice filter and the merge compare them in
+        reader = table_reader(spark, path, {pcol: ptyp})
+        tgt = reader.parquet(path).where(F.col(pcol).isin(touched))
     validate = validate_cross_partition
     if validate is None and n_buckets is None:
         nfiles = len(data_files(path))
@@ -584,7 +589,7 @@ def merge_into_partitioned(
         # in the table outside the touched partitions. Key-only scan of
         # the untouched slice x broadcast(source keys), stop at one hit.
         src_keys = source.select(*on).distinct()
-        outside = (spark.read.parquet(path)
+        outside = (reader.parquet(path)
                    .where(~F.col(pcol).isin(touched))
                    .select(*on)
                    .join(F.broadcast(src_keys), list(on), "left_semi"))
@@ -629,8 +634,8 @@ def _read_bucket_slice(spark, path: str, pcol: str, touched: list):
     paths = [os.path.join(norm, f"{pcol}={int(v)}") for v in touched]
     paths = [p for p in paths if os.path.isdir(p)]
     if not paths:
-        return (spark.read.parquet(norm)
-                .where(F.col(pcol).isin(list(touched))))
+        return (table_reader(spark, norm, {pcol: IntegerType()})
+                .parquet(norm).where(F.col(pcol).isin(list(touched))))
     return (table_reader(spark, paths[0], {pcol: IntegerType()})
             .option("basePath", norm).parquet(*paths))
 

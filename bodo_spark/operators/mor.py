@@ -30,18 +30,23 @@ Layout under ``path``:
 
 Reconcile semantics (mor_read): among a key's base row (op 'U') and
 all its delta rows, the HIGHEST seq wins; ties break delete-first
-('D' < 'U' -- the apply_cdc_stream delete-wins convention); a winning
-'D' removes the key.
+('D' < 'U' -- the apply_cdc_stream delete-wins convention), and a
+delta 'U' tied with the base row on seq loses to it; a winning 'D'
+removes the key.
 
 Read-path scale shape: between compactions the delta log is a small
-fraction of the base, so the reconcile SPLITS the base around the
-broadcast delta key set -- untouched keys pass through a broadcast
-left-anti join with NO base shuffle, and only the semi-joined slice +
-deltas enter the per-key window (a delta-sized exchange). The naive
-alternative (union the full base and window every key) hash-shuffles
-100% of the base per read -- the read-side analogue of the full-COW
-rewrite; ``pruned=False`` keeps it for the degenerate delta-log-~=
--base case.
+fraction of the base, so the pruned reconcile never shuffles the base.
+The delta log alone goes through the per-key window (a delta-sized
+exchange) down to one winner per key, which is broadcast; ONE
+full-width base scan joins it and keeps or swaps each row by a scalar
+comparison. Delta-only inserts come from a second, keys-only base scan
+semi-joined against the broadcast raw delta keys. The naive alternative
+(union the full base and window every key) hash-shuffles 100% of the
+base per read -- the read-side analogue of the full-COW rewrite;
+``pruned=False`` keeps it for the degenerate delta-log-~=-base case
+and for mor_lookup's key-filtered sliver, where both inputs are tiny.
+Every step is built from SQL text (one py4j call per DataFrame step,
+not one per Column node).
 
 Write-path contract mirrors apply_cdc_stream: per-key seq must be
 monotone across batches (a replayed batch re-appends rows, but
@@ -60,10 +65,10 @@ import time
 import uuid
 
 from pyspark.sql import DataFrame
-from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
 from ..rowframe import data_files, table_reader, table_schema
+from .similarity import sql_ident
 
 __all__ = ["mor_init", "mor_apply", "mor_read", "mor_lookup",
            "mor_compact", "mor_maintain", "mor_delta_stats",
@@ -279,10 +284,8 @@ def mor_apply(changes: DataFrame, path: str, *, key_cols: list[str],
     the base -- the Iceberg/Delta add-column path without a catalog.
     Unknown columns without the flag RAISE (they were previously
     dropped silently at read time, the worst failure mode)."""
-    w = (W.partitionBy(*key_cols)
-         .orderBy(F.col(src_seq_col).desc(), F.col(op_col).asc()))
-    last = (changes.withColumn("_rn", F.row_number().over(w))
-            .where(F.col("_rn") == 1).drop("_rn"))
+    last = _winners(changes, key_cols, f"{sql_ident(src_seq_col)} DESC, "
+                                       f"{sql_ident(op_col)}")
     from .merge import publish_lock
     with publish_lock(path, owner="mor_apply"):
         meta = _read_meta(path)
@@ -401,72 +404,84 @@ def _touched_from_sidecars(segs: list[str],
         out.update(touched)
     return sorted(out)
 
+_DELTA_ORDER = f"_seq DESC, {_OP}"  # highest seq, then 'D' before 'U'
+
+
+def _idents(names: list[str]) -> list[str]:
+    return [sql_ident(c) for c in names]
+
+
+def _winners(df: DataFrame, key_cols: list[str], order: str) -> DataFrame:
+    """The first row of each key of ``df`` under ``order`` (SQL
+    ``ORDER BY`` text): a per-key ``row_number`` window built as SQL
+    text, one py4j call per DataFrame step."""
+    keys = ", ".join(_idents(key_cols))
+    return (df.selectExpr("*", f"row_number() OVER (PARTITION BY {keys} "
+                               f"ORDER BY {order}) AS _rn")
+            .where("_rn = 1").drop("_rn"))
+
+
 def _reconcile(base: DataFrame, deltas: DataFrame,
                key_cols: list[str], payload: list[str],
                seq_col: str, *, pruned: bool) -> DataFrame:
     """base + delta rows -> current state (one winner per key, winning
     deletes dropped). Base keys are assumed unique (the keyed-table
-    invariant mor_init/compaction maintain).
+    invariant mor_init/compaction maintain). Both forms return the same
+    rows, and a delta 'U' tied with its base row on seq loses to it.
 
-    ``pruned`` (the scale path): reduce the delta log FIRST to one
-    winner per key (a delta-sized window), then resolve the base in
-    ONE full-width scan against the broadcast winner set -- a base row
-    keeps or swaps by a scalar comparison (delta wins on higher seq;
-    equal seq -> delete-wins, the apply_cdc_stream tiebreak), no base
-    shuffle, no window over base rows. Delta-only inserts come from a
-    second base scan that column-prunes to THE KEYS ONLY (a few bytes
-    per row) feeding a broadcast semi join. The naive alternative
-    (pruned=False) unions the full base and windows every key -- a
-    full-table hash shuffle per read; value-identical (null-safe key
-    match mirrors the window's NULL grouping)."""
-    d = deltas.select(*key_cols, *payload, "_seq", _OP)
-    w = (W.partitionBy(*key_cols)
-         .orderBy(F.col("_seq").desc(), F.col(_OP).asc()))
+    ``pruned`` (the scale path): window the delta log ALONE down to one
+    winner per key (a delta-sized exchange) and broadcast it into ONE
+    full-width base scan, where a base row keeps or swaps by a scalar
+    comparison (delta wins on higher seq; equal seq -> only a 'D' wins,
+    the apply_cdc_stream delete-wins tiebreak) -- no base shuffle, no
+    window over base rows. Delta-only inserts are the winners whose key
+    a second base scan, column-pruned to THE KEYS ONLY, does not hold:
+    that scan semi-joins the broadcast RAW delta keys (duplicates cannot
+    change a semi join, and the raw keys need no second delta exchange)
+    and the result is broadcast into an anti join on the winners.
+
+    ``pruned=False`` unions the base into the delta window (base rows
+    rank after a delta 'D' and before a delta 'U' of the same seq) -- a
+    hash shuffle of everything it reads, so a full-table shuffle per
+    read, but a single exchange over a key-filtered sliver
+    (mor_lookup). Null-safe key matches mirror the window's NULL
+    grouping. All expressions are SQL text."""
+    cols = _idents(key_cols + payload)
+    seq = sql_ident(seq_col)
     if not pruned:
-        b = base.select(
-            *key_cols, *payload,
-            F.col(seq_col).alias("_seq"), F.lit("U").alias(_OP))
-        un = b.unionByName(d)
-        return (un.withColumn("_rn", F.row_number().over(w))
-                .where((F.col("_rn") == 1) & (F.col(_OP) == "U"))
-                .select(*key_cols, *payload,
-                        F.col("_seq").alias(seq_col)))
-    dw = (d.withColumn("_rn", F.row_number().over(w))
-          .where(F.col("_rn") == 1).drop("_rn"))
-    dwr = dw.select(
-        *[F.col(k).alias(f"_dk_{k}") for k in key_cols],
-        *[F.col(c).alias(f"_dv_{c}") for c in payload],
-        F.col("_seq").alias("_dseq"), F.col(_OP).alias("_dop"))
-    cond = [F.col(k).eqNullSafe(F.col(f"_dk_{k}")) for k in key_cols]
-    j = base.join(F.broadcast(dwr), cond, "left")
-    dwin = (F.col("_dseq").isNotNull()
-            & ((F.col("_dseq") > F.col(seq_col))
-               | ((F.col("_dseq") == F.col(seq_col))
-                  & (F.col("_dop") == "D"))))
-    resolved = (j.where(~(dwin & (F.col("_dop") == "D")))
-                .select(*key_cols,
-                        *[F.when(dwin, F.col(f"_dv_{c}"))
-                          .otherwise(F.col(c)).alias(c)
-                          for c in payload],
-                        F.when(dwin, F.col("_dseq"))
-                        .otherwise(F.col(seq_col)).alias(seq_col)))
-    # delta-only inserts: which winner keys already exist in the base?
-    # keys-only scan (column pruning: a sliver of the base bytes) x
-    # broadcast semi -> a small set we can broadcast back into an anti
-    # join on the winner frame. No full-width base rescan, no shuffle.
-    dkeys = dw.select(
-        *[F.col(k).alias(f"_dk_{k}") for k in key_cols]).distinct()
-    # no distinct: base keys are unique (invariant) and the semi join
-    # cannot duplicate them -- skipping it keeps the branch shuffle-free
-    in_base = (base.select(*key_cols)
-               .join(F.broadcast(dkeys), cond, "left_semi")
-               .select(*[F.col(k).alias(f"_ib_{k}")
-                         for k in key_cols]))
-    icond = [F.col(k).eqNullSafe(F.col(f"_ib_{k}")) for k in key_cols]
-    inserts = (dw.join(F.broadcast(in_base), icond, "left_anti")
-               .where(F.col(_OP) == "U")
-               .select(*key_cols, *payload,
-                       F.col("_seq").alias(seq_col)))
+        un = base.selectExpr(*cols, f"{seq} AS _seq", f"'U' AS {_OP}",
+                             "0 AS _src").unionByName(
+            deltas.selectExpr(*cols, "_seq", _OP, "1 AS _src"))
+        return (_winners(un, key_cols, f"{_DELTA_ORDER}, _src")
+                .where(f"{_OP} = 'U'").selectExpr(*cols, f"_seq AS {seq}"))
+
+    def renamed(prefix: str, names: list[str]) -> list[str]:
+        return [f"{sql_ident(c)} AS {sql_ident(prefix + c)}" for c in names]
+
+    def on(prefix: str):
+        return F.expr(" AND ".join(
+            f"{sql_ident(k)} <=> {sql_ident(prefix + k)}" for k in key_cols))
+
+    dw = _winners(deltas.selectExpr(*cols, "_seq", _OP), key_cols,
+                  _DELTA_ORDER)
+    j = base.join(F.broadcast(dw.selectExpr(
+        *renamed("_dk_", key_cols), *renamed("_dv_", payload),
+        "_seq AS _dseq", f"{_OP} AS _dop")), on("_dk_"), "left")
+    dwin = (f"(_dseq IS NOT NULL AND (_dseq > {seq} "
+            f"OR (_dseq = {seq} AND _dop = 'D')))")
+    resolved = j.where(f"NOT ({dwin} AND _dop = 'D')").selectExpr(
+        *_idents(key_cols),
+        *[f"CASE WHEN {dwin} THEN {sql_ident('_dv_' + c)} "
+          f"ELSE {sql_ident(c)} END AS {sql_ident(c)}" for c in payload],
+        f"CASE WHEN {dwin} THEN _dseq ELSE {seq} END AS {seq}")
+    # no distinct on either side: base keys are unique (invariant) and
+    # a semi join cannot duplicate them -- the branch stays shuffle-free
+    in_base = (base.selectExpr(*_idents(key_cols))
+               .join(F.broadcast(deltas.selectExpr(
+                   *renamed("_dk_", key_cols))), on("_dk_"), "left_semi")
+               .selectExpr(*renamed("_ib_", key_cols)))
+    inserts = (dw.join(F.broadcast(in_base), on("_ib_"), "left_anti")
+               .where(f"{_OP} = 'U'").selectExpr(*cols, f"_seq AS {seq}"))
     return resolved.unionByName(inserts)
 
 
@@ -512,10 +527,10 @@ def mor_read(spark, path: str, *, key_cols: list[str],
     ``seq_col``). Read amplification = delta mass scanned on top of the
     base -- watch mor_delta_stats and compact.
 
-    ``pruned=True``: broadcast anti/semi split on the delta key
-    set -- untouched base rows bypass the reconcile window entirely (no
-    base shuffle; plan-contract-tested). ``pruned=False`` windows the
-    full union -- only sensible when the delta log rivals the base.
+    ``pruned=True``: the delta winners are broadcast into the base
+    scan -- base rows never enter the reconcile window or any exchange
+    (plan-contract-tested). ``pruned=False`` windows the full union --
+    only sensible when the delta log rivals the base.
     ``pruned='auto'`` (default) picks between them from the on-disk
     delta byte mass vs ``broadcast_budget_bytes`` (the pruned path
     broadcasts the full-width delta winner set, so past the budget the
@@ -587,8 +602,9 @@ def mor_lookup(spark, path: str, keys: list, *, key_cols: list[str],
     engine-identical hashing, never reimplemented driver-side) and
     reads the base with a literal ``bucket IN (...)`` partition filter
     plus the key predicate: I/O is a few bucket dirs + the delta log,
-    then the standard reconcile runs over the sliver (per-key
-    semantics make the restricted reconcile exact). On an unbucketed
+    then the union+window reconcile runs over the sliver (per-key
+    semantics make the restricted reconcile exact; the sliver makes its
+    one exchange tiny). On an unbucketed
     table the key predicate still pushes into every scan branch.
 
     ``keys``: scalars for single-column keys, tuples for composite.
@@ -602,43 +618,48 @@ def mor_lookup(spark, path: str, keys: list, *, key_cols: list[str],
     if any(v is None for r in rows for v in r):
         raise ValueError("NULL lookup keys are not supported -- use "
                          "mor_read and filter with eqNullSafe")
+    bcol, nb = meta["bucket_col"], meta["n_buckets"]
     base = _read_base(spark, os.path.join(path, "base"), meta)
-    payload = [c for c in base.columns
-               if c not in key_cols and c != seq_col
-               and c != meta["bucket_col"]]
-    empty = (base.drop(meta["bucket_col"])
-             if meta["n_buckets"] is not None else base) \
-        .select(*key_cols, *payload, seq_col).where(F.lit(False))
-    if not rows:
-        return empty
-    keyf = functools.reduce(
-        lambda a, b: a | b,
-        [functools.reduce(lambda a, b: a & b,
-                          [F.col(c) == F.lit(v)
-                           for c, v in zip(key_cols, r)])
-         for r in rows])
-    nb = meta["n_buckets"]
-    if nb is not None:
-        from .merge import _bucket_expr
-        ktypes = [base.schema[c] for c in key_cols]
+    if nb is not None and rows:
         from pyspark.sql import types as _T
+
         from ..rowframe import local_df
-        kdf = local_df(spark, rows, _T.StructType(ktypes))
+        from .merge import _bucket_expr
+        kdf = local_df(spark, rows,
+                       _T.StructType([base.schema[c] for c in key_cols]))
         # no distinct(): a Project over the local key relation is folded
         # and collected on the driver with zero Spark jobs, an Aggregate
         # on top forces two; the set dedupes
         buckets = sorted({r[0] for r in kdf.select(
             _bucket_expr(list(key_cols), nb).alias("_b")).collect()})
-        base = (base.where(F.col(meta["bucket_col"]).isin(buckets))
-                .drop(meta["bucket_col"]))
+        base = base.where(f"{sql_ident(bcol)} IN "
+                          f"({', '.join(map(str, buckets))})")
+    if nb is not None:
+        base = base.drop(bcol)
+    payload = [c for c in base.columns
+               if c not in key_cols and c != seq_col]
+    if not rows:
+        return base.select(*key_cols, *payload, seq_col).where(F.lit(False))
+    if len(key_cols) == 1:
+        # pushes down as one In predicate
+        keyf = F.col(key_cols[0]).isin([r[0] for r in rows])
+    else:
+        keyf = functools.reduce(
+            lambda a, b: a | b,
+            [functools.reduce(lambda a, b: a & b,
+                              [F.col(c) == F.lit(v)
+                               for c, v in zip(key_cols, r)])
+             for r in rows])
     base = base.where(keyf)
     segs = _delta_dirs(path, base_seg=meta["base_seg"])
     if not segs:
         return base.select(*key_cols, *payload, seq_col)
     deltas = _read_deltas(spark, segs).where(keyf)
     base, deltas, payload = _widen_evolved(base, deltas, payload)
+    # both inputs are key-filtered slivers (<= keys x (1 + segments)
+    # rows): one sliver-sized exchange beats three broadcasts
     return _reconcile(base, deltas, key_cols, payload, seq_col,
-                      pruned=True)
+                      pruned=False)
 
 
 def mor_changes(spark, path: str, *, key_cols: list[str],
@@ -691,13 +712,9 @@ def mor_changes(spark, path: str, *, key_cols: list[str],
     d = _read_deltas(spark, segs)
     payload = [c for c in d.columns
                if c not in key_cols and c not in ("_seq", _OP)]
-    w = (W.partitionBy(*key_cols)
-         .orderBy(F.col("_seq").desc(), F.col(_OP).asc()))
-    return (d.withColumn("_rn", F.row_number().over(w))
-            .where(F.col("_rn") == 1)
-            .select(*key_cols, *payload,
-                    F.col("_seq").alias(seq_col),
-                    F.col(_OP).alias(op_col)))
+    return _winners(d, key_cols, _DELTA_ORDER).selectExpr(
+        *_idents(key_cols + payload), f"_seq AS {sql_ident(seq_col)}",
+        f"{_OP} AS {sql_ident(op_col)}")
 
 
 def _tree_rows(spark, *roots: str) -> int:

@@ -262,12 +262,13 @@ def compact_parquet(spark: SparkSession, path: str,
     import os
 
     from ..operators.merge import cow_publish
-    from ..rowframe import data_files
+    from ..rowframe import data_files, table_reader
 
     norm = path.rstrip("/")
     total = sum(os.path.getsize(f) for f in data_files(norm))
     n_files = max(1, math.ceil(total / target_file_bytes))
-    cow_publish(spark.read.parquet(norm).repartition(n_files), norm)
+    cow_publish(table_reader(spark, norm).parquet(norm)
+                .repartition(n_files), norm)
     return n_files
 
 

@@ -154,6 +154,7 @@ def maintain_rollup_stream(facts: DataFrame, path: str, *,
     38) -- declare rollup decimal columns at (38, s) up front if exact
     schema stability across many batches matters."""
     from ..operators.merge import cow_publish, merge_rollup
+    from ..rowframe import table_reader
 
     spark = facts.sparkSession
 
@@ -162,7 +163,7 @@ def maintain_rollup_stream(facts: DataFrame, path: str, *,
             return
         batch_agg = bdf.groupBy(*keys).agg(
             *[c.alias(n) for n, c in aggs.items()])
-        cur = spark.read.parquet(path)
+        cur = table_reader(spark, path).parquet(path)
         merged = merge_rollup(cur, batch_agg, keys=keys,
                               add_cols=add_cols)
         cow_publish(merged, path)

@@ -95,6 +95,11 @@ def sources(spark, tmp_path_factory):
         M.mor_apply(first, src[name], key_cols=["k"])
     src["bucketed"] = f"{root}/bucketed"
     write_bucket_partitioned(init, src["bucketed"], ["k"], 4)
+    src["plain"] = f"{root}/plain"
+    init.write.parquet(src["plain"])
+    src["natural"] = f"{root}/natural"
+    (init.withColumn("region", F.concat(F.lit("r"), F.col("k") % 3))
+     .write.partitionBy("region").parquet(src["natural"]))
     emb = tbl(spark, SF_DIR, "embeddings")
     los, his = Q.sq_train(emb)
     src["sq"] = f"{root}/sq"
@@ -137,6 +142,57 @@ def _merge(spark, path):
                  .select("k", "v", "_cdc_seq"))
 
 
+def _upsert(**insert):
+    """Clauses of a ``k, w`` source: update ``v``, insert new keys."""
+    return dict(when_matched_update={"v": F.col("src_w")},
+                when_not_matched_insert={
+                    "k": F.col("src_k"), "v": F.col("src_w"),
+                    "_cdc_seq": F.lit(0).cast("long"), **insert})
+
+
+def _merge_plain(spark, path):
+    from bodo_spark.operators.merge import merge_into_parquet
+    merge_into_parquet(spark, path, spark.createDataFrame(
+        [(3, "x"), (99, "y")], "k long, w string"), ["k"], **_upsert())
+    return _rows(spark.read.schema(_ROW).parquet(path))
+
+
+def _merge_natural(spark, path):
+    """Natural-mode merge, with the cross-partition check (on by
+    default at this size), which reads the untouched partitions."""
+    from bodo_spark.operators.merge import merge_into_partitioned
+    merge_into_partitioned(
+        spark, path, spark.createDataFrame(
+            [(3, "x", "r0"), (99, "y", "r1")],
+            "k long, w string, region string"),
+        ["k"], part_col="region", **_upsert(region=F.col("src_region")))
+    return _rows(spark.read.schema(f"{_ROW}, region string").parquet(path))
+
+
+def _compact_plain(spark, path):
+    from bodo_spark.sources.io import compact_parquet
+    compact_parquet(spark, path)
+    return _rows(spark.read.schema(_ROW).parquet(path))
+
+
+def _rollup_stream(spark, path):
+    """A rollup stream folding fact counts into ``_cdc_seq``; new keys
+    insert with ``v`` NULL."""
+    import uuid
+
+    from bodo_spark.streaming import (maintain_rollup_stream,
+                                      read_stream_parquet)
+    facts = f"{path}__facts"
+    spark.createDataFrame([(3, 2), (3, 1), (77, 4)], "k long, n long") \
+        .coalesce(1).write.parquet(facts)
+    maintain_rollup_stream(
+        read_stream_parquet(spark, facts, spark.read.parquet(facts).schema),
+        path, keys=["k"], aggs={"_cdc_seq": F.sum("n")},
+        add_cols=["_cdc_seq"],
+        query_name=f"footer_{uuid.uuid4().hex[:8]}")
+    return _rows(spark.read.schema(_ROW).parquet(path))
+
+
 def _cdc(spark, path):
     import uuid
 
@@ -175,6 +231,10 @@ _READERS = {
     "mor_lookup": ("mor_b", _lookup),
     "mor_compact_bucketed": ("mor_b", _compact),
     "merge_partitioned": ("bucketed", _merge),
+    "merge_natural": ("natural", _merge_natural),
+    "merge_parquet": ("plain", _merge_plain),
+    "compact_parquet": ("plain", _compact_plain),
+    "rollup_stream": ("plain", _rollup_stream),
     "apply_cdc_stream": ("bucketed", _cdc),
     "sq_stored_topk": ("sq", _sq_serve),
     "bm25_stored_topk": ("bm25", _bm25_serve),

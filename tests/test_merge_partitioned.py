@@ -160,6 +160,28 @@ def test_arg_validation(spark, tmp_path):
                                part_col="region")
 
 
+def test_natural_mode_numeric_looking_string_partitions(spark, tmp_path):
+    """String partition values that read as numbers under partition-type
+    inference ('007' -> 7) must still match the source's '007': the
+    slice reads them as the source's string type. Read as int, the
+    slice missed the stored rows: the cross-partition check raised on a
+    key stored in its own partition, and without the check the swap
+    replaced the partition with the batch rows alone (key 2 lost)."""
+    t = spark.createDataFrame(
+        [(1, "007", 1.0), (2, "007", 2.0), (3, "010", 3.0)],
+        "k long, region string, v double")
+    path = str(tmp_path / "tbl")
+    t.write.partitionBy("region").parquet(path)
+    src = spark.createDataFrame([(1, "007", 10.0)],
+                                "k long, region string, v double")
+    assert merge_into_partitioned(
+        spark, path, src, ["k"], part_col="region",
+        when_matched_update={"v": F.col("src_v")}) == ["007"]
+    got = sorted(map(tuple, spark.read.schema(
+        "k long, v double, region string").parquet(path).collect()))
+    assert got == [(1, 10.0, "007"), (2, 2.0, "007"), (3, 3.0, "010")]
+
+
 def test_natural_mode_null_part_value_refused(spark, tmp_path):
     """A NULL partition value in the source must raise, not silently
     drop the NULL-partition directory's other rows (isin never matches

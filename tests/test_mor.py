@@ -171,6 +171,32 @@ def test_mor_pruned_read_equals_full_window_read(spark, tmp_path):
     assert all(k != 4 for k, _, _ in got)
 
 
+def test_mor_equal_seq_upsert_keeps_base_row(spark, tmp_path):
+    """A delta 'U' with the same seq as its base row loses to the base
+    row in every reconcile form -- the pruned read, the full-window
+    read and the point lookup -- while an equal-seq 'D' still wins."""
+    keys = list(range(40))
+    for nb in (None, 4):
+        path = str(tmp_path / f"t{nb}")
+        M.mor_init(spark.createDataFrame(
+            [(k, f"base{k}", 5) for k in keys],
+            "k long, seg string, _cdc_seq long"), path,
+            key_cols=["k"], n_buckets=nb)
+        M.mor_apply(spark.createDataFrame(
+            [(k, f"tie{k}", "U", 5) for k in keys if k % 4]
+            + [(0, None, "D", 5)],
+            "k long, seg string, op string, seq long"), path,
+            key_cols=["k"])
+        want = [(k, f"base{k}", 5) for k in keys if k]
+        for pruned in (True, False):
+            assert sorted(map(tuple, M.mor_read(
+                spark, path, key_cols=["k"], pruned=pruned)
+                .select("k", "seg", "_cdc_seq").collect())) == want, \
+                (nb, pruned)
+        assert sorted(map(tuple, M.mor_lookup(
+            spark, path, keys, key_cols=["k"]).collect())) == want, nb
+
+
 def test_mor_bucketed_pruned_compact_leaves_untouched_files(spark,
                                                             tmp_path):
     """Bucketed MoR: compaction must rewrite ONLY the touched bucket

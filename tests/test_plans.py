@@ -407,10 +407,10 @@ def test_mmr_all_jvm(spark):
 
 def test_mor_pruned_read_no_full_base_exchange(spark, tmp_path):
     """MoR pruned-read plan contract: the base table reaches the output
-    through BROADCAST anti/semi joins only -- untouched base rows are
-    never hash-shuffled (the read-side analogue of the file-pruned
-    merge); the only hashpartitioning exchanges are delta-key-sized
-    (the key-set distinct and the contested-slice window)."""
+    through BROADCAST joins only -- base rows are never hash-shuffled
+    (the read-side analogue of the file-pruned merge); the only
+    hashpartitioning exchange is delta-sized (the delta-winner window;
+    the semi join takes the raw delta keys, with no exchange)."""
     import re
 
     from bodo_spark.operators import mor as M
@@ -733,12 +733,9 @@ def test_wide_tfidf_map_built_once(spark):
     assert max(d["collect_list"]) == 0, d
 
 
-def test_mor_lookup_job_budget(spark, tmp_path):
-    """Job-count contract for the bucketed point lookup: the key ->
-    bucket step evaluates a Project over the local key relation, folded
-    and collected on the driver with zero jobs (a distinct() on it ran
-    two), so the whole lookup -- meta, bucket step, pruned read and its
-    collect -- runs 6 jobs, not 8."""
+def _bucketed_mor(spark, tmp_path):
+    """A 64-key MoR table in 16 buckets with one live delta segment
+    that updates key 1, deletes key 2 and inserts key 99."""
     from bodo_spark.operators import mor as M
     path = str(tmp_path / "t")
     M.mor_init(spark.createDataFrame(
@@ -746,10 +743,54 @@ def test_mor_lookup_job_budget(spark, tmp_path):
         "k long, seg string, _cdc_seq long"), path,
         key_cols=["k"], n_buckets=16)
     M.mor_apply(spark.createDataFrame(
-        [(1, "u", "U", 1)], "k long, seg string, op string, seq long"),
-        path, key_cols=["k"])
+        [(1, "u", "U", 1), (2, None, "D", 1), (99, "n", "U", 1)],
+        "k long, seg string, op string, seq long"), path, key_cols=["k"])
+    return path
+
+
+def _bucketed_mor_state():
+    return sorted([(0, "s0", 0), (1, "u", 1), (99, "n", 1)]
+                  + [(k, f"s{k}", 0) for k in range(3, 64)])
+
+
+def test_mor_lookup_job_budget(spark, tmp_path):
+    """Job-count contract for the bucketed point lookup: the key ->
+    bucket step evaluates a Project over the local key relation, folded
+    and collected on the driver with zero jobs, and the key-filtered
+    sliver is reconciled by the union+window form -- one sliver-sized
+    exchange and the result, no broadcasts -- so the whole lookup runs
+    2 jobs (the pruned reconcile ran 6)."""
+    from bodo_spark.operators import mor as M
+    path = _bucketed_mor(spark, tmp_path)
     rows, jobs = spark_jobs(spark, lambda: M.mor_lookup(
-        spark, path, [1, 3, 7], key_cols=["k"]).collect())
+        spark, path, [1, 2, 3, 7, 99], key_cols=["k"]).collect())
     assert sorted(map(tuple, rows)) == [(1, "u", 1), (3, "s3", 0),
-                                        (7, "s7", 0)]
+                                        (7, "s7", 0), (99, "n", 1)]
+    assert jobs <= 2, jobs
+
+
+def test_mor_read_job_budget(spark, tmp_path):
+    """Job-count contract for the pruned read of a bucketed table with a
+    live delta: the semi join that finds the delta keys already in the
+    base takes the raw delta keys, so the delta log is windowed (and
+    hash-shuffled) once, not twice -- 5 jobs with the collect, not 6."""
+    from bodo_spark.operators import mor as M
+    path = _bucketed_mor(spark, tmp_path)
+    rows, jobs = spark_jobs(spark, lambda: M.mor_read(
+        spark, path, key_cols=["k"], pruned=True).collect())
+    assert sorted(map(tuple, rows)) == _bucketed_mor_state()
+    assert jobs <= 5, jobs
+
+
+def test_mor_compact_job_budget(spark, tmp_path):
+    """Job-count contract for the touched-bucket compaction: the
+    reconcile of the touched slice is the pruned read's plan, so the
+    fold and its partition publish run 6 jobs, not 7."""
+    from bodo_spark.operators import mor as M
+    path = _bucketed_mor(spark, tmp_path)
+    _, jobs = spark_jobs(spark, lambda: M.mor_compact(
+        spark, path, key_cols=["k"]))
+    assert M._delta_dirs(path) == []
+    assert sorted(map(tuple, M.mor_read(spark, path, key_cols=["k"])
+                      .collect())) == _bucketed_mor_state()
     assert jobs <= 6, jobs
