@@ -43,13 +43,12 @@ from functools import reduce
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import IntegerType, StructField, StructType
+from pyspark.sql.types import StructField, StructType
 
 from ..modes import exact_mode
 from ..rowframe import (artifact_df, local_df, localize_if_small,
-                        read_artifact_rows, table_reader,
-                        write_artifact_rows)
-from .merge import publish_lock
+                        read_artifact_rows, write_artifact_rows)
+from .merge import publish_lock, read_keyed, write_keyed
 from .similarity import (_centroid_table, _ensure_scan_width,
                          assign_nearest_cell, cell_assigner_udf,
                          probe_cells, probe_cells_local, sql_ident)
@@ -244,7 +243,7 @@ def store(index: DataFrame, path: str, codec: Codec, *, n_cells: int = 8,
           id_col: str = "vec_id", vec_col: str = "embedding",
           mode: str = "errorifexists") -> None:
     """Persist an inverted file as the serving artifact. ``index/`` is
-    repartitioned BY the cell first (one file per cell directory);
+    cell-partitioned, one file per cell directory (merge.write_keyed);
     ``centroids/`` and ``meta/`` are bounded driver values written
     driver-locally (rowframe.write_artifact_rows -- no Spark job), so
     only the index write is a job. Pass the SAME centroid source as the
@@ -256,8 +255,7 @@ def store(index: DataFrame, path: str, codec: Codec, *, n_cells: int = 8,
     cents = _centroid_table(
         seed_vectors if seed_vectors is not None else index,
         centroids, n_cells, coarse_dim, id_col, vec_col)
-    (index.repartition(int(n_cells), F.col("cell"))
-     .write.mode(mode).partitionBy("cell").parquet(f"{path}/index"))
+    write_keyed(index, f"{path}/index", "cell", n_cells, mode=mode)
     write_artifact_rows(
         f"{path}/centroids", [tuple(r) for r in cents.collect()],
         cents.schema, mode=mode)
@@ -286,16 +284,18 @@ def stored_append(new_vectors: DataFrame, path: str, *,
     store's publish lock so an append cannot land in a tree a compaction
     swap is superseding."""
     codec, coarse_dim, id_col = _stored_meta(path)
-    cents = artifact_df(new_vectors.sparkSession, f"{path}/centroids")
+    rows, csch = read_artifact_rows(f"{path}/centroids")
+    cents = local_df(new_vectors.sparkSession,
+                     [tuple(r[f.name] for f in csch.fields) for r in rows],
+                     csch)
     assigned = assign_nearest_cell(
         _ensure_scan_width(new_vectors).select(id_col, vec_col), cents,
         vec_col=vec_col, key_col=id_col, coarse_dim=coarse_dim)
     batch = codec.encode_assigned(assigned, id_col=id_col,
                                   vec_col=vec_col, cell_col="_cell")
     with publish_lock(path.rstrip("/"), owner=f"{codec.name}_stored_append"):
-        (batch.repartition(F.col("cell"))
-         .write.mode("append").partitionBy("cell")
-         .parquet(f"{path}/index"))
+        write_keyed(batch, f"{path}/index", "cell", len(rows),
+                    mode="append")
 
 
 def stored_compact(vectors: DataFrame, path: str, codec: Codec, *,
@@ -406,10 +406,7 @@ def stored_topk(spark, path: str, queries: DataFrame, *, k: int = 5,
             cells = [r[0] for r in
                      qcells.select("cell").distinct().collect()]
         qside = codec.query_side(queries, q_id_col, q_vec_col)
-    # explicit footer-derived schema: no inference job per serve; the
-    # probed-cell IN list stays a static PartitionFilters prune
-    pruned = (table_reader(spark, f"{path}/index", {"cell": IntegerType()})
-              .parquet(f"{path}/index").where(F.col("cell").isin(cells)))
+    pruned = read_keyed(spark, f"{path}/index", "cell", cells)
     scored = _score_probed(pruned, qcells, codec, id_col=id_col,
                            q_id_col=q_id_col, qside=qside)
     return _topk_by_adist(scored, k, q_id_col, id_col)

@@ -27,6 +27,7 @@ from typing import Callable, Iterable, Mapping
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import IntegerType
 
 from ..rowframe import data_files, table_reader
 from .similarity import sql_ident
@@ -365,62 +366,88 @@ def _bucket_expr(key_cols: list[str], n_buckets: int):
 
 
 def _keyed_write_width(df: DataFrame, n_values: int) -> int:
-    """Task width for a keyed repartition feeding a dynamic-partition
-    write: one task per partition value, capped by the cluster's
-    parallelism -- both scale-derived, no constants. The no-count
-    (AQE-coalesced) form sizes tasks by BYTES, which under-parallelizes
-    exactly here: a small staged write coalesces to 1-2 tasks that then
-    create hundreds of partition directories/files SERIALLY (file
-    creation is per-file fixed cost, invisible to byte-based sizing).
-    Measured on a 256-bucket stage write at sf0.1 (min of 4):
-    no-count 0.72 s (2 tasks) / explicit-256 1.33 s (task-launch bound)
-    / min(n_values, defaultParallelism) 0.42 s. At cluster scale
+    """Task width of write_keyed's repartition, the one keyed-partition
+    write (write_bucket_partitioned, _publish_partitions, the
+    whole-base mor_compact publish, bm25_store_index,
+    bm25_stored_append, ivf.store and ivf.stored_append): one task per
+    partition value, capped by the cluster's parallelism -- both
+    scale-derived, no constants. The no-count (AQE-coalesced) form
+    sizes tasks by BYTES, which under-parallelizes exactly here: a
+    small staged write coalesces to 1-2 tasks that then create hundreds
+    of partition directories/files SERIALLY (file creation is per-file
+    fixed cost, invisible to byte-based sizing). Measured on a
+    256-bucket stage write at sf0.1 (min of 4): no-count 0.72 s (2
+    tasks) / explicit-256 1.33 s (task-launch bound) /
+    min(n_values, defaultParallelism) 0.42 s. At cluster scale
     defaultParallelism >> n_values, so this pins one task per partition
     value -- the one-file-per-dir layout contract unchanged."""
     dp = df.sparkSession.sparkContext.defaultParallelism
     return max(1, min(int(n_values), dp))
 
 
+def keyed_parts(col: str | None) -> dict | None:
+    """The declared hive partition column of a keyed layout, for
+    rowframe.table_schema/table_reader: every keyed value is an int
+    (``_bucket_expr``'s bucket, the IVF cell), so no read infers its
+    type. None for a plain table."""
+    return None if col is None else {col: IntegerType()}
+
+
+def write_keyed(df: DataFrame, path: str, col: str, n_values: int,
+                mode: str) -> None:
+    """The one keyed-partition writer: ``df`` hive-partitioned by
+    ``col`` (at most ``n_values`` distinct values), ONE file per
+    partition directory. The repartition keyed on ``col`` puts each
+    value in one task; without it every task writes into every
+    directory -- tasks x values tiny files whose per-file writer
+    overhead dominates (measured 5x on the BM25 store; SCALE.md r12).
+    Its width is _keyed_write_width."""
+    (df.repartition(_keyed_write_width(df, n_values), F.col(col))
+     .write.mode(mode).partitionBy(col).parquet(path))
+
+
+def read_keyed(spark, root: str, col: str | None,
+               values: Iterable | None) -> DataFrame:
+    """The one reader of a keyed-partition table at ``root``, with the
+    footer schema of its first data file and ``col`` declared int
+    (rowframe.table_reader: no schema-inference job). ``values``: only
+    those partition directories, passed as direct paths under
+    ``basePath`` -- listing O(touched) instead of O(partitions) -- and
+    the ``col IN (values)`` filter, which the scan keeps as
+    PartitionFilters. A value without a directory holds no rows.
+    ``values=None`` reads every directory, and ``col=None`` a plain
+    table."""
+    root = root.rstrip("/")
+    reader = table_reader(spark, root, keyed_parts(col))
+    if values is None:
+        return reader.parquet(root)
+    vals = sorted({int(v) for v in values})
+    paths = [p for p in (os.path.join(root, f"{col}={v}") for v in vals)
+             if os.path.isdir(p)]
+    if not paths:
+        return reader.parquet(root).where(F.lit(False))
+    return (reader.option("basePath", root).parquet(*paths)
+            .where(f"{sql_ident(col)} IN ({', '.join(map(str, vals))})"))
+
+
 def write_bucket_partitioned(df: DataFrame, path: str,
                              key_cols: list[str], n_buckets: int, *,
                              bucket_col: str = "mbucket",
-                             mode: str = "errorifexists",
-                             files_per_bucket: int = 1) -> None:
+                             mode: str = "errorifexists") -> None:
     """Initialize a table for file-pruned MERGE maintenance: stored
     hash-bucket-partitioned on the merge key (``bucket_col =
-    pmod(xxhash64(keys), n_buckets)`` as a hive partition directory).
-    Because the bucket derives from the key alone, every future change
-    row routes to exactly one partition directory -- the property
-    merge_into_partitioned prunes on."""
+    pmod(xxhash64(keys), n_buckets)`` as a hive partition directory,
+    one file each -- write_keyed). Because the bucket derives from the
+    key alone, every future change row routes to exactly one partition
+    directory -- the property merge_into_partitioned prunes on."""
     if n_buckets < 1:
         raise ValueError(f"n_buckets must be >= 1, got {n_buckets}")
-    if files_per_bucket < 1:
-        raise ValueError(f"files_per_bucket must be >= 1, "
-                         f"got {files_per_bucket}")
     if bucket_col in df.columns:
         raise ValueError(
             f"column {bucket_col!r} collides with the bucket "
             "bookkeeping column -- rename it or pass bucket_col=")
-    # repartition keyed on (bucket [, intra-bucket salt]) before the
-    # dynamic-partition write: otherwise every task writes into every
-    # bucket directory -- tasks x n_buckets tiny files whose per-file
-    # writer overhead dominates (measured 5x on the BM25 store, same
-    # pattern; SCALE.md r12). files_per_bucket > 1 restores
-    # within-bucket write parallelism for big tables. Width =
-    # min(partition values, defaultParallelism) -- see
-    # _keyed_write_width for the measured rationale (byte-based AQE
-    # coalescing serializes the per-file creation cost).
-    b = df.withColumn(bucket_col, _bucket_expr(key_cols, n_buckets))
-    if files_per_bucket == 1:
-        b = b.repartition(_keyed_write_width(df, n_buckets),
-                          F.col(bucket_col))
-    else:
-        salt = F.pmod(F.xxhash64(*[F.col(c) for c in key_cols],
-                                 F.lit(7)), F.lit(files_per_bucket))
-        b = b.repartition(
-            _keyed_write_width(df, n_buckets * files_per_bucket),
-            F.col(bucket_col), salt)
-    b.write.mode(mode).partitionBy(bucket_col).parquet(path)
+    write_keyed(df.withColumn(bucket_col, _bucket_expr(key_cols, n_buckets)),
+                path, bucket_col, n_buckets, mode)
 
 
 def merge_into_partitioned(
@@ -562,7 +589,7 @@ def merge_into_partitioned(
             "natural part_col mode (the pruned scan cannot match them); "
             "use n_buckets mode")
     if n_buckets is not None:
-        tgt = _read_bucket_slice(spark, path, pcol, touched)
+        tgt = read_keyed(spark, path, pcol, touched)
     else:
         # the partition values read as the source's part_col type, the
         # type the slice filter and the merge compare them in
@@ -619,27 +646,6 @@ def merge_into_partitioned(
     return touched
 
 
-def _read_bucket_slice(spark, path: str, pcol: str, touched: list):
-    """Touched-bucket slice of a bucket-partitioned table: the touched
-    bucket dirs as direct paths under basePath -- listing O(touched)
-    instead of O(n_buckets) -- with the first touched dir's footer
-    schema (rowframe.table_reader: no schema-inference job per merge).
-    Value-identical to
-    ``spark.read.parquet(path).where(pcol.isin(touched))``: bucket dirs
-    are int-valued by _bucket_expr and the caller drops the bucket
-    column, so partition-type inference cannot differ."""
-    from pyspark.sql.types import IntegerType
-
-    norm = path.rstrip("/")
-    paths = [os.path.join(norm, f"{pcol}={int(v)}") for v in touched]
-    paths = [p for p in paths if os.path.isdir(p)]
-    if not paths:
-        return (table_reader(spark, norm, {pcol: IntegerType()})
-                .parquet(norm).where(F.col(pcol).isin(list(touched))))
-    return (table_reader(spark, paths[0], {pcol: IntegerType()})
-            .option("basePath", norm).parquet(*paths))
-
-
 def _escape_part(v) -> str:
     """Hive partition directory value for simple values; raises on
     values that hive-escapes (use bucket mode for arbitrary keys)."""
@@ -654,8 +660,6 @@ def _escape_part(v) -> str:
     return s
 
 
-
-
 def _publish_partitions(merged: DataFrame, path: str, pcol: str,
                         touched: list) -> None:
     """Stage ONLY the touched partitions and swap their directories in
@@ -666,15 +670,7 @@ def _publish_partitions(merged: DataFrame, path: str, pcol: str,
     expected = {f"{pcol}={_escape_part(v)}" for v in touched}
 
     def write(staging: str) -> None:
-        # one shuffle keyed on the partition col bounds the staged
-        # write to ~one file per touched partition (vs tasks x touched
-        # tiny files -- the per-file overhead measured on the BM25
-        # store); width = min(touched, defaultParallelism) so the
-        # per-dir file creations run in parallel (_keyed_write_width)
-        (merged.repartition(_keyed_write_width(merged, len(touched)),
-                            F.col(pcol))
-         .write.mode("errorifexists").partitionBy(pcol)
-         .parquet(staging))
+        write_keyed(merged, staging, pcol, len(touched), "errorifexists")
         stray = {d for d in os.listdir(staging)
                  if d.startswith(f"{pcol}=")} - expected
         if stray:
@@ -688,15 +684,12 @@ def _publish_partitions(merged: DataFrame, path: str, pcol: str,
                  owner="publish_partitions")
 
 
-def cow_publish(merged: DataFrame, path: str, *,
-                partition_by: list[str] | None = None) -> None:
+def cow_publish(merged: DataFrame, path: str) -> None:
     """Publish ``merged`` as the new content of the parquet table at
     ``path``: a durable staging write, then guarded_swap's
     whole-directory swap (shared by merge_into_parquet,
     maintain_rollup_stream, compact_parquet, bloom compaction and the
     MoR compactions). A failed write or swap leaves the table as it
     was."""
-    w = merged.write.mode("errorifexists")
-    if partition_by:
-        w = w.partitionBy(*partition_by)
-    guarded_swap(path, w.parquet, owner="cow_publish")
+    guarded_swap(path, merged.write.mode("errorifexists").parquet,
+                 owner="cow_publish")

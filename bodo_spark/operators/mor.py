@@ -15,13 +15,20 @@ directories; the reference gets the equivalent from Iceberg
 Layout under ``path``:
     base/                   the compacted table (payload + seq column;
                             hive-partitioned by a key-hash bucket when
-                            initialized with ``n_buckets``)
-    delta/d-<n>-*.parquet   one directory-free segment per batch,
-                            rows = (keys, payload, seq, _op 'U'|'D');
-                            ``<n>`` is a GLOBAL monotone segment number
+                            initialized with ``n_buckets``, one file
+                            per bucket directory: merge.write_keyed)
+    delta/d-<nnnnnn>-<uuid8>/
+                            one segment directory per batch: its
+                            parquet parts, rows = (keys, payload, _seq,
+                            _op 'U'|'D'), plus on a bucketed table the
+                            optional ``_touched.json`` sidecar (the
+                            batch's bucket set); ``<nnnnnn>`` is a
+                            GLOBAL monotone segment number
     meta.json               {n_buckets, bucket_col, base_seg,
-                            archived_bases} -- base_seg = how many
-                            segments the current base has folded in
+                            archived_bases, seq_col, evolved} --
+                            base_seg = how many segments the current
+                            base has folded in; evolved = the columns
+                            added by schema evolution, with their types
     archive/                (retain_history compactions only) hardlink
                             snapshots ``base-<g>`` of superseded bases
                             plus the consumed delta segments -- the
@@ -68,6 +75,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..rowframe import data_files, table_reader, table_schema
+from .merge import keyed_parts, read_keyed
 from .similarity import sql_ident
 
 __all__ = ["mor_init", "mor_apply", "mor_read", "mor_lookup",
@@ -184,46 +192,21 @@ def _tree_bytes(*roots: str) -> int:
     return total
 
 
-def _part_cols(meta: dict) -> dict | None:
-    """The base's declared hive partition column: the int key-hash
-    bucket of a bucketed table, none for a plain one."""
-    from pyspark.sql.types import IntegerType
-    if meta["n_buckets"] is None:
-        return None
-    return {meta["bucket_col"]: IntegerType()}
+def _bucket_col(meta: dict) -> str | None:
+    """The base's hive partition column: the key-hash bucket of a
+    bucketed table, none for a plain one."""
+    return meta["bucket_col"] if meta["n_buckets"] is not None else None
 
 
-def _read_base(spark, base_path: str, meta: dict,
-               touched: list | None = None) -> DataFrame:
-    """Base reader with the footer-derived explicit schema
-    (rowframe.table_reader: no inference job). ``touched`` (bucketed
-    tables only): read ONLY those bucket directories as direct paths
-    under basePath -- listing cost O(touched) instead of
-    O(n_buckets), same rows as a partition-pruned full read
-    (compaction's touched-slice path)."""
-    reader = table_reader(spark, base_path, _part_cols(meta))
-    if touched is not None and meta["n_buckets"] is not None:
-        paths = [os.path.join(base_path,
-                              f"{meta['bucket_col']}={int(t)}")
-                 for t in touched]
-        paths = [p for p in paths if os.path.isdir(p)]
-        if paths:
-            return reader.option("basePath", base_path).parquet(*paths)
-        # nothing staged under the touched values yet: empty slice
-        return (reader.parquet(base_path)
-                .where(F.lit(False)))
-    return reader.parquet(base_path)
-
-
-def _base_fields(spark, path: str, meta: dict) -> set[str]:
-    """Column names of the MoR base -- the footer schema without a
-    reader construction (listing + schema job) per ``mor_apply``
-    schema guard, else the inference reader's."""
+def _base_schema(spark, path: str, meta: dict):
+    """Schema of the MoR base -- the footer schema without a reader
+    construction (listing + schema job) per ``mor_apply`` schema guard
+    or lookup, else the inference reader's."""
     base_path = os.path.join(path, "base")
-    sch = table_schema(base_path, _part_cols(meta))
+    sch = table_schema(base_path, keyed_parts(_bucket_col(meta)))
     if sch is None:
-        sch = _read_base(spark, base_path, meta).schema
-    return set(sch.fieldNames())
+        sch = read_keyed(spark, base_path, _bucket_col(meta), None).schema
+    return sch
 
 
 def _read_deltas(spark, segs: list[str]) -> DataFrame:
@@ -289,7 +272,8 @@ def mor_apply(changes: DataFrame, path: str, *, key_cols: list[str],
     from .merge import publish_lock
     with publish_lock(path, owner="mor_apply"):
         meta = _read_meta(path)
-        base_cols = _base_fields(changes.sparkSession, path, meta)
+        base_cols = set(_base_schema(changes.sparkSession, path,
+                                     meta).fieldNames())
         evolved = dict(meta.get("evolved", {}))
         known = base_cols | set(evolved)
         batch = [c for c in changes.columns
@@ -573,7 +557,7 @@ def mor_read(spark, path: str, *, key_cols: list[str],
                 f"archive is missing segments for [{g}, {n}) -- a "
                 "compaction in that range ran without "
                 "retain_history=True")
-    base = _read_base(spark, base_path, meta)
+    base = read_keyed(spark, base_path, _bucket_col(meta), None)
     if meta["n_buckets"] is not None:
         base = base.drop(meta["bucket_col"])
     payload = [c for c in base.columns
@@ -618,22 +602,22 @@ def mor_lookup(spark, path: str, keys: list, *, key_cols: list[str],
     if any(v is None for r in rows for v in r):
         raise ValueError("NULL lookup keys are not supported -- use "
                          "mor_read and filter with eqNullSafe")
-    bcol, nb = meta["bucket_col"], meta["n_buckets"]
-    base = _read_base(spark, os.path.join(path, "base"), meta)
+    bcol, nb = _bucket_col(meta), meta["n_buckets"]
+    buckets = None
     if nb is not None and rows:
         from pyspark.sql import types as _T
 
         from ..rowframe import local_df
         from .merge import _bucket_expr
+        sch = _base_schema(spark, path, meta)
         kdf = local_df(spark, rows,
-                       _T.StructType([base.schema[c] for c in key_cols]))
+                       _T.StructType([sch[c] for c in key_cols]))
         # no distinct(): a Project over the local key relation is folded
         # and collected on the driver with zero Spark jobs, an Aggregate
         # on top forces two; the set dedupes
-        buckets = sorted({r[0] for r in kdf.select(
-            _bucket_expr(list(key_cols), nb).alias("_b")).collect()})
-        base = base.where(f"{sql_ident(bcol)} IN "
-                          f"({', '.join(map(str, buckets))})")
+        buckets = {r[0] for r in kdf.select(
+            _bucket_expr(list(key_cols), nb).alias("_b")).collect()}
+    base = read_keyed(spark, os.path.join(path, "base"), bcol, buckets)
     if nb is not None:
         base = base.drop(bcol)
     payload = [c for c in base.columns
@@ -701,7 +685,8 @@ def mor_changes(spark, path: str, *, key_cols: list[str],
             "retain_history=True -- the incremental range is gone")
     segs = [pool[i] for i in want]
     if not segs:
-        base = _read_base(spark, os.path.join(path, "base"), meta)
+        base = read_keyed(spark, os.path.join(path, "base"),
+                          _bucket_col(meta), None)
         if meta["n_buckets"] is not None:
             base = base.drop(meta["bucket_col"])
         payload = [c for c in base.columns
@@ -804,9 +789,12 @@ def mor_compact(spark, path: str, *, key_cols: list[str],
     Cost shape: on a bucketed table (mor_init ``n_buckets``) only the
     partitions whose buckets the deltas touch are reconciled and
     swapped (merge._publish_partitions) -- compaction work is bound by
-    the CHANGE mass; untouched bucket directories are never opened. A
-    plain table pays one full reconcile + COW publish (guarded swap,
-    cow_publish).
+    the CHANGE mass; untouched bucket directories are never opened.
+    Every other compaction -- a plain table, a re-layout, a
+    schema-evolution fold, or more than half the buckets touched -- is
+    ONE full rewrite: mor_read's reconcile published in the target
+    layout (cow_publish, or merge.write_bucket_partitioned under
+    guarded_swap).
 
     ``retain_history``: snapshot the superseded base into ``archive/``
     (hardlinks -- metadata cost only) and move the consumed segments
@@ -834,7 +822,8 @@ def mor_compact(spark, path: str, *, key_cols: list[str],
     its LARGEST at compaction time, exactly when an unconditional
     broadcast would be most dangerous)."""
     from .merge import (ConcurrentWriteError, _bucket_expr,
-                        _publish_partitions, cow_publish, publish_lock)
+                        _publish_partitions, cow_publish, guarded_swap,
+                        publish_lock, write_bucket_partitioned)
     from .store_swap import snapshot_hardlink
     with publish_lock(path, owner="mor_compact"):
         meta = _read_meta(path)
@@ -857,39 +846,14 @@ def mor_compact(spark, path: str, *, key_cols: list[str],
                                 f"base-{meta['base_seg']:06d}")
             if not os.path.isdir(snap):
                 snapshot_hardlink(base_path, snap)
-        nb = meta["n_buckets"]
-        if relayout:
-            # partition evolution (the Iceberg rewrite-with-new-spec
-            # economics): fold the log AND re-layout the base in one
-            # full rewrite -- re-bucket to a new count when the table
-            # outgrew the one chosen at init, bucket a plain table, or
-            # flatten a bucketed one. Always a bulk rewrite by nature.
-            nbt = n_buckets
-            bcol = meta["bucket_col"]
-            cur = mor_read(spark, path, key_cols=key_cols,
-                           seq_col=seq_col, pruned=pruned)
-            if nbt is None:
-                cow_publish(cur, base_path)
-            else:
-                if bcol in cur.columns:
-                    raise ValueError(
-                        f"payload column {bcol!r} collides with the "
-                        "bucket bookkeeping column -- rename it "
-                        "before re-bucketing")
-                from .merge import _keyed_write_width
-                merged = (cur.withColumn(
-                    bcol, _bucket_expr(list(key_cols), int(nbt)))
-                    .repartition(_keyed_write_width(cur, int(nbt)),
-                                 F.col(bcol)))
-                cow_publish(merged, base_path, partition_by=[bcol])
-            meta["n_buckets"] = None if nbt is None else int(nbt)
-        elif nb is not None:
+        nb, bcol = meta["n_buckets"], meta["bucket_col"]
+        touched = None
+        if nb is not None and not relayout:
             deltas = _read_deltas(spark, consumed)
-            bcols = _base_fields(spark, path, meta)
+            bcols = set(_base_schema(spark, path, meta).fieldNames())
             evolving = any(f.name not in bcols
                            for f in deltas.schema.fields
                            if f.name not in ("_seq", _OP))
-            bcol = meta["bucket_col"]
             # sidecar fast path (written by mor_apply during the
             # segment write): the union of the consumed segments'
             # touched sets IS the delta log's bucket set -- no
@@ -901,51 +865,46 @@ def mor_compact(spark, path: str, *, key_cols: list[str],
                     r[0] for r in deltas
                     .select(_bucket_expr(list(key_cols), nb).alias("_b"))
                     .distinct().collect())
+            # evolving: a touched-dirs-only publish would leave the new
+            # columns present in some bucket dirs and absent in others
+            # (partitioned tables keep ONE schema), so the evolution
+            # fold rewrites every bucket once. Change mass ~ table: the
+            # per-directory publish would pay a near-full shuffle PLUS
+            # per-dir swap overhead, so one bulk rewrite is cheaper.
             if evolving or len(touched) > nb // 2:
-                # evolving: a touched-dirs-only publish would leave
-                # the new columns present in some bucket dirs and
-                # absent in others (partitioned tables keep ONE
-                # schema) -- the evolution fold must rewrite every
-                # bucket once.
-                # change mass ~ table: the per-directory publish would
-                # pay a near-full shuffle PLUS per-dir swap overhead --
-                # one bulk bucketed rewrite (repartition by bucket, the
-                # write_bucket_partitioned discipline, under
-                # cow_publish's guarded swap) is strictly better and
-                # keeps the layout
-                base_all = _read_base(spark, base_path,
-                                       meta).drop(bcol)
-                payload = [c for c in base_all.columns
-                           if c not in key_cols and c != seq_col]
-                base_all, deltas, payload = _widen_evolved(
-                    base_all, deltas, payload)
-                cur = _reconcile(base_all, deltas, list(key_cols),
-                                 payload, seq_col, pruned=pruned)
-                from .merge import _keyed_write_width
-                merged = (cur.withColumn(
-                    bcol, _bucket_expr(list(key_cols), nb))
-                    .repartition(_keyed_write_width(cur, nb),
-                                 F.col(bcol)))
-                cow_publish(merged, base_path, partition_by=[bcol])
-            else:
-                # direct touched-dir paths: listing O(touched)
-                # instead of O(n_buckets), same rows as the former
-                # isin partition-pruned full read
-                base_slice = _read_base(spark, base_path, meta,
-                                        touched=touched).drop(bcol)
-                payload = [c for c in base_slice.columns
-                           if c not in key_cols and c != seq_col]
-                base_slice, deltas, payload = _widen_evolved(
-                    base_slice, deltas, payload)
-                cur = _reconcile(base_slice, deltas, list(key_cols),
-                                 payload, seq_col, pruned=pruned)
-                merged = cur.withColumn(bcol,
-                                        _bucket_expr(list(key_cols), nb))
-                _publish_partitions(merged, base_path, bcol, touched)
-        else:
+                touched = None
+        if touched is None:
+            # the one full rewrite: a re-layout (the Iceberg
+            # rewrite-with-new-spec economics -- re-bucket to a new
+            # count, bucket a plain table, or flatten a bucketed one),
+            # a schema-evolution fold, most buckets touched, or a plain
+            # table. mor_read's reconcile, published in the target
+            # layout through guarded_swap.
+            target = nb if n_buckets == "keep" else n_buckets
             cur = mor_read(spark, path, key_cols=key_cols,
                            seq_col=seq_col, pruned=pruned)
-            cow_publish(cur, base_path)
+            if target is None:
+                cow_publish(cur, base_path)
+            else:
+                guarded_swap(base_path, lambda staging: (
+                    write_bucket_partitioned(cur, staging, list(key_cols),
+                                             int(target), bucket_col=bcol)),
+                    owner="mor_compact")
+            meta["n_buckets"] = None if target is None else int(target)
+        else:
+            # the touched-bucket fold: only those bucket directories
+            # are read, reconciled and swapped
+            base_slice = read_keyed(spark, base_path, bcol,
+                                    touched).drop(bcol)
+            payload = [c for c in base_slice.columns
+                       if c not in key_cols and c != seq_col]
+            base_slice, deltas, payload = _widen_evolved(
+                base_slice, deltas, payload)
+            cur = _reconcile(base_slice, deltas, list(key_cols),
+                             payload, seq_col, pruned=pruned)
+            merged = cur.withColumn(bcol,
+                                    _bucket_expr(list(key_cols), nb))
+            _publish_partitions(merged, base_path, bcol, touched)
         # belt-and-braces under the lock: a writer that bypassed the
         # lockfile (removed it manually, or raced from another host
         # where O_EXCL is not honored) would have moved base_seg --

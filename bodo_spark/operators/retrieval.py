@@ -200,11 +200,6 @@ def bm25_topk(postings: DataFrame, queries: DataFrame, *,
                     F.col("rn").cast("bigint").alias("rn")))
 
 
-def _term_bucket(n_term_buckets: int):
-    return F.pmod(F.xxhash64("term"),
-                  F.lit(int(n_term_buckets))).cast("int")
-
-
 def bm25_store_index(postings: DataFrame, path: str, *,
                      n_term_buckets: int = 64,
                      mode: str = "errorifexists") -> None:
@@ -217,33 +212,29 @@ def bm25_store_index(postings: DataFrame, path: str, *,
     reads prune to those partition directories -- the
     io_partitioned_roundtrip discipline applied to the retrieval tier
     (PartitionFilters asserted in test_plans). The postings plan is
-    persisted for the duration of the store (it feeds three writes)."""
+    persisted for the duration of the store (it feeds three writes).
+    The bucket is merge._bucket_expr on ``term`` and both tables go
+    through merge.write_keyed, one file per shard, so
+    bm25_stored_append's term_stats merge buckets like the store."""
     if n_term_buckets < 1:
         raise ValueError(f"n_term_buckets must be >= 1, "
                          f"got {n_term_buckets}")
     from pyspark import StorageLevel
-    spark = postings.sparkSession
-    tb = _term_bucket(n_term_buckets)
+
+    from .merge import _bucket_expr, write_keyed
+    nb = int(n_term_buckets)
     postings = postings.persist(StorageLevel.MEMORY_AND_DISK)
     try:
-        # repartition BY the bucket before the dynamic-partition write:
-        # a cached frame pins its partitioning (AQE cannot coalesce an
-        # InMemoryTableScan), so without this every task writes a file
-        # into every bucket directory -- tasks x buckets tiny parquet
-        # files whose per-file writer overhead dominated the store
-        # (measured 43.5 s vs 8.3 s for the same 10x write; SCALE.md
-        # r12). One shuffle keyed on the bucket -> ~one file per shard.
-        from .merge import _keyed_write_width
-        width = _keyed_write_width(postings, n_term_buckets)
-        (postings.withColumn("tbucket", tb)
-         .repartition(width, F.col("tbucket"))
-         .write.mode(mode)
-         .partitionBy("tbucket").parquet(f"{path}/postings"))
+        # the keyed repartition matters most here: a cached frame pins
+        # its partitioning (AQE cannot coalesce an InMemoryTableScan),
+        # and tasks x buckets tiny files made the store 43.5 s vs 8.3 s
+        # for the same 10x write (SCALE.md r12)
+        write_keyed(postings.withColumn("tbucket",
+                                        _bucket_expr(["term"], nb)),
+                    f"{path}/postings", "tbucket", nb, mode=mode)
         ts, cs = bm25_corpus_stats(postings)
-        (ts.withColumn("tbucket", tb)
-         .repartition(width, F.col("tbucket"))
-         .write.mode(mode)
-         .partitionBy("tbucket").parquet(f"{path}/term_stats"))
+        write_keyed(ts.withColumn("tbucket", _bucket_expr(["term"], nb)),
+                    f"{path}/term_stats", "tbucket", nb, mode=mode)
         # corpus_stats is one aggregated row and meta a pure driver
         # value -- bounded artifacts, written driver-locally (no write
         # job / commit protocol each; see rowframe.write_artifact_rows)
@@ -251,7 +242,7 @@ def bm25_store_index(postings: DataFrame, path: str, *,
         write_artifact_rows(f"{path}/corpus_stats",
                             [tuple(r) for r in cs.collect()],
                             cs.schema, mode=mode)
-        write_artifact_rows(f"{path}/meta", [(int(n_term_buckets),)],
+        write_artifact_rows(f"{path}/meta", [(nb,)],
                             "n_term_buckets int", mode=mode)
     finally:
         try:
@@ -296,7 +287,7 @@ def bm25_stored_append(new_docs: DataFrame, path: str, *,
     from pyspark import StorageLevel
 
     from ..rowframe import read_artifact_rows, write_artifact_rows
-    from .merge import _keyed_write_width, merge_into_partitioned
+    from .merge import _bucket_expr, merge_into_partitioned, write_keyed
     from .store_swap import guarded_store_swap, snapshot_hardlink
     spark = new_docs.sparkSession
     norm = path.rstrip("/")
@@ -307,10 +298,10 @@ def bm25_stored_append(new_docs: DataFrame, path: str, *,
                  .persist(StorageLevel.MEMORY_AND_DISK))
         try:
             snapshot_hardlink(norm, staging)
-            (batch.withColumn("tbucket", _term_bucket(nb))
-             .repartition(_keyed_write_width(batch, nb), F.col("tbucket"))
-             .write.mode("append").partitionBy("tbucket")
-             .parquet(f"{staging}/postings"))
+            write_keyed(batch.withColumn("tbucket",
+                                         _bucket_expr(["term"], nb)),
+                        f"{staging}/postings", "tbucket", nb,
+                        mode="append")
             bts, bcs = bm25_corpus_stats(batch)
             merge_into_partitioned(
                 spark, f"{staging}/term_stats", bts, ["term"],
@@ -349,23 +340,17 @@ def bm25_stored_topk(spark, path: str, queries: DataFrame, *,
     verbatim). This is the read side of the "write partitioned by
     term" claim: per query batch, I/O is bound by the touched shards,
     not the corpus."""
-    from pyspark.sql.types import IntegerType
-
-    from ..rowframe import artifact_df, read_artifact_rows, table_reader
+    from ..rowframe import artifact_df, read_artifact_rows
+    from .merge import _bucket_expr, read_keyed
     nb = int(read_artifact_rows(f"{path}/meta")[0][0]["n_term_buckets"])
     buckets = [r[0] for r in
                (queries.select(F.explode(tokenize_ws(q_text_col))
                                .alias("term"))
-                .select(_term_bucket(nb).alias("tb"))
+                .select(_bucket_expr(["term"], nb).alias("tb"))
                 .distinct().collect())]
-    # explicit footer-derived schemas: no inference job per serve; the
-    # bucket IN lists stay static PartitionFilters prunes
-    def shards(name):
-        root = f"{path}/{name}"
-        return (table_reader(spark, root, {"tbucket": IntegerType()})
-                .parquet(root)
-                .where(F.col("tbucket").isin(buckets)).drop("tbucket"))
-    postings, ts = shards("postings"), shards("term_stats")
+    postings, ts = (read_keyed(spark, f"{path}/{name}", "tbucket",
+                               buckets).drop("tbucket")
+                    for name in ("postings", "term_stats"))
     cs = artifact_df(spark, f"{path}/corpus_stats")
     return bm25_topk(postings, queries, q_id_col=q_id_col,
                      q_text_col=q_text_col, k=k, k1=k1, b=b,

@@ -59,14 +59,13 @@ def apply_cdc_stream(changes: DataFrame, path: str, *,
     that grows with the TABLE at 100 TB). Values are identical in both
     modes (the stream_cdc_apply_pruned gate shares the plain oracle)."""
     from pyspark.sql import Window as W
-    from pyspark.sql.types import IntegerType
 
-    from ..operators.merge import merge_into_parquet, merge_into_partitioned
+    from ..operators.merge import (keyed_parts, merge_into_parquet,
+                                   merge_into_partitioned)
     from ..rowframe import table_schema
 
     spark = changes.sparkSession
-    parts = ({bucket_col: IntegerType()} if n_buckets is not None
-             else None)
+    parts = keyed_parts(bucket_col if n_buckets is not None else None)
 
     def apply_batch(bdf: DataFrame, batch_id: int) -> None:
         if not bdf.take(1):

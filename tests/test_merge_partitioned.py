@@ -317,3 +317,127 @@ def test_bucket_write_one_file_per_bucket_dir(spark, tmp_path):
                  if f.endswith(".parquet")]
         assert len(files) == 1, (d, files)
     assert spark.read.parquet(path).count() == 500
+
+
+def _written(root, before=frozenset()):
+    """``{partition dir: [parquet files]}`` of the hive directories
+    under ``root``, counting only files not in ``before``: the
+    directories a write created or added to."""
+    out = {}
+    for f in glob.glob(os.path.join(root, "*=*", "*.parquet")):
+        if f not in before:
+            out.setdefault(os.path.basename(os.path.dirname(f)),
+                           []).append(f)
+    return out
+
+
+def _parquet(root):
+    return frozenset(glob.glob(os.path.join(root, "**", "*.parquet"),
+                               recursive=True))
+
+
+def _assert_keyed(spark, root, keys, n, before=frozenset()):
+    """The keyed-layout contract: every directory written since
+    ``before`` gained exactly ONE parquet file, and every row of it
+    hashes to the directory's value, ``CAST(pmod(xxhash64(keys), n)
+    AS INT)`` recomputed in SQL."""
+    written = _written(root, before)
+    assert written, root
+    for d, files in written.items():
+        assert len(files) == 1, (d, files)
+        got = {r[0] for r in spark.read.parquet(files[0]).selectExpr(
+            f"CAST(pmod(xxhash64({keys}), {n}) AS INT)").distinct()
+            .collect()}
+        assert got == {int(d.split("=", 1)[1])}, (d, got)
+
+
+def test_keyed_layout_bucket_tables(spark, tmp_path):
+    """write_bucket_partitioned, the merge_into_partitioned publish and
+    both mor_compact publishes (touched buckets, whole base) write one
+    file per bucket directory, holding exactly that bucket's keys."""
+    from bodo_spark.operators import mor as M
+    t = _tbl(spark)
+    path = str(tmp_path / "cow")
+    write_bucket_partitioned(t, path, ["k"], 8)
+    _assert_keyed(spark, path, "k", 8)
+    before = _parquet(path)
+    merge_into_partitioned(
+        spark, path, spark.createDataFrame(
+            [(3, 1.0), (17, 2.0), (500, 3.0)], "k long, add double"),
+        ["k"], n_buckets=8,
+        when_matched_update={"bal": F.col("bal") + F.col("src_add")},
+        when_not_matched_insert={"k": F.col("src_k"), "seg": F.lit("N"),
+                                 "bal": F.col("src_add")})
+    _assert_keyed(spark, path, "k", 8, before)
+
+    mpath = str(tmp_path / "mor")
+    M.mor_init(spark.createDataFrame(
+        [(k, f"s{k}", 0) for k in range(256)],
+        "k long, seg string, _cdc_seq long"), mpath,
+        key_cols=["k"], n_buckets=16)
+    base = os.path.join(mpath, "base")
+    _assert_keyed(spark, base, "k", 16)
+    for keys, seq, whole in (([5, 6], 1, False),
+                             (list(range(0, 256, 3)), 2, True)):
+        M.mor_apply(spark.createDataFrame(
+            [(k, "u", "U", seq) for k in keys],
+            "k long, seg string, op string, seq long"), mpath,
+            key_cols=["k"])
+        before = _parquet(base)
+        M.mor_compact(spark, mpath, key_cols=["k"])
+        written = _written(base, before)
+        assert (len(written) == 16) == whole, sorted(written)
+        _assert_keyed(spark, base, "k", 16, before)
+
+
+def test_keyed_layout_bm25_store(spark, tmp_path):
+    """bm25_store_index and bm25_stored_append write one file per term
+    shard, and every stored row's ``tbucket`` is the merge bucket of its
+    term (merge._bucket_expr), the equality the append's term_stats
+    merge depends on."""
+    from bodo_spark.operators import retrieval as R
+    from bodo_spark.operators.merge import _bucket_expr
+    docs = spark.createDataFrame(
+        [(i, " ".join(f"w{(i * j) % 41}" for j in range(1, 7)))
+         for i in range(60)], "doc_id long, text string")
+    path = str(tmp_path / "bm25")
+    R.bm25_store_index(R.bm25_index(docs), path, n_term_buckets=8)
+    tables = [os.path.join(path, t) for t in ("postings", "term_stats")]
+    for root in tables:
+        _assert_keyed(spark, root, "term", 8)
+    before = {root: _parquet(root) for root in tables}
+    R.bm25_stored_append(spark.createDataFrame(
+        [(100, "w1 w2 zz"), (101, "w3 w3 yy")],
+        "doc_id long, text string"), path)
+    for root in tables:
+        _assert_keyed(spark, root, "term", 8, before[root])
+        assert spark.read.parquet(root).where(
+            F.col("tbucket") != _bucket_expr(["term"], 8)).count() == 0
+
+
+def test_keyed_layout_ivf_store(spark, tmp_path):
+    """ivf.store and ivf.stored_append (SQ codec) write one file per
+    cell directory, and each stored row sits under the cell a one-shot
+    build routes it to."""
+    from bodo_spark.operators import sq as Q
+    from bodo_spark.queries._util import tbl
+
+    from .conftest import SF_DIR
+    emb = tbl(spark, SF_DIR, "embeddings").select("vec_id", "embedding")
+    los, his = Q.sq_train(emb)
+    first, rest = emb.where("vec_id % 5 <> 0"), emb.where("vec_id % 5 = 0")
+    path = str(tmp_path / "sq")
+    Q.sq_store_index(Q.ivf_sq_index(first, los, his, n_cells=8,
+                                    seed_vectors=emb), path, los, his,
+                     n_cells=8, seed_vectors=emb)
+    index = os.path.join(path, "index")
+    assert all(len(f) == 1 for f in _written(index).values())
+    before = _parquet(index)
+    Q.sq_stored_append(rest, path)
+    written = _written(index, before)
+    assert written and all(len(f) == 1 for f in written.values()), written
+    one_shot = Q.ivf_sq_index(emb, los, his, n_cells=8, seed_vectors=emb)
+    assert (sorted(map(tuple, spark.read.parquet(index)
+                       .select("vec_id", "cell").collect()))
+            == sorted(map(tuple, one_shot.select("vec_id", "cell")
+                          .collect())))

@@ -268,27 +268,43 @@ def test_sq_scored_pass_plan(spark):
         assert keys.split(",")[0].strip().startswith("q_id"), shuffles
 
 
-def test_pruned_merge_target_scan_partition_filters(spark, tmp_path):
-    """File-pruned MERGE plan contract: the target-table scan carries
-    the touched-bucket IN list as PartitionFilters (static partition
-    pruning -- untouched directories are skipped at planning time, the
-    property that bounds per-batch cost by the touched size)."""
-    from bodo_spark.operators.merge import (_bucket_expr,
-                                            write_bucket_partitioned)
+def test_pruned_merge_target_scan_partition_filters(spark, tmp_path,
+                                                    monkeypatch):
+    """File-pruned MERGE plan contract, on the target slice the merge
+    itself reads (merge.read_keyed, spied): the scan carries the
+    touched-bucket IN list as PartitionFilters and opens only files
+    under the touched bucket directories -- untouched directories are
+    never listed or read, the property that bounds per-batch cost by
+    the touched size."""
+    import os
+
+    from bodo_spark.operators import merge as MG
     t = spark.createDataFrame(
         [(i, float(i)) for i in range(100)], "k long, v double")
     path = str(tmp_path / "tbl")
-    write_bucket_partitioned(t, path, ["k"], 16)
-    src = spark.createDataFrame([(3, 9.0)], "k long, v double")
-    touched = [r[0] for r in
-               src.withColumn("b", _bucket_expr(["k"], 16))
-               .select("b").distinct().collect()]
-    pruned = spark.read.parquet(path).where(
-        F.col("mbucket").isin(touched))
-    p = plan_str(pruned)
+    MG.write_bucket_partitioned(t, path, ["k"], 16)
+    src = spark.createDataFrame([(3, 9.0), (40, 1.0)], "k long, v double")
+    slices = []
+
+    def spy(*args, **kwargs):
+        slices.append(real(*args, **kwargs))
+        return slices[-1]
+    real = MG.read_keyed
+    monkeypatch.setattr(MG, "read_keyed", spy)
+    touched = MG.merge_into_partitioned(
+        spark, path, src, ["k"], n_buckets=16,
+        when_matched_update={"v": F.col("src_v")})
+    assert len(slices) == 1 and 1 <= len(touched) <= 2
+    # plan the slice before the publish swapped its directories
+    p = plan_str(slices[0])
     assert "PartitionFilters" in p, p
     seg = p.split("PartitionFilters")[1][:200]
     assert "mbucket" in seg and str(touched[0]) in seg, seg
+    dirs = {f"mbucket={b}" for b in touched}
+    files = slices[0].inputFiles()
+    assert files
+    for f in files:
+        assert os.path.basename(os.path.dirname(f)) in dirs, (f, dirs)
 
 
 def test_bm25_stored_serving_partition_prunes(spark, tmp_path):
@@ -793,4 +809,55 @@ def test_mor_compact_job_budget(spark, tmp_path):
     assert M._delta_dirs(path) == []
     assert sorted(map(tuple, M.mor_read(spark, path, key_cols=["k"])
                       .collect())) == _bucketed_mor_state()
+    assert jobs <= 6, jobs
+
+
+def test_merge_into_partitioned_job_budget(spark, tmp_path):
+    """Job-count contract for the bucket-mode file-pruned MERGE: the
+    touched-bucket collect, the target slice read from the touched
+    directories and the keyed partition publish run 7 jobs, with a few
+    or with every bucket touched."""
+    from bodo_spark.operators.merge import (merge_into_partitioned,
+                                            write_bucket_partitioned)
+    t = spark.createDataFrame([(i, float(i)) for i in range(256)],
+                              "k long, v double")
+    for keys in ([3, 5, 9], list(range(0, 256, 3))):
+        path = str(tmp_path / f"t{len(keys)}")
+        write_bucket_partitioned(t, path, ["k"], 16)
+        src = spark.createDataFrame([(k, -1.0) for k in keys],
+                                    "k long, v double")
+        touched, jobs = spark_jobs(spark, lambda: merge_into_partitioned(
+            spark, path, src, ["k"], n_buckets=16,
+            when_matched_update={"v": F.col("src_v")}))
+        assert len(touched) == (3 if len(keys) == 3 else 16), touched
+        got = dict(map(tuple, spark.read.parquet(path)
+                       .select("k", "v").collect()))
+        assert got == {i: (-1.0 if i in keys else float(i))
+                       for i in range(256)}
+        assert jobs <= 7, (len(keys), jobs)
+
+
+def test_mor_compact_whole_base_job_budget(spark, tmp_path):
+    """Job-count contract for the whole-base compaction -- more than
+    half the buckets touched, the branch a 16-bucket table with 86
+    updated keys takes: mor_read's reconcile and one keyed publish of
+    the whole base run 6 jobs."""
+    from bodo_spark.operators import mor as M
+    path = str(tmp_path / "t")
+    M.mor_init(spark.createDataFrame(
+        [(k, f"s{k}", 0) for k in range(256)],
+        "k long, seg string, _cdc_seq long"), path,
+        key_cols=["k"], n_buckets=16)
+    upd = list(range(0, 256, 3))
+    M.mor_apply(spark.createDataFrame(
+        [(k, "u", "U", 1) for k in upd],
+        "k long, seg string, op string, seq long"), path, key_cols=["k"])
+    assert len(M._touched_from_sidecars(M._delta_dirs(path), 16)) > 8
+    _, jobs = spark_jobs(spark, lambda: M.mor_compact(
+        spark, path, key_cols=["k"]))
+    assert M._delta_dirs(path) == []
+    assert sorted(map(tuple, M.mor_read(spark, path, key_cols=["k"])
+                      .collect())) == sorted(
+        (k, "u", 1) if k % 3 == 0 else (k, f"s{k}", 0)
+        for k in range(256))
     assert jobs <= 6, jobs
